@@ -39,7 +39,8 @@ from streamforge_spark.operators.sessions import ordered_fold, session_analyzer
 from streamforge_spark.streaming.dedup import streaming_dedup, streaming_merger
 from streamforge_spark.streaming.materialize import streaming_materializer
 from streamforge_spark.streaming.sinks import (
-    foreach_batch_upsert, kafka_compacted_output, parquet_sink, split_sinks,
+    BATCH_COL, check_batch_output, foreach_batch_upsert,
+    kafka_compacted_output, parquet_sink, split_sinks, write_batch,
 )
 from streamforge_spark.streaming.sources import file_stream
 
@@ -185,7 +186,16 @@ def mongo_to_kafka(spark: SparkSession, cfg: ScopedConfig):
     hash-suppress merger (excl. updatedAt/modifiedAt) -> schema v1
     (_id required) -> trace/processed stamps -> compacted (key, value)
     output with DELETE tombstones. Flow-disruption/latency monitors
-    attach via streaming/flow_disruption.py + observe()."""
+    attach via streaming/flow_disruption.py + observe().
+
+    The dedup and merger state lives in ONE stateful query (checkpoint
+    ``egress``): its ``foreachBatch`` persists the merged micro-batch,
+    splits it with the schema enforcer and writes both sides —
+    ``out`` and ``dlq_schema`` — through ``write_batch`` (per-batch-id
+    overwrite, exactly-once under replay), the way the reference's DLQ
+    outputs are side outputs of its one operator chain. ``dlq_parse``
+    (and ``dlq_migrate``) stay stateless parquet-sink queries."""
+    out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
     env, parse_dlq = _envelopes(spark, cfg)
     env = filter_interceptor(env, F.col("operation") != "unknown")
     # optional config-driven payload upcast chain — runs BEFORE the
@@ -201,15 +211,27 @@ def mongo_to_kafka(spark: SparkSession, cfg: ScopedConfig):
                            ttl="24 hours",
                            excluded_fields=("updatedAt", "modifiedAt"),
                            assign_watermark=False)
-    ok, schema_dlq = schema_enforcer(
-        env, "payload_json",
-        [SchemaVersion("v1", required={"_id": "any"})],
-        source="MongoToKafka")
-    ok = stamp_processor(ok, deterministic_from=F.col("primary_key"))
-    out = kafka_compacted_output(ok.drop("metadata"), key_col="primary_key")
-    sinks = [_sink(out, cfg, "out"),
-             _sink(parse_dlq, cfg, "dlq_parse"),
-             _sink(schema_dlq, cfg, "dlq_schema")]
+
+    def fan_out(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
+        try:
+            ok, schema_dlq = schema_enforcer(
+                batch, "payload_json",
+                [SchemaVersion("v1", required={"_id": "any"})],
+                source="MongoToKafka")
+            ok = stamp_processor(ok, deterministic_from=F.col("primary_key"))
+            write_batch(kafka_compacted_output(ok.drop("metadata"),
+                                               key_col="primary_key"),
+                        f"{out}/out", batch_id)
+            write_batch(schema_dlq, f"{out}/dlq_schema", batch_id)
+        finally:
+            batch.unpersist()
+
+    check_batch_output(spark, (f"{out}/out", f"{out}/dlq_schema"),
+                       f"{ckpt}/egress")
+    chain = (env.writeStream.outputMode("append").foreachBatch(fan_out)
+             .option("checkpointLocation", f"{ckpt}/egress").start())
+    sinks = [chain, _sink(parse_dlq, cfg, "dlq_parse")]
     if mig_dlq is not None:
         sinks.append(_sink(mig_dlq, cfg, "dlq_migrate"))
     return sinks
@@ -262,20 +284,25 @@ def event_router(spark: SparkSession, cfg: ScopedConfig):
     EventRouterJob.java:56-82): orders/payments -> ES-shaped sinks,
     everything else -> the main Mongo-shaped sink. One foreachBatch
     computes the route tag once and writes all three splits
-    (zero-copy fan-out)."""
+    (zero-copy fan-out), each per batch id so a replay never
+    duplicates rows."""
     env, parse_dlq = _envelopes(spark, cfg)
     tagged = routed(env, [("orders", F.col("source") == "orders"),
                           ("payments", F.col("source") == "payments")])
     out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
+    subs = {"orders": "es_orders", "payments": "es_payments",
+            "main": "mongo_main"}
 
-    def write_to(sub: str):
-        return lambda df: df.write.mode("append").parquet(f"{out}/{sub}")
+    def route(batch: DataFrame, batch_id: int) -> None:
+        def write_to(sub: str):
+            return lambda df: write_batch(df, f"{out}/{sub}", batch_id)
 
+        split_sinks(batch, {r: write_to(sub) for r, sub in subs.items()})
+
+    check_batch_output(spark, [f"{out}/{sub}" for sub in subs.values()],
+                       f"{ckpt}/router")
     router = (tagged.writeStream.outputMode("append")
-              .foreachBatch(lambda b, _id: split_sinks(b, {
-                  "orders": write_to("es_orders"),
-                  "payments": write_to("es_payments"),
-                  "main": write_to("mongo_main")}))
+              .foreachBatch(route)
               .option("checkpointLocation", f"{ckpt}/router").start())
     return [router, _sink(parse_dlq, cfg, "dlq_parse")]
 
@@ -1150,8 +1177,8 @@ def dlq_replay(spark: SparkSession, cfg: ScopedConfig):
 
     The DLQ itself is never rewritten: the reference's DLQ is a Kafka
     topic — an immutable log you consume, not a table you edit — and
-    the parquet twin is a streaming-sink-owned dir whose
-    ``_spark_metadata`` manifest batch rewrites would corrupt.
+    the parquet twin is a streaming-sink-owned dir (a ``_spark_metadata``
+    manifest, or per-batch-id dirs) that batch rewrites would corrupt.
     Already-recovered rows are excluded by anti-joining the ledger on
     the raw_event hash, so the pool shrinks logically run over run
     while the log stays intact (still-failing rows simply re-grade —
@@ -1187,7 +1214,9 @@ def dlq_replay(spark: SparkSession, cfg: ScopedConfig):
     pools = []
     for sub in classes:
         try:
-            pools.append(spark.read.parquet(f"{out}/{sub}")
+            # drop the partition column of per-batch-id DLQ dirs
+            # (write_batch) so every class unions on the DlqEvent shape
+            pools.append(spark.read.parquet(f"{out}/{sub}").drop(BATCH_COL)
                          .withColumn("_dlq_src", F.lit(sub)))
         except AnalysisException:
             continue   # class never produced: nothing to do

@@ -17,9 +17,9 @@ docs/recovery/fault-tolerance.md §4). The batch/flush cadence knobs
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -395,6 +395,61 @@ def parquet_sink(df: DataFrame, path: str, checkpoint: str,
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     return writer
+
+
+BATCH_COL = "batch_id"
+
+
+def write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Exactly-once parquet write from inside a ``foreachBatch``:
+    overwrite ``path/batch_id=<id>``, so a replayed batch id rewrites
+    only its own directory and never duplicates rows. Readers see the
+    id as a ``batch_id`` partition column of ``spark.read.parquet(path)``.
+    Start the query behind :func:`check_batch_output`."""
+    df.write.mode("overwrite").parquet(
+        f"{path.rstrip('/')}/{BATCH_COL}={batch_id}")
+
+
+def check_batch_output(spark: SparkSession, paths: Iterable[str],
+                       checkpoint: str) -> None:
+    """Refuse to start a query that writes ``paths`` through
+    :func:`write_batch` over output it does not own, which it would
+    hide or overwrite:
+
+    - any entry but a ``batch_id=<n>`` dir — a parquet file sink's
+      ``_spark_metadata`` (its readers see only the files it lists) or
+      the flat files of an append writer (partition discovery drops
+      them beside ``batch_id=`` dirs);
+    - a ``batch_id=<n>`` dir beyond the last batch the checkpoint has
+      planned (``offsets/``) — output of an older or archived
+      checkpoint, whose ids a restarted numbering would overwrite.
+
+    A planned but uncommitted batch is fine: its replay rewrites it.
+    Such a deployment starts fresh (docs/RECOVERY.md §1)."""
+    from streamforge_spark.streaming.recovery import _hadoop_fs
+    fs, _JPath, log = _hadoop_fs(spark, f"{checkpoint.rstrip('/')}/offsets")
+    planned = [int(st.getPath().getName()) for st in
+               (fs.listStatus(log) if fs.exists(log) else [])
+               if st.getPath().getName().isdigit()]
+    last = max(planned, default=-1)
+    for path in paths:
+        fs, _JPath, root = _hadoop_fs(spark, path)
+        if not fs.exists(root):
+            continue
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            bid = name.removeprefix(f"{BATCH_COL}=")
+            if not (st.isDirectory() and bid != name and bid.isdigit()):
+                raise RuntimeError(
+                    f"{path} holds {name!r}, which write_batch did not "
+                    f"write; start from an empty output dir and a new "
+                    f"checkpoint (docs/RECOVERY.md §1)")
+            if int(bid) > last:
+                raise RuntimeError(
+                    f"{path}/{name} is beyond the last batch ({last}) of "
+                    f"checkpoint {checkpoint}; a restarted batch numbering "
+                    f"would overwrite it — start from an empty output dir "
+                    f"(docs/RECOVERY.md §1)")
 
 
 def split_sinks(batch_df: DataFrame,

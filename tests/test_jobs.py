@@ -65,6 +65,100 @@ def test_mongo_to_kafka_job(spark, tmp_path):
     assert [r.error_type for r in schema_dlq] == ["SCHEMA_VIOLATION"]
 
 
+def trim_commits(ckpt, first: int | None = None) -> int:
+    """Delete the entries (and their .crc twins) of a checkpoint's
+    commit log from batch ``first`` on — by default the newest — so the
+    next run replays from that batch id; returns ``first``."""
+    log = pathlib.Path(ckpt) / "commits"
+    if first is None:
+        first = max(int(p.name) for p in log.iterdir() if p.name.isdigit())
+    for p in list(log.iterdir()):
+        base = p.name.removeprefix(".").removesuffix(".crc")
+        if base.isdigit() and int(base) >= first:
+            p.unlink()
+    return first
+
+
+def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
+        spark, tmp_path, monkeypatch):
+    """Restart on the same checkpoint, then a replay of the last batch
+    id: ``out`` and ``dlq_schema`` (one stateful query fanning out per
+    batch id) hold exactly the rows of one clean run over both files,
+    and the job starts 2 queries — the chain and the parse DLQ — that
+    hold 2 stateful operators between them (dedup and merger, once)."""
+    from streamforge_spark.jobs import JOB_REGISTRY
+    started = []
+    job = JOB_REGISTRY["MongoToKafka"]
+
+    def counting(spark, cfg):
+        queries = job(spark, cfg)
+        started.append(queries)
+        return queries
+    monkeypatch.setitem(JOB_REGISTRY, "MongoToKafka", counting)
+
+    first = [
+        env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),
+        env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),   # dup
+        env_line(op="insert", pk="b", t="2024-01-01 10:00:00",
+                 payload={"nope": 1}),                            # schema DLQ
+        env_line(op="insert", pk="c", t="2024-01-01 10:02:00"),
+        "not json",
+    ]
+    # event times at or below the first file's max: the watermark does
+    # not move, so the second file's batch is the last one committed
+    second = [
+        env_line(op="update", pk="a", t="2024-01-01 10:01:00"),   # same content
+        env_line(op="update", pk="a", t="2024-01-01 10:01:30",
+                 payload={"_id": "a", "v": 2}),
+        env_line(op="insert", pk="d", t="2024-01-01 10:00:00",
+                 payload={"nope": 2}),                            # schema DLQ
+        env_line(op="insert", pk="c", t="2024-01-01 10:02:00"),   # dup
+    ]
+    clean = tmp_path / "clean"
+    write_lines(clean / "in", first)
+    write_lines(clean / "in", second, name="batch1.txt")
+    run_job("MongoToKafka", job_cfg(clean), spark=spark, drain=True)
+    want = {s: read(spark, clean, s).count() for s in ("out", "dlq_schema")}
+    assert want == {"out": 3, "dlq_schema": 2}
+    assert sum(len(q.lastProgress["stateOperators"])
+               for q in started[0]) == 2
+
+    write_lines(tmp_path / "in", first)
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    write_lines(tmp_path / "in", second, name="batch1.txt")
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    last = trim_commits(tmp_path / "ckpt" / "egress")
+    # the replayed batch id is the one that carried the second file
+    assert read(spark, tmp_path, "out").filter(f"batch_id = {last}").count() == 1
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    got = {s: read(spark, tmp_path, s).count() for s in ("out", "dlq_schema")}
+    assert got == want
+    assert read(spark, tmp_path, "dlq_parse").count() == 1
+    assert [len(qs) for qs in started] == [2, 2, 2, 2]
+
+
+def test_mongo_to_kafka_refuses_file_sink_output(spark, tmp_path):
+    """An ``out`` dir a parquet file sink wrote hides every file outside
+    its manifest, so the job refuses it instead of writing beside it."""
+    (tmp_path / "out" / "out" / "_spark_metadata").mkdir(parents=True)
+    write_lines(tmp_path / "in", [env_line(pk="a")])
+    with pytest.raises(RuntimeError, match="'_spark_metadata'"):
+        run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+
+
+def test_mongo_to_kafka_refuses_new_checkpoint_over_output(spark, tmp_path):
+    """A fresh (here: archived) checkpoint over existing per-batch-id
+    output would restart at batch 0 and overwrite it: the job refuses
+    to start and the old output stays as it was."""
+    write_lines(tmp_path / "in", [env_line(pk="a"), env_line(pk="b")])
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    ckpt = tmp_path / "ckpt" / "egress"
+    ckpt.rename(ckpt.with_name("egress.expired"))
+    with pytest.raises(RuntimeError, match="beyond the last batch"):
+        run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    assert read(spark, tmp_path, "out").count() == 2
+
+
 def test_kafka_to_mongo_job(spark, tmp_path):
     # reference snapshot: two versions of key 'a' -> latest must win
     ref = spark.createDataFrame(
@@ -121,6 +215,36 @@ def test_event_router_job(spark, tmp_path):
     assert sorted(r.primary_key for r in read(spark, tmp_path, "es_orders").collect()) == ["o1", "o2"]
     assert [r.primary_key for r in read(spark, tmp_path, "es_payments").collect()] == ["p1"]
     assert [r.primary_key for r in read(spark, tmp_path, "mongo_main").collect()] == ["c1"]
+
+
+def test_event_router_replay_does_not_duplicate(spark, tmp_path):
+    """A replayed micro-batch rewrites its own batch-id dirs: the
+    routed counts do not change."""
+    write_lines(tmp_path / "in", [
+        env_line(source="orders", pk="o1"),
+        env_line(source="payments", pk="p1"),
+        env_line(source="clicks", pk="c1"),
+        env_line(source="orders", pk="o2"),
+    ])
+    subs = ("es_orders", "es_payments", "mongo_main")
+    run_job("EventRouter", job_cfg(tmp_path), spark=spark, drain=True)
+    before = {s: read(spark, tmp_path, s).count() for s in subs}
+    assert before == {"es_orders": 2, "es_payments": 1, "mongo_main": 1}
+    trim_commits(tmp_path / "ckpt" / "router")
+    run_job("EventRouter", job_cfg(tmp_path), spark=spark, drain=True)
+    assert {s: read(spark, tmp_path, s).count() for s in subs} == before
+
+
+def test_event_router_refuses_append_layout(spark, tmp_path):
+    """Output an append writer left (flat parquet files at the root of
+    ``es_orders``, the layout before per-batch-id writes) would be
+    dropped by partition discovery beside ``batch_id=`` dirs: the job
+    refuses to start instead."""
+    spark.createDataFrame([("o0",)], "primary_key string").write \
+        .mode("append").parquet(str(tmp_path / "out" / "es_orders"))
+    write_lines(tmp_path / "in", [env_line(source="orders", pk="o1")])
+    with pytest.raises(RuntimeError, match="write_batch did not write"):
+        run_job("EventRouter", job_cfg(tmp_path), spark=spark, drain=True)
 
 
 def test_merged_ingest_job(spark, tmp_path):
@@ -318,10 +442,7 @@ def test_corpus_ingest_recover_flag_token_expiry(spark, tmp_path):
     ckpt = tmp_path / "ckpt" / "corpus"
     # batch 1 read batch1.txt; later commits may be empty ticks — trim
     # every commit from 1 on so batch 1 is pending again
-    for p in list((ckpt / "commits").iterdir()):
-        base = p.name.removeprefix(".").removesuffix(".crc")
-        if base.isdigit() and int(base) >= 1:
-            os.remove(p)
+    trim_commits(ckpt, 1)
     os.remove(tmp_path / "in" / "batch1.txt")
     # recover: report-and-continue — the gap row lands BEFORE the
     # resume makes the silent empty-replay invisible; the checkpoint
@@ -1386,6 +1507,41 @@ def test_mongo_to_kafka_schema_migrations(spark, tmp_path):
     mig_dlq = read(spark, tmp_path, "dlq_migrate").collect()
     assert [r.error_type for r in mig_dlq] == ["SCHEMA_UNMIGRATABLE"]
     assert "v0" in mig_dlq[0].error_message
+
+
+def test_dlq_replay_unions_schema_and_migrate_classes(spark, tmp_path):
+    """DlqReplay over both DLQ classes at once: ``dlq_schema`` is
+    written per batch id (a ``batch_id`` partition column) and
+    ``dlq_migrate`` by a file sink (no such column); the pools still
+    union and the fixed chain recovers the migrate-class row."""
+    import json as _json
+    chain = [{"from": "v1", "to": "v2", "rename": {"legacy_id": "_id"},
+              "set": {"schema_version": "v2"}}]
+    write_lines(tmp_path / "in", [
+        env_line(op="insert", pk="a", t="2024-01-01 10:00:00",
+                 payload={"legacy_id": "a", "schema_version": "v1"}),
+        env_line(op="insert", pk="b", t="2024-01-01 10:00:00",
+                 payload={"_id": "b", "schema_version": "v0"}),  # dlq_migrate
+        env_line(op="insert", pk="c", t="2024-01-01 10:00:00",
+                 payload={"nope": "1", "schema_version": "v2"}),  # dlq_schema
+    ])
+    run_job("MongoToKafka",
+            job_cfg(tmp_path, SCHEMA_MIGRATIONS=_json.dumps(chain)),
+            spark=spark, drain=True)
+    assert [r.key for r in read(spark, tmp_path, "out").collect()] == ["a"]
+    assert read(spark, tmp_path, "dlq_migrate").count() == 1
+    assert read(spark, tmp_path, "dlq_schema").count() == 1
+
+    fixed = [{"from": "v0", "to": "v1", "set": {"schema_version": "v1"}},
+             *chain]
+    run_job("DlqReplay",
+            job_cfg(tmp_path, SCHEMA_MIGRATIONS=_json.dumps(fixed)),
+            spark=spark, drain=True)
+    assert [r.key for r in read(spark, tmp_path, "replayed").collect()] \
+        == ["b"]
+    ledger = read(spark, tmp_path, "dlq_replay_ledger").collect()
+    assert [(r.primary_key, r.from_class, r.original_error)
+            for r in ledger] == [("b", "dlq_migrate", "SCHEMA_UNMIGRATABLE")]
 
 
 def test_dlq_replay_outcome_matches_forecast(spark):

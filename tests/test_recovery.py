@@ -20,6 +20,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tests.test_jobs import trim_commits
+
 SCHEMA = T.StructType([T.StructField("id", T.LongType())])
 
 
@@ -86,11 +88,7 @@ def test_token_expiry_restart_from_now_with_gap_report(spark, tmp_path):
     # WARN (even with ignoreMissingFiles=false), committing over the
     # hole silently.  Demonstrate that first; it is why the preflight
     # audit exists.
-    def trim():
-        os.remove(f"{ckpt}/commits/1")
-        if os.path.exists(f"{ckpt}/commits/.1.crc"):   # checksum twin
-            os.remove(f"{ckpt}/commits/.1.crc")
-    trim()
+    trim_commits(ckpt, 1)
     os.remove(f"{src}/f1.parquet")
     q = start_fn(None)
     q.processAllAvailable()
@@ -101,7 +99,7 @@ def test_token_expiry_restart_from_now_with_gap_report(spark, tmp_path):
     # the degrade path: preflight catches the pending->missing file,
     # archives the checkpoint, reports the gap, restarts from now —
     # f0 (history, already in the sink) must NOT re-ingest
-    trim()   # the silent replay above re-committed batch 1
+    trim_commits(ckpt, 1)   # the silent replay above re-committed batch 1
     q, resumed = start_with_token_recovery(
         spark, start_fn, checkpoint=ckpt, gap_report_path=gaps)
     assert resumed is not None
@@ -232,9 +230,7 @@ def test_preflight_reads_compact_source_logs(spark, tmp_path):
         spark.conf.unset("spark.sql.streaming.fileSource.log.compactInterval")
     assert os.path.exists(f"{ckpt}/sources/0/3.compact")
     # make batch 3 pending again and trim its file AND an old committed one
-    for p in (f"{ckpt}/commits/3", f"{ckpt}/commits/.3.crc"):
-        if os.path.exists(p):
-            os.remove(p)
+    trim_commits(ckpt, 3)
     os.remove(f"{src}/f3.parquet")
     os.remove(f"{src}/f0.parquet")   # committed history — must NOT flag
     missing = preflight_source_audit(spark, ckpt)

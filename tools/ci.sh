@@ -11,6 +11,13 @@ if [ -n "$(git status --porcelain -- 'CORRECTNESS_r*.json' 'BENCH_r*.json')" ]; 
 fi
 echo "== unit + streaming + oracle parity (sf0.001) =="
 python -m pytest tests/ -x -q
+echo "== CDC correctness smoke (40,000 envelopes against the cdcgen model) =="
+smoke=$(python3 perfbench/run.py --workload cdc_backfill --seed 1 --seconds 0 --trace 0 | tail -n 1)
+echo "$smoke"
+case "$smoke" in
+    *'"correct": true'*) ;;
+    *) echo "ci: cdc_backfill sink counts differ from the model" >&2; exit 1 ;;
+esac
 echo "== full oracle parity at driver scale (sf0.01) =="
 STREAMFORGE_PARITY_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 echo "== every registered query has an oracle (no_oracle gate) =="
