@@ -36,7 +36,9 @@ from streamforge_spark.operators.quality import (
 )
 from streamforge_spark.operators.routing import routed, watermark_aligned_fan_in
 from streamforge_spark.operators.sessions import ordered_fold, session_analyzer
-from streamforge_spark.streaming.dedup import streaming_dedup, streaming_merger
+from streamforge_spark.streaming.dedup import (
+    start_without_idle_batches, streaming_dedup, streaming_merger,
+)
 from streamforge_spark.streaming.materialize import streaming_materializer
 from streamforge_spark.streaming.sinks import (
     BATCH_COL, check_batch_output, foreach_batch_upsert,
@@ -182,19 +184,28 @@ def _with_meta(df: DataFrame, key: str, value) -> DataFrame:
 @stream_job("MongoToKafka")
 def mongo_to_kafka(spark: SparkSession, cfg: ScopedConfig):
     """CDC egress chain (job/cdc/MongoToKafkaJob.java:51-91): parse ->
-    drop unknown ops -> dedup(primary_key, event_time) 10m -> exact
-    hash-suppress merger (excl. updatedAt/modifiedAt) -> schema v1
+    drop unknown ops -> dedup(primary_key, event_time) 10m -> hash-
+    suppress merger (excl. updatedAt/modifiedAt) -> schema v1
     (_id required) -> trace/processed stamps -> compacted (key, value)
     output with DELETE tombstones. Flow-disruption/latency monitors
     attach via streaming/flow_disruption.py + observe().
+
+    Dedup and merger state share the one 10-minute event-time
+    watermark the dedup assigns, so the merger's suppression horizon is
+    that watermark, not the reference StatefulMerger's 24 h TTL: a
+    (key, content) entry expires once the watermark passes its event
+    time plus 10 minutes, after which an unchanged payload re-emits.
 
     The dedup and merger state lives in ONE stateful query (checkpoint
     ``egress``): its ``foreachBatch`` persists the merged micro-batch,
     splits it with the schema enforcer and writes both sides —
     ``out`` and ``dlq_schema`` — through ``write_batch`` (per-batch-id
     overwrite, exactly-once under replay), the way the reference's DLQ
-    outputs are side outputs of its one operator chain. ``dlq_parse``
-    (and ``dlq_migrate``) stay stateless parquet-sink queries."""
+    outputs are side outputs of its one operator chain. Both of its
+    stateful operators are watermark dedups, which emit on arrival only,
+    so it runs data-bearing batches only (``start_without_idle_batches``):
+    eviction rides the next data batch. ``dlq_parse`` (and
+    ``dlq_migrate``) stay stateless parquet-sink queries."""
     out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
     env, parse_dlq = _envelopes(spark, cfg)
     env = filter_interceptor(env, F.col("operation") != "unknown")
@@ -208,7 +219,6 @@ def mongo_to_kafka(spark: SparkSession, cfg: ScopedConfig):
     # operator — streaming_merger_exact runs the exact semantics as a
     # standalone stage (see tests/test_streaming.py)
     env = streaming_merger(env, ["primary_key"], "payload_json", "event_time",
-                           ttl="24 hours",
                            excluded_fields=("updatedAt", "modifiedAt"),
                            assign_watermark=False)
 
@@ -229,8 +239,9 @@ def mongo_to_kafka(spark: SparkSession, cfg: ScopedConfig):
 
     check_batch_output(spark, (f"{out}/out", f"{out}/dlq_schema"),
                        f"{ckpt}/egress")
-    chain = (env.writeStream.outputMode("append").foreachBatch(fan_out)
-             .option("checkpointLocation", f"{ckpt}/egress").start())
+    chain = start_without_idle_batches(
+        env.writeStream.outputMode("append").foreachBatch(fan_out)
+        .option("checkpointLocation", f"{ckpt}/egress"))
     sinks = [chain, _sink(parse_dlq, cfg, "dlq_parse")]
     if mig_dlq is not None:
         sinks.append(_sink(mig_dlq, cfg, "dlq_migrate"))

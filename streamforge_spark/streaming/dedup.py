@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
@@ -50,6 +51,40 @@ def streaming_merger(df: DataFrame, key_cols: Sequence[str],
     if assign_watermark:
         df = df.withWatermark(event_time_col, ttl)
     return df.dropDuplicatesWithinWatermark([*key_cols, "_fp"]).drop("_fp")
+
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def start_without_idle_batches(writer: DataStreamWriter) -> StreamingQuery:
+    """Start a query that runs data-bearing micro-batches only.
+
+    Spark runs an extra no-input batch to evict state whenever the
+    watermark moves and no input is waiting.  Only valid when EVERY
+    stateful operator of the query is a watermark dedup
+    (``streaming_dedup`` / ``streaming_merger``):
+    ``dropDuplicatesWithinWatermark`` emits on arrival, never on
+    eviction, so that batch writes nothing.  Eviction then rides the
+    next data batch at the same watermark, which the commit log carries
+    over a restart.  That batch behaves as if the stream had never
+    paused: it cuts late rows at the previous batch's watermark and
+    evicts after its input.  Never use it for operators that emit on
+    eviction or timeout (windows, sessions, stream-stream joins,
+    GroupState timeouts).
+
+    The StreamExecution clones the session when the query is created
+    and reads the flag from that clone, so setting it around
+    ``start()`` reaches this query only."""
+    conf = writer._spark.conf
+    before = conf.get(_NO_DATA_BATCHES, None)
+    conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        return writer.start()
+    finally:
+        if before is None:
+            conf.unset(_NO_DATA_BATCHES)
+        else:
+            conf.set(_NO_DATA_BATCHES, before)
 
 
 def content_fingerprint(payload: Column,

@@ -79,6 +79,21 @@ def trim_commits(ckpt, first: int | None = None) -> int:
     return first
 
 
+def started_queries(monkeypatch) -> list[list]:
+    """Record the queries each ``run_job("MongoToKafka")`` starts: one
+    list per run, in the order the job returns them."""
+    from streamforge_spark.jobs import JOB_REGISTRY
+    started = []
+    job = JOB_REGISTRY["MongoToKafka"]
+
+    def recording(spark, cfg):
+        queries = job(spark, cfg)
+        started.append(queries)
+        return queries
+    monkeypatch.setitem(JOB_REGISTRY, "MongoToKafka", recording)
+    return started
+
+
 def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
         spark, tmp_path, monkeypatch):
     """Restart on the same checkpoint, then a replay of the last batch
@@ -86,16 +101,7 @@ def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
     batch id) hold exactly the rows of one clean run over both files,
     and the job starts 2 queries — the chain and the parse DLQ — that
     hold 2 stateful operators between them (dedup and merger, once)."""
-    from streamforge_spark.jobs import JOB_REGISTRY
-    started = []
-    job = JOB_REGISTRY["MongoToKafka"]
-
-    def counting(spark, cfg):
-        queries = job(spark, cfg)
-        started.append(queries)
-        return queries
-    monkeypatch.setitem(JOB_REGISTRY, "MongoToKafka", counting)
-
+    started = started_queries(monkeypatch)
     first = [
         env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),
         env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),   # dup
@@ -135,6 +141,75 @@ def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
     assert got == want
     assert read(spark, tmp_path, "dlq_parse").count() == 1
     assert [len(qs) for qs in started] == [2, 2, 2, 2]
+
+
+def test_mongo_to_kafka_runs_no_idle_batch(spark, tmp_path, monkeypatch):
+    """The egress query's stateful operators are all watermark dedups,
+    which emit on arrival only, so it skips the no-input batch Spark
+    would run to evict state once the watermark moves: a one-file drain
+    runs (and writes) batch 0 only, and the session conf is left as it
+    was."""
+    started = started_queries(monkeypatch)
+    flag = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(flag, None)
+    write_lines(tmp_path / "in", [
+        env_line(pk="a", t="2024-01-01 10:00:00"),
+        env_line(pk="b", t="2024-01-01 10:30:00"),   # watermark -> 10:20
+    ])
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    egress = started[0][0]
+    batches = [p for p in egress.recentProgress if "addBatch" in p["durationMs"]]
+    assert [p["batchId"] for p in batches] == [0]
+    assert all(p["numInputRows"] > 0 for p in batches)
+    # a stateful operator that emits on eviction would need the idle batch
+    assert {op["operatorName"] for p in batches
+            for op in p["stateOperators"]} == {"dedupeWithinWatermark"}
+    assert sorted(d.name for d in (tmp_path / "out" / "out").iterdir()
+                  if d.is_dir()) == ["batch_id=0"]
+    assert spark.conf.get(flag, None) == before
+
+
+def test_mongo_to_kafka_watermark_and_eviction_survive_restart(
+        spark, tmp_path, monkeypatch):
+    """With no idle batch, eviction after a restart rests on the
+    watermark the commit log carries over: the second run's first batch
+    runs at file 1's 10:20 watermark, suppresses a file-1 duplicate
+    inside the horizon and evicts the state that expired under that
+    watermark. Spark cuts late rows at the PREVIOUS batch's watermark,
+    so that batch still admits a fresh key at 10:05; the next batch
+    drops one as late."""
+    started = started_queries(monkeypatch)
+    write_lines(tmp_path / "in", [
+        env_line(pk="a", t="2024-01-01 10:00:00"),   # expires at 10:10
+        env_line(pk="x", t="2024-01-01 10:25:00"),
+        env_line(pk="b", t="2024-01-01 10:30:00"),   # watermark -> 10:20
+    ])
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    write_lines(tmp_path / "in", [
+        env_line(pk="late", t="2024-01-01 10:05:00"),  # expires at 10:15
+        env_line(pk="x", t="2024-01-01 10:25:00"),     # dup within horizon
+    ], name="batch1.txt")
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    assert sorted(r.key for r in read(spark, tmp_path, "out").collect()) == [
+        "a", "b", "late", "x"]
+    restarted = started[1][0].lastProgress
+    assert (restarted["batchId"], restarted["numInputRows"]) == (1, 2)
+    assert restarted["eventTime"]["watermark"] == "2024-01-01T10:20:00.000Z"
+    # each operator evicts "a" and "late" (expired under 10:20) and
+    # keeps "x" and "b"
+    assert [(op["numRowsDroppedByWatermark"], op["numRowsRemoved"],
+             op["numRowsTotal"]) for op in restarted["stateOperators"]] == [
+        (0, 2, 2), (0, 2, 2)]
+
+    write_lines(tmp_path / "in", [
+        env_line(pk="later", t="2024-01-01 10:06:00"),
+    ], name="batch2.txt")
+    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    assert read(spark, tmp_path, "out").count() == 4
+    late = started[2][0].lastProgress
+    assert (late["batchId"], late["numInputRows"]) == (2, 1)
+    assert sum(op["numRowsDroppedByWatermark"]
+               for op in late["stateOperators"]) == 1
 
 
 def test_mongo_to_kafka_refuses_file_sink_output(spark, tmp_path):
