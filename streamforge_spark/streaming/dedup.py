@@ -42,10 +42,8 @@ def streaming_merger(df: DataFrame, key_cols: Sequence[str],
     """Suppress updates whose content fingerprint repeats for the key
     within the TTL window. Approximates last-hash-per-key compare with
     (key, fingerprint) dedup — identical output whenever a payload
-    doesn't revert to a previously-seen value within the window; exact
-    last-value semantics would use transformWithStateInPandas/
-    applyInPandasWithState (see streaming.materialize for the
-    pattern)."""
+    doesn't revert to a previously-seen value within the window; for
+    exact last-value semantics use ``streaming_merger_exact`` below."""
     df = df.withColumn(
         "_fp", content_fingerprint(F.col(payload_col), excluded_fields))
     if assign_watermark:
@@ -159,71 +157,6 @@ def streaming_merger_exact(df: DataFrame, key_col: str, payload_col: str,
     return prepared.groupBy(key_col).applyInPandasWithState(
         fn, outputStructType=out_schema, stateStructType=_MERGER_STATE,
         outputMode="append", timeoutConf=timeout)
-
-
-def streaming_merger_tws(df: DataFrame, key_col: str, payload_col: str,
-                         time_col: str,
-                         excluded_fields: Sequence[str] = (),
-                         ttl_ms: int | None = None) -> DataFrame:
-    """``streaming_merger_exact`` on the transformWithState API (Spark
-    4 arbitrary-state v2): the key's last content hash lives in a
-    ValueState<Long> with NATIVE per-state TTL — the closest Spark
-    construct to the reference's ``StateTtlConfig`` on a Flink
-    ValueState (StatefulMerger.java:88-120), with no hand-rolled
-    timeout handling.
-
-    Same contract as streaming_merger_exact (an update passes iff its
-    hash differs from the key's current hash; reverts re-emit), same
-    O(8 bytes)/key state bound. Requires the RocksDB state store
-    provider (spark.sql.streaming.stateStore.providerClass) — which is
-    also the provider you want at 100 TB: state lives off-heap and
-    spills to disk, so key cardinality is bounded by storage, not
-    executor heap. (The TWS Python state protocol additionally needs
-    the protobuf package — absent in minimal containers, where the
-    applyInPandasWithState twin ``streaming_merger_exact`` is the
-    executable fallback; the contract test covers both and skips this
-    one when protobuf is missing.)"""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    out_cols = ["key", "payload", "ts"]
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("payload", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-
-    class LastHashMerger(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState(
-                "last_fp", "last_fp bigint", ttlDurationMs=ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._last.get()
-            last = cur[0] if cur is not None else None
-            out: list[dict] = []
-            for pdf in rows:
-                pdf = pdf.sort_values(by=[time_col])
-                for row in pdf.itertuples(index=False):
-                    fp = getattr(row, "cfp0")
-                    if last is None or fp != last:
-                        out.append(dict(key=key[0],
-                                        payload=getattr(row, payload_col),
-                                        ts=getattr(row, time_col)))
-                        last = fp
-            if last is not None:
-                self._last.update((int(last),))
-            yield pd.DataFrame(out, columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    prepared = df.withColumn(
-        "cfp0", content_fingerprint(F.col(payload_col), excluded_fields))
-    return prepared.groupBy(key_col).transformWithStateInPandas(
-        LastHashMerger(), outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none" if ttl_ms is None else "processingTime")
 
 
 def streaming_bloom_dedup(stream: DataFrame, *, key_col: str = "key",

@@ -70,62 +70,3 @@ def flow_disruption_detector(df: DataFrame, key_col: str,
         )
     )
 
-
-def flow_disruption_detector_tws(df: DataFrame, key_col: str,
-                                 timeout_ms: int = 5 * 60 * 1000) -> DataFrame:
-    """The silence detector on the transformWithState API with REAL
-    per-key timers — the exact shape of the reference's Flink
-    implementation (FlowDisruptionDetector.java:61-89: every element
-    deletes and re-arms a processing-time timer; the timer firing IS
-    the alarm).  Where `flow_disruption_detector` leans on
-    applyInPandasWithState's single state-timeout knob, this variant
-    uses the v2 handle's ``registerTimer``/``deleteTimer`` plus a
-    dedicated ``handleExpiredTimer`` callback, so alarm scheduling is
-    explicit state rather than a side effect of the timeout conf.
-
-    Same output contract: (key, status, event_count) with status
-    'active' | 'recovered' | 'disrupted', update semantics.  Requires
-    the RocksDB state store provider + protobuf (like the other twS
-    variants; the applyInPandasWithState twin is the minimal-container
-    fallback).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    cols = [f.name for f in STATUS_SCHEMA]
-
-    class SilenceDetector(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "flow", "disrupted boolean, count bigint, timer_ms bigint")
-            self._handle = handle
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._st.get()
-            was_disrupted, count, old_timer = cur if cur is not None \
-                else (False, 0, None)
-            count += sum(len(p) for p in rows)
-            # re-arm: drop the previous alarm, schedule the next one
-            if old_timer is not None and old_timer >= 0:
-                self._handle.deleteTimer(old_timer)
-            fire_at = timer_values.getCurrentProcessingTimeInMs() + timeout_ms
-            self._handle.registerTimer(fire_at)
-            self._st.update((False, int(count), int(fire_at)))
-            status = "recovered" if was_disrupted else "active"
-            yield pd.DataFrame([dict(key=key[0], status=status,
-                                     event_count=count)], columns=cols)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            cur = self._st.get()
-            _, count, _ = cur if cur is not None else (False, 0, None)
-            self._st.update((True, int(count), -1))
-            yield pd.DataFrame([dict(key=key[0], status="disrupted",
-                                     event_count=count)], columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    return (df.groupBy(key_col)
-            .transformWithStateInPandas(
-                SilenceDetector(), outputStructType=STATUS_SCHEMA,
-                outputMode="update", timeMode="processingTime"))

@@ -9,8 +9,6 @@ import tempfile
 import time
 from datetime import datetime
 
-import pytest
-
 from streamforge_spark.streaming.flow_disruption import flow_disruption_detector
 from streamforge_spark.streaming.sources import file_stream
 from tests.test_streaming import EVENTS_SCHEMA
@@ -49,49 +47,3 @@ def test_flow_disruption_active_then_disrupted(spark):
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
-
-def test_flow_disruption_tws_timers(spark):
-    # the transformWithState variant: explicit registerTimer/
-    # deleteTimer per key, alarm via handleExpiredTimer
-    pytest.importorskip("google.protobuf")
-    from streamforge_spark.streaming.flow_disruption import (
-        flow_disruption_detector_tws,
-    )
-    d = tempfile.mkdtemp(prefix="sf_flow_tws_")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        src = f"{d}/in"
-        spark.createDataFrame(
-            [(1, "k1", ts("2024-01-01 10:00:00"), "insert", "a")],
-            EVENTS_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-        stream = file_stream(spark, src, EVENTS_SCHEMA)
-        status = flow_disruption_detector_tws(stream, "key",
-                                              timeout_ms=2000)
-        q = (status.writeStream.format("memory").queryName("flow_tws_out")
-             .outputMode("update")
-             .trigger(processingTime="1 second").start())
-        try:
-            deadline = time.time() + 90
-            seen = set()
-            while time.time() < deadline and not {"active",
-                                                  "disrupted"} <= seen:
-                time.sleep(2)
-                seen = {r.status for r in
-                        spark.sql("select * from flow_tws_out").collect()}
-            assert "active" in seen
-            assert "disrupted" in seen, seen
-        finally:
-            q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-        shutil.rmtree(d, ignore_errors=True)

@@ -451,37 +451,6 @@ def test_effectively_once_ledger_self_compacts(spark, workdir):
     apply(b, 7)  # replay inside the window is still skipped (no error)
 
 
-def test_streaming_merger_tws_reemits_reverts(spark, workdir):
-    # same contract as streaming_merger_exact, on the Spark 4
-    # transformWithState API (ValueState + native TTL, RocksDB provider).
-    # The TWS state-server protocol needs protobuf, which this container
-    # lacks — the test runs wherever pyspark's [connect] extras exist.
-    pytest.importorskip("google.protobuf")
-    from streamforge_spark.streaming.dedup import streaming_merger_tws
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try:
-        src = f"{workdir}/in"
-        _write_batch(spark, src, [
-            (1, "k", ts("2024-01-01 10:00:00"), "u", '{"a": 1}'),
-            (2, "k", ts("2024-01-01 10:01:00"), "u", '{"a": 1}'),   # no-op
-            (3, "k", ts("2024-01-01 10:02:00"), "u", '{"a": 2}'),
-            (4, "k", ts("2024-01-01 10:03:00"), "u", '{"a": 1}'),   # revert
-        ])
-        stream = file_stream(spark, src, EVENTS_SCHEMA)
-        merged = streaming_merger_tws(stream, "key", "payload", "t")
-        _run_to_memory(merged, "merge_tws_out")
-        rows = spark.sql("select * from merge_tws_out order by ts").collect()
-        assert [r.payload for r in rows] == ['{"a": 1}', '{"a": 2}', '{"a": 1}']
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_streaming_ohlc_matches_batch(spark, workdir):
     # the shared algebraic agg spec must produce identical bars when
     # fed incrementally under a watermark as in one batch pass

@@ -4,9 +4,9 @@
 #   sh tools/ci.sh
 set -e
 cd "$(dirname "$0")/.."
-echo "== driver artifacts committed (round-start guard) =="
+echo "== driver artifacts committed =="
 if [ -n "$(git status --porcelain -- 'CORRECTNESS_r*.json' 'BENCH_r*.json')" ]; then
-    echo "ci: CORRECTNESS/BENCH artifacts uncommitted — run sh tools/round_start.sh first" >&2
+    echo "ci: CORRECTNESS/BENCH artifacts uncommitted — commit them in an artifact-only commit" >&2
     exit 1
 fi
 echo "== unit + streaming + oracle parity (sf0.001) =="
@@ -29,8 +29,6 @@ print(f'{len(registry.QUERIES)} queries, all oracled')
 "
 echo "== oracle dtype-cast map current (HUGEINT drift lint) =="
 python tools/gen_oracle_casts.py --check
-echo "== source pins current (dirty-bit rotation state) =="
-python tools/gen_source_pins.py --check
 echo "== physical-plan audit (PLANS.md) =="
 python tools/plan_report.py
 echo "== measured shuffle volumes (SHUFFLE.md) =="
