@@ -1,10 +1,18 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness: runs the headline queries (or the NAMEs given on
+the command line) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
+on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+{"metric", "value", "unit", "sf", "passes", "queries", "min", "layers"}.
 
-Each query executes end-to-end into a noop sink (full materialization,
-nothing collected to the driver)."""
+    python bench.py [NAME ...]
+    python bench.py >> BENCH_SELF.jsonl     # record a run in the ledger
+
+Each query runs ``PASSES`` times, cold, end-to-end into a noop sink (full
+materialization, nothing collected to the driver).  ``queries`` holds the
+per-query median wall, ``min`` the fastest pass, and ``layers`` the
+median pass split into DataFrame build and noop execution, with its
+Spark job counts.  ``value`` is the sum of the medians.  Nothing is read
+from or written to disk."""
 
 from __future__ import annotations
 
@@ -18,7 +26,7 @@ import time
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 from streamforge_spark import registry
-from streamforge_spark.session import get_spark
+from streamforge_spark.session import default_parallelism, get_spark
 
 # Headline set: the flagship CDC chain pieces + heavy analytics +
 # LLM-pipeline ops. Keep this list stable across rounds for comparable
@@ -117,13 +125,7 @@ HEADLINE = [
     "semantic_ingest_gate",
     "hot_band_report",
     # round-9 addition: the composed funnel with the semantic gate
-    # armed — the flagship six-stage certification plan.  r10: the
-    # inline artifact builds (vocab + substring + MinHash + DSIR +
-    # Lloyd trainer) are memoized per bench process (benchcache), so
-    # the measured cost is the steady-state funnel against a warm
-    # model store — the production amortization the docstring's cost
-    # split describes; the first build still pays full price in the
-    # pass that triggers it
+    # armed — the flagship six-stage certification plan
     "corpus_funnel_semantic_report",
     # round-9 late additions: training-shard balance audit (one rollup),
     # context-length packing curve (|sizes| broadcast multiply),
@@ -173,552 +175,85 @@ HEADLINE = [
 ]
 
 
-def _timed(fn) -> float:
+PASSES = 3
+
+
+def _run(spark, sf_dir: str, name: str, group: str) -> dict:
+    """One cold run of ``name`` under Spark job group ``group``: the
+    build (``fn(spark, sf_dir)``) and exec (noop write) walls, all the
+    group's jobs, and those that ran while the DataFrame was built
+    (eager checkpoints, driver collects)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, name)
+    tracker = sc.statusTracker()
     t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
+    df = registry.QUERIES[name](spark, sf_dir)
+    t1 = time.perf_counter()
+    build_jobs = len(tracker.getJobIdsForGroup(group))
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    return {"wall": t2 - t0, "build_s": t1 - t0, "exec_s": t2 - t1,
+            "jobs": len(tracker.getJobIdsForGroup(group)),
+            "build_jobs": build_jobs}
+
+
+def measure(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
+    """``PASSES`` passes over ``names``, each query once per pass, so a
+    burst of host contention hits one stretch of one pass, not every
+    run of a query.  Per name: the ``median`` and ``min`` wall, and the
+    median pass's ``build_s``, ``exec_s``, ``jobs`` and ``build_jobs``
+    (so ``build_s + exec_s`` is the median wall; ``PASSES`` is odd)."""
+    runs: dict[str, list[dict]] = {n: [] for n in names}
+    for p in range(PASSES):
+        for name in names:
+            runs[name].append(_run(spark, sf_dir, name, f"{name}#{p}"))
+    out = {}
+    for name, rs in runs.items():
+        mid = sorted(rs, key=lambda r: r["wall"])[len(rs) // 2]
+        out[name] = {
+            "median": round(mid["wall"], 3),
+            "min": round(min(r["wall"] for r in rs), 3),
+            "build_s": round(mid["build_s"], 3),
+            "exec_s": round(mid["exec_s"], 3),
+            "jobs": mid["jobs"],
+            "build_jobs": mid["build_jobs"],
+        }
+    return out
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([\d.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+    names = sys.argv[1:] or HEADLINE
 
-    if "--solo" in sys.argv:
-        _solo(sf_dir, sf)
-        return
-    if "--artifacts" in sys.argv:
-        _artifacts(sf_dir, sf)
-        return
-
+    registry.load_all()
+    unknown = [n for n in names if n not in registry.QUERIES]
+    if unknown:
+        sys.exit(f"bench.py: unknown queries {unknown}")
     spark = get_spark("streamforge-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    registry.load_all()
-
-    # bench-only artifact memo (judge r9 item 4): the funnel family's
-    # inline model-store builds materialize once per process, so the
-    # measured cost is the steady-state funnel against a warm store —
-    # the production (CorpusIngestV2) amortization.  Disable with
-    # SPARK_GRAFT_NO_BENCH_CACHE=1 to measure cold builds.  The flag
-    # is stamped into the ledger entry (judge r10 item 4 / advisor):
-    # a warm-vs-cold comparison is cross-methodology, and the
-    # machine-readable record must say so, not just the prose note.
-    bench_cache = "off" if os.environ.get(
-        "SPARK_GRAFT_NO_BENCH_CACHE") == "1" else "on"
-    if bench_cache == "on":
-        from streamforge_spark import benchcache
-        benchcache.enable()
 
     # warm the JVM + parquet footers with one cheap query, and the
     # reusable Python workers with one trivial Arrow stage — so the
     # first pandas-UDF headline query isn't charged interpreter spin-up
     registry.QUERIES["q6_forecast_revenue"](spark, sf_dir).collect()
-    spark.range(64).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))) \
+    spark.range(64).repartition(default_parallelism()) \
         .mapInPandas(lambda it: it, "id long").collect()
 
-    # host calibration: a fixed pure-JVM workload, best of 3 —
-    # data-independent, code-independent, so cross-round per-query
-    # deltas can be read against the HOST's speed that day (r10: an
-    # idle-machine floor 1.3-1.5x slower than r9's for identical
-    # plans; without this constant in the artifact such drift is
-    # indistinguishable from a plan regression)
-    calib = min(
-        _timed(lambda: spark.range(200_000_000)
-               .selectExpr("sum(id * 3 + 1)").collect())
-        for _ in range(3))
-
-    # Best-of-2 via two full passes (not back-to-back reruns): a
-    # transient host-contention window poisons one contiguous stretch
-    # of a sequential run — r04's artifact showed six *consecutive*
-    # entries 1.6-5.3x slower with provably unchanged code/plans.
-    # Separate passes mean the same wall-clock window can't hit the
-    # same query twice, so min(per-pass) is contention-immune while
-    # still charging real plan cost.
-    passes: list[dict[str, float]] = []
-    for _ in range(2):
-        t_pass: dict[str, float] = {}
-        for name in HEADLINE:
-            fn = registry.QUERIES[name]
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t_pass[name] = time.perf_counter() - t0
-        passes.append(t_pass)
-    timings = {n: round(min(p[n] for p in passes), 3) for n in HEADLINE}
-
-    total_this_run = round(sum(min(p[n] for p in passes)
-                               for n in HEADLINE), 3)
-
-    # Best-of-ROUND fold (judge r9 item 3): a contended run must not
-    # publish a phantom regression as the round's number.  Earlier
-    # same-round ledger entries contribute their per-query minima —
-    # but only for names whose recorded source hash matches the
-    # current source, so a mid-round plan edit can't inherit the old
-    # plan's timing.  Widened per advisor r10: the qhash covers only
-    # the query fn + oracle, so the fold ALSO requires the entry's
-    # whole-source tree hash and benchcache flag to match — a
-    # mid-round helper-module edit or a cache-mode flip invalidates
-    # every earlier entry instead of inheriting its timing.
-    qhash = {n: registry.source_hash(n)[:12] for n in HEADLINE}
-    tree = _tree_hash()
-    folded = 0
-    eligible = [e for e in _same_round_entries(sf)
-                if e.get("tree_hash") == tree
-                and e.get("benchcache") == bench_cache]
-    for entry in eligible:
-        eq, eh = entry.get("queries", {}), entry.get("qhash", {})
-        for n in HEADLINE:
-            if n in eq and eh.get(n) == qhash[n] and eq[n] < timings[n]:
-                timings[n] = eq[n]
-                folded += 1
-    # The calibration constant paired with the FOLD total must be the
-    # fastest host state among its contributors (judge r11 item 1: the
-    # fold's minima were recorded at calib~0.171 host states; scaling
-    # them by the final run's 0.342 constant published a phantom
-    # -73.6s "calibrated improvement" when fold-vs-fold was 0.99x
-    # flat).  Mirrors _latest_bench_artifact's min(calibs) for the
-    # comparison base, so both sides of the delta pair a fold with the
-    # min of its contributors' constants.
-    fold_calib = _fold_calib(calib, eligible)
-
-    total = round(sum(timings.values()), 3)
-    out = {
+    rec = measure(spark, sf_dir, names)
+    print(json.dumps({
         "metric": "headline_queries_wall",
-        "value": total,
+        "value": round(sum(r["median"] for r in rec.values()), 3),
         "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "runs_per_query": len(passes),
-        "qhash": qhash,
-        "tree_hash": tree,
-        "benchcache": bench_cache,
-        # both totals published (advisor r10): `value` is the
-        # best-of-round fold (the round's number), `value_this_run`
-        # is this run alone — a reader can see how much the fold
-        # ratchet contributed.  effective_samples = passes in this
-        # run + passes in every fold-eligible same-round entry.
-        "value_this_run": total_this_run,
-        "folded_same_round": folded,
-        "fold_entries": len(eligible),
-        # sum each contributor's RECORDED pass count (advisor r11: a
-        # 1-pass entry folding into a 2-pass run is 3 samples, not 4)
-        "effective_samples": len(passes) + sum(
-            e.get("runs_per_query", 1) for e in eligible),
-        "host_calib_sec": round(calib, 3),
-        "host_calib_fold": round(fold_calib, 3),
-        # contention diagnostic: per-query max/min across passes — a
-        # localized spike shows up here instead of in the headline
-        "pass_spread_max": round(max(
-            max(p[n] for p in passes) / max(min(p[n] for p in passes), 1e-9)
-            for n in HEADLINE), 2),
-        # full per-pass timings so a future contention event is
-        # diagnosable from the artifact alone (which pass, which
-        # contiguous stretch) without re-running anything
-        "passes": [{n: round(t, 3) for n, t in p.items()} for p in passes],
-    }
-    prev = _latest_bench_artifact(sf)
-    if prev is not None:
-        src, prev_data = prev
-        prev_q = prev_data.get("queries", {})
-        prev_runs = prev_data.get("runs_per_query", 1)
-        prev_cache = prev_data.get("benchcache", "unknown")
-        prev_calib = prev_data.get("host_calib_sec")
-        out["vs_prev"] = {
-            "source": src,
-            "total_prev": prev_data.get("value"),
-            "total_delta": round(total - prev_data.get("value", 0.0), 3),
-            # best-of-N vs single-run artifacts aren't apples-to-apples
-            # (min-of-passes flatters the newer number), and a warm
-            # benchcache vs cold (or unknown) base isn't either (judge
-            # r10 item 4: r10's ~7.5s "improvement" was partly the
-            # warm-artifact methodology switch, and this flag said
-            # false); flag either so the delta is read as
-            # cross-methodology, not as a code change
-            "runs_per_query_prev": prev_runs,
-            "benchcache_prev": prev_cache,
-            "cross_methodology": (prev_runs != len(passes)
-                                  or bool(prev_data.get("reconstructed"))
-                                  or prev_cache != bench_cache),
-            "per_query_delta": {
-                n: round(timings[n] - prev_q[n], 3)
-                for n in timings if n in prev_q
-            },
-        }
-        # host-normalized delta (judge r10 item 5): scale this round's
-        # total to the previous round's host speed via the pure-JVM
-        # calibration constant, so a 1.3x slower-host day reads as
-        # ~zero calibrated delta instead of needing a hand-written
-        # adjudication note.  Null when the base predates the constant.
-        if prev_calib:
-            out["vs_prev"]["host_calib_prev"] = prev_calib
-        # Pair each total with ITS OWN calibration constant (judge r11
-        # item 1): the fold total with the min over fold contributors
-        # (+ this run), value_this_run with this run's constant.  When
-        # no earlier entry folded in, fold_calib == calib and the two
-        # deltas agree by construction.
-        out["vs_prev"]["total_delta_calibrated"] = _calibrated_delta(
-            total, fold_calib, prev_data.get("value"), prev_calib)
-        out["vs_prev"]["total_delta_calibrated_this_run"] = \
-            _calibrated_delta(total_this_run, calib,
-                              prev_data.get("value"), prev_calib)
-    print(json.dumps(out))
-    # Persist the UNtruncated artifact: the driver's BENCH_r{N}.json
-    # wrapper keeps only a 2000-char stdout tail, which loses the
-    # `queries` map once the headline set grew past ~30 entries —
-    # that is why r06's vs_prev had to fall back to r01 (judge r6
-    # item 4).  rounds_seen tags which round the run belongs to (the
-    # max driver wrapper on disk at run time), so the NEXT round's
-    # vs_prev can pick this round's final run — which is the driver's
-    # own bench pass, since it too appends here.
-    out["rounds_seen"] = _rounds_on_disk()
-    here = pathlib.Path(__file__).resolve().parent
-    with open(here / "BENCH_SELF.jsonl", "a") as fh:
-        fh.write(json.dumps(out) + "\n")
+        "sf": float(m.group(1)) if m else None,
+        "passes": PASSES,
+        "queries": {n: r["median"] for n, r in rec.items()},
+        "min": {n: r["min"] for n, r in rec.items()},
+        "layers": {n: {k: r[k] for k in
+                       ("build_s", "exec_s", "jobs", "build_jobs")}
+                   for n, r in rec.items()},
+    }))
     spark.stop()
-
-
-# outer-wrapper / non-query numeric keys the tail-reconstruction regex
-# must not mistake for per-query timings
-_NON_QUERY_KEYS = frozenset({
-    "metric", "value", "sf", "n", "rc", "cpus", "runs_per_query",
-    "runs_per_query_prev", "pass_spread_max", "total_prev",
-    "total_delta", "rounds_seen", "folded_same_round", "folded_entries",
-    "host_calib_sec", "host_calib_prev", "total_delta_calibrated",
-    "value_this_run", "effective_samples", "fold_entries",
-    "family_cold_wall", "host_calib_fold",
-    "total_delta_calibrated_this_run",
-})
-
-
-def _fold_calib(this_calib: float, eligible: list[dict]) -> float:
-    """Calibration constant to pair with the best-of-round FOLD total:
-    the min over this run's constant and every fold-eligible same-round
-    entry's.  The folded per-query minima were recorded at the FASTEST
-    host state among contributors, so pairing them with any slower
-    constant scales already-fast numbers up and manufactures phantom
-    improvement (judge r11 item 1: -73.6s claimed vs 0.99x actual).
-    Invariant (regression-tested): never worse than any contributor's
-    recorded constant, and equal to ``this_calib`` when nothing folded.
-    """
-    calibs = [this_calib] + [
-        e["host_calib_sec"] for e in eligible
-        if isinstance(e.get("host_calib_sec"), (int, float))
-        and e["host_calib_sec"] > 0]
-    return min(calibs)
-
-
-def _calibrated_delta(total, calib, total_prev, calib_prev):
-    """Host-normalized round-over-round delta (judge r10 item 5):
-    this round's total scaled to the PREVIOUS round's host speed via
-    the pure-JVM calibration constants, minus the previous total — so
-    a slower-host day reads as ~zero instead of a phantom regression
-    (and a faster-host day can't mask a real one).  None when either
-    side lacks the constant (artifacts predating r10) or a total."""
-    if not calib or not calib_prev or total is None or total_prev is None:
-        return None
-    return round(total * (calib_prev / calib) - total_prev, 3)
-
-
-def _tree_hash() -> str:
-    """12-hex digest over every streamforge_spark/ source file —
-    the whole-tree complement to the per-query ``source_hash`` fold
-    guard (advisor r10: a mid-round edit to a shared helper module
-    changes plans without changing any qhash, so earlier ledger
-    entries must stop folding)."""
-    import hashlib
-    here = pathlib.Path(__file__).resolve().parent
-    h = hashlib.sha256()
-    for p in sorted((here / "streamforge_spark").rglob("*.py")):
-        h.update(str(p.relative_to(here)).encode())
-        h.update(p.read_bytes())
-    return h.hexdigest()[:12]
-
-
-def _ledger_entries(sf: float | None, rnd: int) -> list[dict]:
-    """All BENCH_SELF.jsonl headline entries at scale ``sf`` tagged
-    with rounds_seen == rnd (i.e. run while BENCH_r{rnd}.json was the
-    newest wrapper on disk — the runs belonging to round rnd+1)."""
-    here = pathlib.Path(__file__).resolve().parent
-    ledger = here / "BENCH_SELF.jsonl"
-    out: list[dict] = []
-    if not ledger.exists():
-        return out
-    for line in ledger.read_text().splitlines():
-        try:
-            d = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if isinstance(d, dict) and d.get("sf") == sf \
-                and d.get("rounds_seen") == rnd \
-                and d.get("metric") == "headline_queries_wall" \
-                and isinstance(d.get("queries"), dict):
-            out.append(d)
-    return out
-
-
-def _same_round_entries(sf: float | None) -> list[dict]:
-    """Earlier ledger entries from THIS round (same wrapper state)."""
-    return _ledger_entries(sf, _rounds_on_disk())
-
-
-def _solo(sf_dir: str, sf: float | None) -> None:
-    """Standing solo re-measure protocol (judge r9 item 7): any query
-    whose driver-artifact delta exceeds 1.3x round-over-round gets
-    ``python bench.py --solo NAME`` — best-of-5 identical back-to-back
-    passes in a fresh session, so JIT warm-up / host contention decay
-    is visible in the pass sequence before any plan change is made.
-    Appends a ``{name}_solo_remeasure`` note to BENCH_SELF.jsonl."""
-    argv = [a for a in sys.argv[1:] if a != "--solo"]
-    if not argv:
-        print("usage: bench.py --solo NAME [RUNS]", file=sys.stderr)
-        sys.exit(2)
-    name, runs = argv[0], int(argv[1]) if len(argv) > 1 else 5
-    spark = get_spark("streamforge-bench-solo")
-    spark.sparkContext.setLogLevel("ERROR")
-    registry.load_all()
-    if os.environ.get("SPARK_GRAFT_NO_BENCH_CACHE") != "1":
-        from streamforge_spark import benchcache
-        benchcache.enable()
-    fn = registry.QUERIES[name]
-    times = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times.append(round(time.perf_counter() - t0, 3))
-    out = {
-        "metric": f"{name}_solo_remeasure",
-        "value": min(times),
-        "unit": "sec",
-        "passes": times,
-        "sf": sf,
-        "benchcache": ("off" if os.environ.get(
-            "SPARK_GRAFT_NO_BENCH_CACHE") == "1" else "on"),
-        "tree_hash": _tree_hash(),
-        "qhash": {name: registry.source_hash(name)[:12]},
-        "note": ("solo best-of-%d per the standing verdict-r9-item-7 "
-                 "protocol; monotone decay across passes = warm-up, "
-                 "not a plan regression" % runs),
-    }
-    print(json.dumps(out))
-    here = pathlib.Path(__file__).resolve().parent
-    with open(here / "BENCH_SELF.jsonl", "a") as fh:
-        fh.write(json.dumps(out) + "\n")
-    spark.stop()
-
-
-def _artifacts(sf_dir: str, sf: float | None) -> None:
-    """Cold artifact-build bench (judge r10 item 4): with benchcache
-    ON, the headline wall measures the funnel family against a warm
-    model store, so a regression in the BUILD code itself would be
-    invisible.  ``python bench.py --artifacts`` runs the funnel family
-    once with NO cache, timing each model-store build helper
-    individually (accumulated across call sites), and appends ONE
-    ``artifact_build_wall`` line per round to BENCH_SELF.jsonl."""
-    import functools
-
-    spark = get_spark("streamforge-bench-artifacts")
-    spark.sparkContext.setLogLevel("ERROR")
-    registry.load_all()
-
-    builds: dict[str, float] = {}
-
-    def timed_build(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            t0 = time.perf_counter()
-            # charge materialization to the build, not the enclosing
-            # query, exactly as benchcache would absorb it — the SAME
-            # recursion (advisor r11: minhash_corpus_index returns a
-            # (bands, grams) tuple; a bare-DataFrame check left it
-            # lazy and charged its cost to the enclosing query's wall)
-            from streamforge_spark.benchcache import _materialize
-            out = _materialize(fn(*args, **kwargs))
-            builds[fn.__name__] = round(
-                builds.get(fn.__name__, 0.0)
-                + time.perf_counter() - t0, 3)
-            return out
-        return wrapper
-
-    # same patch points as benchcache.enable(), but timing instead of
-    # memoizing — every call pays full build price and is measured
-    from streamforge_spark.functions import clustering, dsir
-    from streamforge_spark.functions import substring_index as xsmod
-    from streamforge_spark.streaming import curation as scur
-    clustering.kmeans_centroids = timed_build(clustering.kmeans_centroids)
-    dsir.dsir_llr_model = timed_build(dsir.dsir_llr_model)
-    xsmod.substring_index = timed_build(xsmod.substring_index)
-    scur.minhash_corpus_index = timed_build(scur.minhash_corpus_index)
-
-    family = ["corpus_funnel_report", "corpus_funnel_semantic_report",
-              "semantic_ingest_gate", "ann_ivf_probe_sweep"]
-    t0 = time.perf_counter()
-    for name in family:
-        registry.QUERIES[name](spark, sf_dir) \
-            .write.format("noop").mode("overwrite").save()
-    cold_wall = round(time.perf_counter() - t0, 3)
-
-    out = {
-        "metric": "artifact_build_wall",
-        "value": round(sum(builds.values()), 3),
-        "unit": "sec",
-        "builds": builds,
-        "family_cold_wall": cold_wall,
-        "family": family,
-        "sf": sf,
-        "benchcache": "off",
-        "tree_hash": _tree_hash(),
-        "rounds_seen": _rounds_on_disk(),
-    }
-    print(json.dumps(out))
-    here = pathlib.Path(__file__).resolve().parent
-    with open(here / "BENCH_SELF.jsonl", "a") as fh:
-        fh.write(json.dumps(out) + "\n")
-    spark.stop()
-
-
-def _rounds_on_disk() -> int:
-    """Highest N among the driver's BENCH_r{N}.json wrappers."""
-    here = pathlib.Path(__file__).resolve().parent
-    rounds = [int(m.group(1)) for p in here.glob("BENCH_r*.json")
-              if (m := re.match(r"BENCH_r(\d+)\.json$", p.name))]
-    return max(rounds, default=0)
-
-
-def _artifact_queries(path: pathlib.Path) -> dict[str, float]:
-    """Per-query timing map from a bench artifact file (driver wrapper
-    or bare bench line), {} when unrecoverable."""
-    try:
-        data = json.loads(path.read_text())
-    except (OSError, json.JSONDecodeError):
-        return {}
-    if not isinstance(data, dict):
-        return {}
-    parsed = data.get("parsed")
-    data = parsed if isinstance(parsed, dict) else data
-    q = data.get("queries")
-    return q if isinstance(q, dict) else {}
-
-
-def _reconstruct_from_tail(wrapper: dict):
-    """Rebuild {value, queries, sf} from a driver wrapper whose
-    ``parsed`` is null because the 2000-char stdout tail front-
-    truncated the JSON line.  Two recoverable signal sources survive
-    at the END of the line: (a) the complete ``vs_prev`` block —
-    per-query MIN timings reconstruct exactly as prev_source value +
-    delta; (b) the partial trailing per-pass map — raw single-pass
-    timings for the newer queries the delta block doesn't cover.
-    Mixed min/raw values are flagged ``reconstructed`` so the caller
-    marks the comparison cross-methodology."""
-    tail = wrapper.get("tail")
-    if not isinstance(tail, str) or not tail:
-        return None
-    # best case: the whole bench line survived in the tail
-    for line in reversed(tail.splitlines()):
-        if line.startswith('{"metric"'):
-            try:
-                full = json.loads(line)
-                if isinstance(full, dict) and "queries" in full:
-                    return full
-            except json.JSONDecodeError:
-                pass
-    here = pathlib.Path(__file__).resolve().parent
-    queries: dict[str, float] = {}
-    total = None
-    i = tail.find('"vs_prev"')
-    seg = tail[:i] if i >= 0 else tail
-    if i >= 0:
-        try:
-            vs, _ = json.JSONDecoder().raw_decode(tail, tail.index("{", i))
-            base = _artifact_queries(here / str(vs.get("source", "")))
-            for n, d in vs.get("per_query_delta", {}).items():
-                if n in base:
-                    queries[n] = round(base[n] + d, 3)
-            if vs.get("total_prev") is not None \
-                    and vs.get("total_delta") is not None:
-                total = round(vs["total_prev"] + vs["total_delta"], 3)
-        except (json.JSONDecodeError, ValueError):
-            pass
-    # fill the delta-uncovered names from the partial pass maps; a name
-    # may appear in several passes — min matches the bench methodology
-    raw: dict[str, float] = {}
-    for n, v in re.findall(r'"([A-Za-z0-9_]+)": ([0-9]+(?:\.[0-9]+)?)',
-                           seg):
-        if n not in _NON_QUERY_KEYS:
-            raw[n] = min(raw.get(n, float("inf")), float(v))
-    for n, v in raw.items():
-        queries.setdefault(n, v)
-    if not queries:
-        return None
-    return {
-        "value": total if total is not None
-        else round(sum(queries.values()), 3),
-        "queries": queries,
-        "sf": wrapper.get("sf"),
-        "reconstructed": True,
-    }
-
-
-def _latest_bench_artifact(sf: float | None):
-    """The previous ROUND's bench result at the same scale factor, so
-    each round's artifact carries per-query regressions visibly.
-    Preference order: (1) the last BENCH_SELF.jsonl line written while
-    the previous round's wrappers were the newest on disk — that is
-    the previous driver run itself, untruncated; (2) the newest driver
-    wrapper's ``parsed`` dict; (3) a reconstruction from the wrapper's
-    stdout tail (judge r6 item 4: r03-r06 wrappers lost their
-    ``queries`` map to tail truncation, silently degrading vs_prev to
-    the r01 artifact)."""
-    here = pathlib.Path(__file__).resolve().parent
-    cur = _rounds_on_disk()
-    entries = _ledger_entries(sf, cur - 1)
-    if entries:
-        # Best-of-round fold (judge r9 item 3): min per query across
-        # ALL of the previous round's runs, so one contended pass in
-        # the entry the driver happened to sample can't inflate the
-        # comparison base (r9's sampled run carried ~22s of host
-        # contention its two siblings disproved).
-        folded: dict[str, float] = {}
-        for d in entries:
-            for n, v in d["queries"].items():
-                if isinstance(v, (int, float)):
-                    folded[n] = min(folded.get(n, float("inf")), v)
-        flags = {d.get("benchcache", "unknown") for d in entries}
-        calibs = [d["host_calib_sec"] for d in entries
-                  if isinstance(d.get("host_calib_sec"), (int, float))]
-        best = {
-            "value": round(sum(folded.values()), 3),
-            "queries": folded,
-            "sf": sf,
-            "runs_per_query": max(d.get("runs_per_query", 1)
-                                  for d in entries),
-            "folded_entries": len(entries),
-            # flag/calib of the comparison base: unanimous flag or
-            # "mixed"; min calib matches the best-of-round fold (the
-            # fastest host state contributed the folded minima)
-            "benchcache": flags.pop() if len(flags) == 1 else "mixed",
-            "host_calib_sec": min(calibs) if calibs else None,
-        }
-        return (f"BENCH_SELF.jsonl(r{cur:02d})", best)
-    wrappers = []
-    for p in here.glob("BENCH_r*.json"):
-        m = re.match(r"BENCH_r(\d+)\.json$", p.name)
-        if m:
-            wrappers.append((int(m.group(1)), p))
-    for _, p in sorted(wrappers, reverse=True):
-        try:
-            data = json.loads(p.read_text())
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        parsed = data.get("parsed")
-        if isinstance(parsed, dict) and parsed.get("sf") == sf \
-                and "queries" in parsed:
-            return (p.name, parsed)
-        if data.get("sf") == sf:
-            rec = _reconstruct_from_tail(data)
-            if rec is not None:
-                return (p.name, rec)
-    return None
 
 
 if __name__ == "__main__":

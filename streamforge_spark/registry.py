@@ -68,22 +68,6 @@ def _apply_oracle_casts() -> None:
                          f"FROM (\n{raw}\n) __oracle_cast")
 
 
-def source_hash(name: str) -> str:
-    """Stable hash of a query's registered function source plus its
-    RAW oracle SQL.  ``bench.py`` keys its recorded per-query timings
-    on it (``qhash``), so a timing is reused only while neither half
-    has changed."""
-    import hashlib
-    import inspect
-    fn = QUERIES[name]
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):  # source unavailable (REPL/lambda)
-        src = fn.__qualname__
-    blob = src + "\n--oracle--\n" + RAW_ORACLES.get(name, "")
-    return hashlib.sha256(blob.encode()).hexdigest()
-
-
 def load_all() -> None:
     """Import every query module, apply the oracle dtype casts and
     assert every query has an oracle.  Idempotent."""
