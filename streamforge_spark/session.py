@@ -45,22 +45,30 @@ RUNTIME_CONF: dict[str, str] = {
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask, as ``nproc`` counts them — not the host's total)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
-def get_spark(app_name: str = "streamforge-spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "streamforge-spark") -> SparkSession:
     """Build a local session shaped like the target cluster.
 
     ``local[$SPARK_GRAFT_CPUS]`` here; on a cluster only ``master`` and
     executor sizing change — the engine itself is partition-count
     agnostic (AQE coalesces).
+
+    Shuffle partitions are 2 × cores with no floor: AQE coalesces batch
+    stages, but a stateful streaming operator keeps one state store per
+    shuffle partition, each committed every batch and never coalesced,
+    for the checkpoint's whole life (a restart restores the count from
+    the offset log), so each partition beyond the cores is pure
+    per-task and per-commit overhead.
     """
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(2 * cpus, 32)))
+        .config("spark.sql.shuffle.partitions", str(2 * cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")

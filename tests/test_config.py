@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
 from streamforge_spark.config import ScopedConfig
+from streamforge_spark.session import default_parallelism
 
 
 @pytest.fixture()
@@ -88,3 +90,16 @@ def test_registry_rejects_unoracled_registration():
     finally:
         del registry.QUERIES["_test_unoracled_q"]
     registry._assert_all_oracled()   # clean again after removal
+
+
+def test_default_parallelism_counts_usable_cpus(monkeypatch):
+    """With ``SPARK_GRAFT_CPUS`` unset the session sizes from the CPUs
+    the process may run on (its affinity mask, as ``nproc`` counts),
+    not the host's total: a CPU-pinned container must not size its
+    shuffle partitions from cores it cannot use."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    assert default_parallelism() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert default_parallelism() == 5

@@ -100,8 +100,18 @@ def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
     id: ``out`` and ``dlq_schema`` (one stateful query fanning out per
     batch id) hold exactly the rows of one clean run over both files,
     and the job starts 2 queries — the chain and the parse DLQ — that
-    hold 2 stateful operators between them (dedup and merger, once)."""
+    hold 2 stateful operators between them (dedup and merger, once).
+    The first run starts its checkpoint under 32 shuffle partitions:
+    the restart and the replay keep 32 state partitions per operator
+    (Spark restores the count from the offset log), while the clean
+    run's fresh checkpoint starts with 2 x cores."""
+    from streamforge_spark.session import default_parallelism
     started = started_queries(monkeypatch)
+
+    def partitions(queries) -> list[int]:
+        return [op["numShufflePartitions"]
+                for op in queries[0].lastProgress["stateOperators"]]
+
     first = [
         env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),
         env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),   # dup
@@ -129,8 +139,14 @@ def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
     assert sum(len(q.lastProgress["stateOperators"])
                for q in started[0]) == 2
 
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
     write_lines(tmp_path / "in", first)
-    run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    spark.conf.set(key, "32")
+    try:
+        run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    finally:
+        spark.conf.set(key, default)
     write_lines(tmp_path / "in", second, name="batch1.txt")
     run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
     last = trim_commits(tmp_path / "ckpt" / "egress")
@@ -141,6 +157,8 @@ def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
     assert got == want
     assert read(spark, tmp_path, "dlq_parse").count() == 1
     assert [len(qs) for qs in started] == [2, 2, 2, 2]
+    assert [partitions(qs) for qs in started] == \
+        [[2 * default_parallelism()] * 2] + [[32, 32]] * 3
 
 
 def test_mongo_to_kafka_runs_no_idle_batch(spark, tmp_path, monkeypatch):
