@@ -114,11 +114,6 @@ def kmeans_assignments(emb: DataFrame, *, k: int = 8, rounds: int = 3,
     return assigned.select(F.col("_id").alias(id_col), "cluster")
 
 
-def cluster_sizes(assignments: DataFrame) -> DataFrame:
-    """(cluster, n) — one tiny aggregate over the assignment output."""
-    return assignments.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-
-
 def gram_matrix(emb: DataFrame, *, id_col: str = "vec_id",
                 vec_col: str = "embedding",
                 quant: int = KMEANS_QUANT) -> DataFrame:

@@ -50,7 +50,3 @@ def lit_int_array(xs: Iterable[int]) -> Column:
     return F.expr(
         "array(" + ", ".join(str(int(x)) for x in xs) + ")")
 
-
-def cols_array(names: Iterable[str]) -> Column:
-    """``F.array(*[F.col(n) for n in names])`` in one parse."""
-    return F.expr("array(" + ", ".join(names) + ")")

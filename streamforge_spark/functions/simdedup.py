@@ -68,16 +68,6 @@ def hash60_spark_sql(expr: str, salt: str | None = None) -> str:
     return f"CAST(conv(substr(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def minhash_min_agg_exprs(num_perm: int = NUM_PERM,
-                          gram_col: str = "g") -> list:
-    """``min(hash60(salt_p : g)) AS h<p>`` aggregate Columns for the
-    explode+groupBy signature shape — one parsed expression per
-    permutation (r12 driver-side construction cost; same bits as the
-    F.min(oracle_hash60(...)) form they replace)."""
-    return [F.expr(f"min({hash60_spark_sql(gram_col, str(p))}) AS h{p}")
-            for p in range(num_perm)]
-
-
 def minhash_sig_agg_expr(num_perm: int = NUM_PERM,
                          gram_col: str = "g") -> Column:
     """The whole signature as ONE aggregate expression:

@@ -417,76 +417,6 @@ def int8_quantize(emb: DataFrame, *, id_col: str = "vec_id",
             .select(F.col(id_col), F.transform(v, qx).alias("qvec")))
 
 
-def build_ivf_index(emb: DataFrame, path: str, *, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    n_centroids: int = 16) -> dict:
-    """Persist an IVF index: trained centroids plus cell-partitioned
-    vector assignments, as two parquet tables under ``path`` — the
-    index LIFECYCLE (build once offline, query many times online)
-    that the in-query `ann_ivf_topk` collapses into one plan.
-
-    The assignment table is hive-partitioned on ``cell``, so a query
-    probing ``nprobe`` cells reads exactly those directories
-    (PartitionFilters) — at 10⁹ vectors a 3-cell probe touches
-    3/n_centroids of the corpus bytes, before any scoring.
-    """
-    import numpy as np
-    spark = emb.sparkSession
-    cents = train_ivf_centroids(emb, id_col=id_col, vec_col=vec_col,
-                                n_centroids=n_centroids)
-    C = np.array(cents, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(C)
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def assign(batches):
-        Cm = bc.value
-        for pdf in batches:
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = (V * V).sum(1)[:, None] - 2 * V @ Cm.T \
-                + (Cm * Cm).sum(1)[None, :]
-            yield pd.DataFrame({
-                id_col: pdf[id_col], vec_col: pdf[vec_col],
-                "cell": d2.argmin(1).astype("int64")})
-
-    schema = T.StructType(list(emb.select(id_col, vec_col).schema.fields)
-                          + [T.StructField("cell", T.LongType())])
-    (emb.select(id_col, vec_col).mapInPandas(assign, schema)
-     .write.partitionBy("cell").mode("overwrite")
-     .parquet(f"{path.rstrip('/')}/vectors"))
-    cent_rows = [(int(i), [float(x) for x in row]) for i, row in enumerate(C)]
-    spark.createDataFrame(cent_rows, f"cell long, centroid array<double>") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path.rstrip('/')}/centroids")
-    return {"n_centroids": int(C.shape[0]), "path": path}
-
-
-def query_ivf_index(spark, path: str, query_vec, k: int = 10, *,
-                    nprobe: int = 3, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Serve a top-k query from a persisted IVF index: pick the
-    ``nprobe`` nearest centroids driver-side (centroid table is tiny),
-    push ``cell IN (...)`` into the partitioned vector scan, and score
-    only those cells (exact cosine within the probed subset).
-    """
-    import numpy as np
-    q = np.asarray(query_vec, dtype=np.float64)
-    cents = spark.read.parquet(f"{path.rstrip('/')}/centroids").collect()
-    C = np.array([r.centroid for r in cents], dtype=np.float64)
-    ids = np.array([r.cell for r in cents])
-    d2 = ((C - q[None, :]) ** 2).sum(1)
-    probe_cells = [int(c) for c in ids[np.argsort(d2)[:nprobe]]]
-    vecs = (spark.read.parquet(f"{path.rstrip('/')}/vectors")
-            .where(F.col("cell").isin(probe_cells)))
-    from streamforge_spark.functions.exprs import lit_double_array
-    qlit = lit_double_array(q)
-    return (vecs.select(id_col, "cell",
-                        cosine(F.col(vec_col).cast("array<double>"), qlit)
-                        .alias("cos"))
-            .orderBy(F.col("cos").desc(), id_col)
-            .limit(k))
-
-
 def ann_ivf_probe_scores(emb: DataFrame, query_ids, *,
                          cells: int = 16, rounds: int = 2,
                          max_nprobe: int = 4,

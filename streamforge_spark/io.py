@@ -94,12 +94,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql()."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def write_bucketed(df: DataFrame, table: str, key: str, buckets: int,
                    path: str) -> None:
     """Persist a table bucketed + sorted on its join key, so every

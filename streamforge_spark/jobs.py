@@ -27,7 +27,6 @@ from pyspark.sql import types as T
 
 from streamforge_spark.config import ScopedConfig
 from streamforge_spark.envelope import parse_stream_envelop
-from streamforge_spark.operators.dedup import deduplicator  # noqa: F401 (batch analog)
 from streamforge_spark.operators.filters import filter_interceptor
 from streamforge_spark.operators.joins import dynamic_joiner, static_joiner
 from streamforge_spark.operators.processors import stamp_processor
@@ -425,98 +424,19 @@ _DOC_SCHEMA = T.StructType([
     T.StructField("embedding", T.ArrayType(T.DoubleType())),
 ])
 
-def _parse_corpus_docs(raw: DataFrame, job_name: str):
-    """Shared corpus-document parse contract: newline-JSON lines ->
+def _parse_corpus_docs(raw: DataFrame):
+    """Corpus-document parse contract: newline-JSON lines ->
     (docs, parse_dlq).  One place owns the schema, the validity
-    predicate, and the DLQ shape for both ingest jobs (review-r8:
-    the two inline copies could silently diverge)."""
+    predicate, and the DLQ shape."""
     from streamforge_spark.pipeline import dlq_event
     parsed = raw.withColumn("doc", F.from_json("value", _DOC_SCHEMA))
     valid = (F.col("doc").isNotNull() & F.col("doc.doc_id").isNotNull()
              & F.col("doc.text").isNotNull())
     docs = parsed.filter(valid).select("doc.*")
     dlq = dlq_event(parsed.filter(~valid), "PARSE_ERROR",
-                    "corpus document parse failure", job_name,
+                    "corpus document parse failure", "CorpusIngestV2",
                     raw_event=F.col("value"))
     return docs, dlq
-
-
-CORPUS_QUALITY_MIN = 0.5
-CORPUS_DECON_NGRAM = 4
-
-
-@stream_job("CorpusIngest")
-def corpus_ingest(spark: SparkSession, cfg: ScopedConfig):
-    """The LLM-training-data production pipeline as a named streaming
-    job (the 8th job, beyond the reference's seven): newline-JSON
-    documents in -> parse (poison -> DLQ) -> exact dedup within the
-    watermark horizon (content digest, first-seen-wins) -> quality
-    gate (functions/text.py::quality_score, fails -> quarantine) ->
-    benchmark decontamination gate (shared word-n-grams with the
-    static bench set -> quarantine) -> stamped parquet corpus.
-
-    Decontamination gates the stream with a stream-static broadcast
-    semi/anti join against the folded bench shingle set (one array
-    row, built and shipped Spark-side — the driver never holds a
-    shingle); a bench set too big even to broadcast swaps in the
-    exploded equi-join variant
-    (streaming/curation.py::streaming_contamination) without touching
-    the chain. Config: BENCH_PATH (optional newline-text file of bench
-    docs), SOURCE_PATH, OUTPUT_PATH, CHECKPOINT_DIR.
-
-    Every stage is stateless column algebra except the watermark-scoped
-    dedup — state is bounded by the TTL horizon, sinks are append-only
-    parquet, and replays are harmless (same digest dedups again)."""
-    from streamforge_spark.functions.text import quality_score, word_ngrams
-
-    raw = _maybe_from_now(
-        file_stream(spark, cfg.require("SOURCE_PATH"), _RAW_SCHEMA,
-                    fmt="text"), cfg)
-    docs, parse_dlq = _parse_corpus_docs(raw, "CorpusIngest")
-    docs = docs.withColumn(
-        "event_time", F.coalesce("event_time", F.current_timestamp()))
-
-    docs = docs.withColumn("fp", F.md5("text"))
-    docs = streaming_dedup(docs, ["fp"], "event_time", ttl="10 minutes")
-
-    q = quality_score(F.col("text"), F.length("text"))
-    docs = docs.withColumn("quality", q)
-    low_q = docs.filter(F.col("quality") < CORPUS_QUALITY_MIN)
-    docs = docs.filter(F.col("quality") >= CORPUS_QUALITY_MIN)
-
-    bench_path = cfg.get("BENCH_PATH")
-    if bench_path:
-        # derive bench shingles with the SAME column function the gate
-        # applies to the stream — one tokenizer, no drift risk between
-        # a hand-rolled python copy and word_ngrams — and keep the set
-        # OFF the driver: the shingles fold to one array row that
-        # BROADCASTS to the executors (stream-static broadcast
-        # semi/anti join), instead of a driver collect + literal array
-        # that ships the whole set inside the serialized plan on every
-        # micro-batch and caps out at plan-size limits long before a
-        # real eval suite does.  Same split semantics as before:
-        # semi = any shared shingle, anti = none.
-        bench = (spark.read.text(bench_path)
-                 .select(F.explode(
-                     word_ngrams(F.col("value"), CORPUS_DECON_NGRAM))
-                     .alias("g"))
-                 .agg(F.collect_set("g").alias("bench_gs")))
-        gated = docs.withColumn(
-            "gs", word_ngrams(F.col("text"), CORPUS_DECON_NGRAM))
-        overlap = F.arrays_overlap(F.col("gs"), F.col("bench_gs"))
-        contaminated = (gated.join(F.broadcast(bench), overlap, "left_semi")
-                        .drop("gs"))
-        clean = (gated.join(F.broadcast(bench), overlap, "left_anti")
-                 .drop("gs"))
-    else:
-        contaminated = docs.filter(F.lit(False))
-        clean = docs
-    clean = clean.withColumn("ingested_at", F.current_timestamp())
-
-    return [_sink(clean, cfg, "corpus"),
-            _sink(low_q, cfg, "quarantine_quality"),
-            _sink(contaminated, cfg, "quarantine_contaminated"),
-            _sink(parse_dlq, cfg, "dlq_parse")]
 
 
 FUNNEL_VERDICTS = ("gopher", "oov", "substring", "fuzzy", "semantic",
@@ -574,8 +494,7 @@ def _load_funnel_store(spark: SparkSession, cfg: ScopedConfig) -> dict:
 @stream_job("CorpusIngestV2")
 def corpus_ingest_v2(spark: SparkSession, cfg: ScopedConfig):
     """The composed online curation funnel as the production ingest
-    job (the corpus_ingest successor the r7 verdict asked for):
-    newline-JSON documents in -> parse (poison -> DLQ) -> gopher
+    job: newline-JSON documents in -> parse (poison -> DLQ) -> gopher
     quality gate -> vocabulary OOV gate -> exact-substring
     contamination gate -> fuzzy near-dup gate -> semantic (embedding)
     near-dup gate -> DSIR admission weighting -> per-verdict parquet
@@ -682,6 +601,22 @@ def corpus_ingest_v2(spark: SparkSession, cfg: ScopedConfig):
     token_budget = int(budget_raw) if budget_raw is not None else None
     budget_ledger = cfg.get("BUDGET_LEDGER_PATH") or f"{out}/budget_ledger"
 
+    # a parquet file sink's _spark_metadata manifest makes readers see
+    # only the files it lists, so rows appended beside it would vanish
+    from streamforge_spark.streaming.recovery import _hadoop_fs
+    appended = [f"{out}/{sub}" for sub in (
+        "corpus", "dlq_parse", "funnel_metrics", "quarantine_budget",
+        "ivf_staleness", "bench_integrity",
+        *(f"quarantine_{v}" for v in FUNNEL_VERDICTS))] + [budget_ledger]
+    for path in appended:
+        fs, _JPath, meta = _hadoop_fs(spark, f"{path}/_spark_metadata")
+        if fs.exists(meta):
+            raise RuntimeError(
+                f"{path} holds a file sink's '_spark_metadata', which "
+                f"hides the files CorpusIngestV2 appends; start from an "
+                f"empty output dir and a new checkpoint "
+                f"(docs/RECOVERY.md §1)")
+
     raw = _maybe_from_now(
         file_stream(spark, cfg.require("SOURCE_PATH"), _RAW_SCHEMA,
                     fmt="text"), cfg)
@@ -694,7 +629,7 @@ def corpus_ingest_v2(spark: SparkSession, cfg: ScopedConfig):
     # the gates themselves, and it also picks up model refits without
     # a job restart
     def produce(batch_raw: DataFrame, batch_id: int) -> None:
-        docs, parse_dlq = _parse_corpus_docs(batch_raw, "CorpusIngestV2")
+        docs, parse_dlq = _parse_corpus_docs(batch_raw)
         (parse_dlq.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(f"{out}/dlq_parse"))
 

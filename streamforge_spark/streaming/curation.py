@@ -1,12 +1,14 @@
-"""Streaming corpus curation: incremental benchmark decontamination.
+"""Streaming corpus curation: the online gates of the ingest funnel,
+plus per-stream admission operators (token budget, rate limit, chunk
+packing).
 
-The batch form (queries/curation.py::contamination_check) scans the
-whole corpus; in production new documents ARRIVE — this is the same
-check as a stream-static join: the benchmark shingle set is static and
-tiny (MBs of eval text), so it broadcasts into every micro-batch and
-the document stream never shuffles for the join. Per-doc counts run in
-update mode (each doc's shingles arrive within one batch; the state is
-one counter per contaminated doc).
+The batch forms (queries/curation.py) scan the whole corpus; in
+production new documents ARRIVE.  The model-backed gates check the
+document stream against a static or persisted reference (benchmark text,
+vocabulary, substring / MinHash / IVF index, DSIR model) joined into
+every micro-batch, so history is never re-scanned.
+``corpus_funnel_verdicts`` composes the gates into the per-batch
+verdict core that CorpusIngestV2 runs.
 """
 
 from __future__ import annotations
@@ -16,28 +18,6 @@ from pyspark.sql import functions as F
 
 from streamforge_spark.functions.exprs import lit_double_array
 from streamforge_spark.functions.text import word_ngrams
-
-
-def benchmark_grams(bench_docs: DataFrame, text_col: str = "text",
-                    ngram: int = 4) -> DataFrame:
-    """Distinct shingles of the (static) benchmark set."""
-    return (bench_docs
-            .select(F.explode(word_ngrams(F.col(text_col), ngram)).alias("g"))
-            .distinct())
-
-
-def streaming_contamination(doc_stream: DataFrame, bench: DataFrame,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            ngram: int = 4) -> DataFrame:
-    """(doc_id, n_shared_grams) for streamed documents overlapping the
-    broadcast benchmark shingle set — emit-on-update; downstream routes
-    contaminated ids to a quarantine sink."""
-    grams = doc_stream.select(
-        F.col(id_col),
-        F.explode(word_ngrams(F.col(text_col), ngram)).alias("g"))
-    return (grams.join(F.broadcast(bench), "g")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_shared_grams")))
 
 
 def streaming_token_budget(doc_stream: DataFrame, *, budget: int,
@@ -1011,8 +991,8 @@ def streaming_semantic_dedup_gate(vec_stream: DataFrame,
     are the cell probe join and the per-vector verdict rollup.  The
     persisted corpus layout is hive-partitioned on cell; the
     stream-static join itself hashes on the cell id (join-key
-    pruning needs a driver-known probe set — query_ivf_index's
-    explicit IN-list path — so at corpus scale bound the scan by
+    pruning needs a driver-known probe set, i.e. an explicit
+    ``cell IN (...)`` filter — so at corpus scale bound the scan by
     filtering corpus_vecs to the micro-batch's cell union in
     foreachBatch, or accept the full-index scan per batch).
 

@@ -419,97 +419,6 @@ def doc_line(doc_id, text, source="web", t="2024-01-01 10:00:00",
     return json.dumps(d)
 
 
-def test_corpus_ingest_job(spark, tmp_path):
-    good = ("a decent length document about spark engines and data "
-            "processing pipelines with many useful words appearing here "
-            "and continuing long enough to clear the quality threshold "
-            "for ingestion into the training corpus today")
-    write_lines(tmp_path / "in", [
-        doc_line(1, good),
-        doc_line(2, good),                       # exact duplicate of 1
-        doc_line(3, "!!! ??? ..."),              # low quality
-        doc_line(4, good + " benchmark secret answer tokens xyz"),
-        "not json at all {",                     # poison -> DLQ
-    ])
-    write_lines(tmp_path / "bench", ["benchmark secret answer tokens xyz"],
-                name="bench.txt")
-    run_job("CorpusIngest",
-            job_cfg(tmp_path, BENCH_PATH=tmp_path / "bench"),
-            spark=spark, drain=True)
-    kept = sorted(r.doc_id for r in read(spark, tmp_path, "corpus").collect())
-    assert kept == [1]
-    assert [r.doc_id for r in read(spark, tmp_path, "quarantine_quality").collect()] == [3]
-    assert [r.doc_id for r in read(spark, tmp_path, "quarantine_contaminated").collect()] == [4]
-    dlq = read(spark, tmp_path, "dlq_parse").collect()
-    assert len(dlq) == 1 and dlq[0].error_type == "PARSE_ERROR"
-
-
-def test_corpus_ingest_decon_gate_broadcasts(spark, tmp_path):
-    # the decontamination gate must be a stream-static BROADCAST
-    # semi/anti join against the folded bench shingle set — never a
-    # driver-side collect inlined as a literal array (plan-size-bound,
-    # re-shipped per micro-batch, and invisible to Spark's broadcast
-    # memory accounting)
-    from streamforge_spark.launcher import JOB_REGISTRY
-    good = ("a decent length document about spark engines and data "
-            "processing pipelines with many useful words appearing here "
-            "and continuing long enough to clear the quality threshold "
-            "for ingestion into the training corpus today")
-    write_lines(tmp_path / "in", [doc_line(1, good)])
-    write_lines(tmp_path / "bench", ["benchmark secret answer tokens xyz"],
-                name="bench.txt")
-    cfg = job_cfg(tmp_path, BENCH_PATH=tmp_path / "bench")
-    cfg.activate_job("CorpusIngest")
-    queries = JOB_REGISTRY["CorpusIngest"](spark, cfg)
-    try:
-        for q in queries:
-            q.processAllAvailable()
-        plans = [q._jsq.explainInternal(True) for q in queries]
-    finally:
-        for q in queries:
-            q.stop()
-    gate = [p for p in plans if "arrays_overlap" in p]
-    assert len(gate) == 2, "expected a semi (quarantine) and an anti (clean) gate"
-    assert any("LeftSemi" in p for p in gate)
-    assert any("LeftAnti" in p for p in gate)
-    for p in gate:
-        assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-        # the bench set must arrive via collect_set aggregation on the
-        # static side, not as an inlined literal array of shingles
-        assert "collect_set" in p
-        assert "benchmark secret" not in p
-
-
-def test_corpus_ingest_empty_text_quarantined_not_crashing(spark, tmp_path):
-    # empty (but valid-JSON) text must flow to the quality quarantine —
-    # under ANSI mode a naive punct/chars ratio would DIVIDE_BY_ZERO
-    # and kill the whole micro-batch
-    write_lines(tmp_path / "in", [doc_line(7, "")])
-    run_job("CorpusIngest", job_cfg(tmp_path), spark=spark, drain=True)
-    assert read(spark, tmp_path, "corpus").count() == 0
-    assert [r.doc_id for r in
-            read(spark, tmp_path, "quarantine_quality").collect()] == [7]
-
-
-def test_corpus_ingest_checkpoint_recovery_no_duplicates(spark, tmp_path):
-    # restart-with-same-checkpoint must process ONLY new source files
-    # and never duplicate already-ingested corpus rows (file-sink
-    # manifest + source offsets in the checkpoint)
-    good = ("a decent length document about spark engines and data "
-            "processing pipelines with many useful words appearing here "
-            "and continuing long enough to clear the quality threshold "
-            "for ingestion into the training corpus today")
-    write_lines(tmp_path / "in", [doc_line(1, good)])
-    run_job("CorpusIngest", job_cfg(tmp_path), spark=spark, drain=True)
-    assert [r.doc_id for r in read(spark, tmp_path, "corpus").collect()] == [1]
-    # second run, same checkpoint: one new file, one new doc
-    write_lines(tmp_path / "in", [doc_line(2, good + " extra tail")],
-                name="batch1.txt")
-    run_job("CorpusIngest", job_cfg(tmp_path), spark=spark, drain=True)
-    kept = sorted(r.doc_id for r in read(spark, tmp_path, "corpus").collect())
-    assert kept == [1, 2]
-
-
 def test_corpus_ingest_recover_flag_token_expiry(spark, tmp_path):
     # launcher --recover end-to-end: an expired corpus checkpoint
     # (pending batch references a deleted source file) is archived, a
@@ -519,28 +428,23 @@ def test_corpus_ingest_recover_flag_token_expiry(spark, tmp_path):
     import json
     import os
     import time
-    good = ("a decent length document about spark engines and data "
-            "processing pipelines with many useful words appearing here "
-            "and continuing long enough to clear the quality threshold "
-            "for ingestion into the training corpus today")
-    write_lines(tmp_path / "in", [doc_line(1, good)])
-    run_job("CorpusIngest", job_cfg(tmp_path), spark=spark, drain=True)
-    write_lines(tmp_path / "in", [doc_line(2, good + " extra tail")],
-                name="batch1.txt")
-    run_job("CorpusIngest", job_cfg(tmp_path), spark=spark, drain=True)
+    write_lines(tmp_path / "in", [_budget_doc(1, "a")])
+    run_job("CorpusIngestV2", job_cfg(tmp_path), spark=spark, drain=True)
+    write_lines(tmp_path / "in", [_budget_doc(2, "b")], name="batch1.txt")
+    run_job("CorpusIngestV2", job_cfg(tmp_path), spark=spark, drain=True)
     assert sorted(r.doc_id for r in
                   read(spark, tmp_path, "corpus").collect()) == [1, 2]
-    # token expiry on the corpus sink's checkpoint: last batch's
+    # token expiry on the funnel query's checkpoint: last batch's
     # commit + its source file vanish
-    ckpt = tmp_path / "ckpt" / "corpus"
-    # batch 1 read batch1.txt; later commits may be empty ticks — trim
-    # every commit from 1 on so batch 1 is pending again
+    ckpt = tmp_path / "ckpt" / "funnel"
+    # batch 1 read batch1.txt; trim every commit from 1 on so batch 1
+    # is pending again
     trim_commits(ckpt, 1)
     os.remove(tmp_path / "in" / "batch1.txt")
     # recover: report-and-continue — the gap row lands BEFORE the
     # resume makes the silent empty-replay invisible; the checkpoint
-    # and sink manifest stay intact (continuous batch ids)
-    run_job("CorpusIngest", job_cfg(tmp_path), spark=spark, drain=True,
+    # and the batch ledger stay intact (continuous batch ids)
+    run_job("CorpusIngestV2", job_cfg(tmp_path), spark=spark, drain=True,
             recover=True)
     assert sorted(r.doc_id for r in
                   read(spark, tmp_path, "corpus").collect()) == [1, 2]
@@ -549,13 +453,12 @@ def test_corpus_ingest_recover_flag_token_expiry(spark, tmp_path):
     assert len(reports) == 1 and reports[0]["kind"] == "cdc_token_expired"
     assert reports[0]["policy"] == "skip-lost-files"
     assert "batch1.txt" in reports[0]["error"]
-    assert not glob.glob(str(tmp_path / "ckpt" / "corpus.expired-*"))
+    assert not glob.glob(str(tmp_path / "ckpt" / "funnel.expired-*"))
     # new data flows normally; a second --recover run is clean (the
     # empty replay committed over the hole, nothing left pending)
     time.sleep(0.2)
-    write_lines(tmp_path / "in", [doc_line(3, good + " more words")],
-                name="batch2.txt")
-    run_job("CorpusIngest", job_cfg(tmp_path), spark=spark, drain=True,
+    write_lines(tmp_path / "in", [_budget_doc(3, "c")], name="batch2.txt")
+    run_job("CorpusIngestV2", job_cfg(tmp_path), spark=spark, drain=True,
             recover=True)
     assert sorted(r.doc_id for r in
                   read(spark, tmp_path, "corpus").collect()) == [1, 2, 3]
@@ -568,17 +471,12 @@ def test_recover_from_now_us_manual_cut(spark, tmp_path):
     # cut never ingest; files modified after it do (exact micros, no
     # float wobble)
     import time
-    good = ("a decent length document about spark engines and data "
-            "processing pipelines with many useful words appearing here "
-            "and continuing long enough to clear the quality threshold "
-            "for ingestion into the training corpus today")
-    write_lines(tmp_path / "in", [doc_line(1, good)])
+    write_lines(tmp_path / "in", [_budget_doc(1, "a")])
     time.sleep(0.6)
     cut_us = int(time.time() * 1e6)
     time.sleep(0.6)
-    write_lines(tmp_path / "in", [doc_line(2, good + " extra tail")],
-                name="batch1.txt")
-    run_job("CorpusIngest",
+    write_lines(tmp_path / "in", [_budget_doc(2, "b")], name="batch1.txt")
+    run_job("CorpusIngestV2",
             job_cfg(tmp_path, RECOVER_FROM_NOW_US=cut_us),
             spark=spark, drain=True)
     kept = sorted(r.doc_id for r in
@@ -694,6 +592,9 @@ def test_corpus_ingest_v2_funnel_composition(spark, tmp_path):
     E1, E2, docs = _funnel_fixture()
     _funnel_artifacts(spark, tmp_path,
                       [(1, E1, "raw"), (2, E2, "tgt")])
+    # empty text: gopher counts split("", " ") as one word, so the
+    # gate quarantines it instead of dividing by zero
+    docs[407] = ""
     write_lines(tmp_path / "in",
                 [doc_line(i, t) for i, t in sorted(docs.items())]
                 + ["not json at all {"])
@@ -702,16 +603,16 @@ def test_corpus_ingest_v2_funnel_composition(spark, tmp_path):
 
     assert sorted(r.doc_id for r in
                   read(spark, tmp_path, "corpus").collect()) == [405, 406]
-    for verdict, doc_id in [("gopher", 401), ("oov", 402),
-                            ("substring", 403), ("fuzzy", 400),
-                            ("dsir", 404)]:
+    for verdict, doc_ids in [("gopher", [401, 407]), ("oov", [402]),
+                             ("substring", [403]), ("fuzzy", [400]),
+                             ("dsir", [404])]:
         got = read(spark, tmp_path, f"quarantine_{verdict}").collect()
-        assert [r.doc_id for r in got] == [doc_id], verdict
+        assert sorted(r.doc_id for r in got) == doc_ids, verdict
     dlq = read(spark, tmp_path, "dlq_parse").collect()
     assert len(dlq) == 1 and dlq[0].error_type == "PARSE_ERROR"
     metrics = {r.verdict: r.n_docs for r in
                read(spark, tmp_path, "funnel_metrics").collect()}
-    assert metrics == {"admit": 2, "gopher": 1, "oov": 1,
+    assert metrics == {"admit": 2, "gopher": 2, "oov": 1,
                        "substring": 1, "fuzzy": 1, "dsir": 1}
 
     # streamed verdicts == one batch call of the shared verdict core
@@ -1370,6 +1271,18 @@ def test_corpus_ingest_v2_poison_only_batch(spark, tmp_path):
     assert len(dlq) == 2
     assert all(r.error_type == "PARSE_ERROR" for r in dlq)
     assert read(spark, tmp_path, "corpus").count() == 0
+
+
+def test_corpus_ingest_v2_refuses_file_sink_output(spark, tmp_path):
+    """A parquet file sink's ``_spark_metadata`` in a directory the job
+    appends to would hide every appended row from readers, so the job
+    refuses to start there."""
+    write_lines(tmp_path / "in", [_budget_doc(1, "a")])
+    (tmp_path / "out" / "corpus" / "_spark_metadata").mkdir(parents=True)
+    with pytest.raises(RuntimeError, match="_spark_metadata"):
+        run_job("CorpusIngestV2", job_cfg(tmp_path), spark=spark,
+                drain=True)
+    assert not (tmp_path / "ckpt").exists()
 
 
 # -- CorpusIngestV2: per-source token-budget admission --------------------

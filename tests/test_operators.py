@@ -973,33 +973,6 @@ def test_pseudonymize_stable_tokens_and_vault_joinback(spark):
     assert {r.user_id for r in tok2.collect()} != {r.user_id for r in tok.collect()}
 
 
-def test_ivf_index_build_query_lifecycle(spark, tmp_path):
-    from streamforge_spark.functions.similarity import (
-        build_ivf_index, query_ivf_index)
-    from streamforge_spark.io import load
-    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = str(tmp_path / "ivf")
-    info = build_ivf_index(emb, idx, n_centroids=8)
-    assert info["n_centroids"] == 8
-    # partition layout: cell directories exist -> probe prunes at read
-    import os
-    cells = [d for d in os.listdir(f"{idx}/vectors") if d.startswith("cell=")]
-    assert len(cells) >= 4
-    qv = emb.where(F.col("vec_id") == 3).collect()[0].embedding
-    top = query_ivf_index(spark, idx, qv, k=5, nprobe=3).collect()
-    assert len(top) == 5
-    # the query vector's own id must be its nearest neighbor (cos=1)
-    assert top[0].vec_id == 3 and abs(top[0].cos - 1.0) < 1e-9
-    # probing ALL cells == brute force over the index (recall sanity)
-    full = query_ivf_index(spark, idx, qv, k=5, nprobe=8).collect()
-    assert {r.vec_id for r in top} <= {r.vec_id for r in full} | {r.vec_id for r in top}
-    # plan: the probed read must carry a partition filter on cell
-    probed = (spark.read.parquet(f"{idx}/vectors")
-              .where(F.col("cell").isin([0, 1])))
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-
-
 def test_schema_migrator_chain(spark):
     from streamforge_spark.operators.quality import (
         SchemaMigration, schema_migrator,

@@ -404,39 +404,6 @@ def test_foreach_batch_es_upsert_doc_id_keyed(spark, workdir):
     assert docs == {"t1": "v2", "t2": "w1"}
 
 
-def test_streaming_contamination_matches_batch(spark, workdir):
-    # stream-static broadcast decontamination: streamed docs checked
-    # against a static benchmark shingle set, equal to the batch check
-    from streamforge_spark.streaming.curation import (
-        benchmark_grams, streaming_contamination)
-    DOCS = T.StructType([T.StructField("doc_id", T.LongType()),
-                         T.StructField("text", T.StringType())])
-    bench_rows = [(0, "the quick brown fox jumps over the dog")]
-    corpus_b1 = [(10, "a clean document with no overlap at all"),
-                 (11, "quick brown fox jumps straight home now")]   # shares 4-grams? no (shifted)
-    corpus_b2 = [(12, "the quick brown fox jumps over a fence")]    # shares 2
-    bench = benchmark_grams(spark.createDataFrame(bench_rows, DOCS))
-    src = f"{workdir}/docs"
-    spark.createDataFrame(corpus_b1, DOCS).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(DOCS).parquet(src)
-    out = streaming_contamination(stream, bench)
-    q = (out.writeStream.format("memory").queryName("contam_out")
-         .outputMode("update").start())
-    q.processAllAvailable()
-    spark.createDataFrame(corpus_b2, DOCS).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {r.doc_id: r.n_shared_grams
-           for r in spark.sql("select * from contam_out").collect()}
-    # batch reference on the same data
-    all_docs = spark.createDataFrame(corpus_b1 + corpus_b2, DOCS)
-    from streamforge_spark.functions.text import word_ngrams as wng
-    batch = (all_docs.select("doc_id", F.explode(wng(F.col("text"), 4)).alias("g"))
-             .join(bench, "g").groupBy("doc_id").count())
-    want = {r.doc_id: r["count"] for r in batch.collect()}
-    assert got == want and 12 in got
-
-
 def test_effectively_once_ledger_self_compacts(spark, workdir):
     import os
     from streamforge_spark.streaming.sinks import effectively_once
@@ -1692,6 +1659,15 @@ def test_ivf_index_append_equals_frozen_rebuild(spark, workdir):
     append_ivf_fixed_index(path, spark.createDataFrame(second, EMB))
     C1, vecs = load_ivf_fixed_index(spark, path)
     assert C1 == C0   # frozen: an append never moves cell boundaries
+    # postings are hive-partitioned on cell: a probe of some cells
+    # reads only their directories (PartitionFilters)
+    import os
+    import re
+    assert sorted(d for d in os.listdir(f"{path}/vectors")
+                  if d.startswith("cell=")) == ["cell=0", "cell=1"]
+    plan = (vecs.where(F.col("cell").isin([0]))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert re.search(r"PartitionFilters: \[[^\]]*cell", plan), plan
 
     # frozen rebuild: assign the UNION under the pre-append centroids
     # with the exact builder projection
