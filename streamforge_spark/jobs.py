@@ -4,13 +4,14 @@ streaming jobs (SPI registrations in META-INF/services/...StreamJob:1-7).
 Each job is a function ``(spark, cfg: ScopedConfig) -> list[StreamingQuery]``
 composing the engine's operators end-to-end: envelope sources in,
 pattern chain, sinks out (every parse/validate stage dual-outputs to a
-DLQ sink — the DLQPublisher channel as a first-class second output).
-Sources are newline-JSON envelope files streamed as micro-batches and
-sinks are parquet directories, so every job runs hermetically; the
-Kafka/Mongo/ES connectors swap in via ``streaming/sources.py`` /
-``streaming/sinks.py`` without touching the pattern chain — the same
-separation the reference gets from SourceBuilder/SinkBuilder injection
-(PipelineBuilder.java:47-78).
+DLQ — the DLQPublisher channel as a first-class second output; each
+envelope job is ONE query writing all its outputs per batch id,
+``_one_query``). Sources are newline-JSON envelope files streamed as
+micro-batches and sinks are parquet directories, so every job runs
+hermetically; the Kafka/Mongo/ES connectors swap in via
+``streaming/sources.py`` / ``streaming/sinks.py`` without touching
+the pattern chain — the separation the reference gets from
+SourceBuilder/SinkBuilder injection (PipelineBuilder.java:47-78).
 
 Config keys (ScopedConfig): SOURCE_PATH, SOURCE_PATH_SECONDARY,
 REFERENCE_PATH, REFERENCE_PATH_2, OUTPUT_PATH, CHECKPOINT_DIR.
@@ -40,8 +41,8 @@ from streamforge_spark.streaming.dedup import (
 )
 from streamforge_spark.streaming.materialize import streaming_materializer
 from streamforge_spark.streaming.sinks import (
-    BATCH_COL, check_batch_output, foreach_batch_upsert,
-    kafka_compacted_output, parquet_sink, split_sinks, write_batch,
+    BATCH_COL, check_batch_output, kafka_compacted_output, split_sinks,
+    union_sinks, upsert_batch, write_batch,
 )
 from streamforge_spark.streaming.sources import file_stream
 
@@ -91,9 +92,29 @@ def _envelopes(spark: SparkSession, cfg: ScopedConfig,
     return parse_stream_envelop(raw)
 
 
-def _sink(df: DataFrame, cfg: ScopedConfig, sub: str):
+def _one_query(spark: SparkSession, cfg: ScopedConfig,
+               branches: dict[str, DataFrame | None],
+               writers: dict[str, Callable] | None = None,
+               outputs: tuple[str, ...] = (), start=lambda w: w.start()):
+    """Start a job's one query, checkpointed under ``CHECKPOINT_DIR/
+    <first branch>``: the branches (None: an unconfigured DLQ) ride it
+    through ``union_sinks``, each one's rows going to ``writers[name]``,
+    else ``write_batch`` into ``OUTPUT_PATH/<name>``, behind
+    ``check_batch_output`` with ``outputs`` (the given writers' dirs)."""
     out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
-    return parquet_sink(df, f"{out}/{sub}", f"{ckpt}/{sub}").start()
+    branches = {n: df for n, df in branches.items() if df is not None}
+    writers = writers or {}
+    batch_dirs = [*outputs, *(n for n in branches if n not in writers)]
+    checkpoint = f"{ckpt}/{next(iter(branches))}"
+    check_batch_output(spark, [f"{out}/{n}" for n in batch_dirs], checkpoint)
+
+    def write(name: str):
+        return writers.get(name) or (lambda rows, batch_id: write_batch(
+            rows, f"{out}/{name}", batch_id))
+
+    return [start(union_sinks(branches).writeStream.outputMode("append")
+                  .foreachBatch(split_sinks({n: write(n) for n in branches}))
+                  .option("checkpointLocation", checkpoint))]
 
 
 def _maybe_migrate(env: DataFrame, cfg: ScopedConfig, source: str,
@@ -195,17 +216,15 @@ def mongo_to_kafka(spark: SparkSession, cfg: ScopedConfig):
     (key, content) entry expires once the watermark passes its event
     time plus 10 minutes, after which an unchanged payload re-emits.
 
-    The dedup and merger state lives in ONE stateful query (checkpoint
-    ``egress``): its ``foreachBatch`` persists the merged micro-batch,
-    splits it with the schema enforcer and writes both sides —
-    ``out`` and ``dlq_schema`` — through ``write_batch`` (per-batch-id
-    overwrite, exactly-once under replay), the way the reference's DLQ
-    outputs are side outputs of its one operator chain. Both of its
-    stateful operators are watermark dedups, which emit on arrival only,
-    so it runs data-bearing batches only (``start_without_idle_batches``):
-    eviction rides the next data batch. ``dlq_parse`` (and
-    ``dlq_migrate``) stay stateless parquet-sink queries."""
-    out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
+    The job is ONE stateful query (checkpoint ``egress``): ``dlq_parse``
+    and ``dlq_migrate`` ride it as branches, the reference's side
+    outputs of one operator chain, and the schema enforcer splits the
+    chain's rows into ``out`` and ``dlq_schema`` per batch id. Both
+    stateful operators are watermark dedups, which emit on arrival
+    only, so it runs data-bearing batches only
+    (``start_without_idle_batches``): eviction rides the next data
+    batch."""
+    out = cfg.require("OUTPUT_PATH")
     env, parse_dlq = _envelopes(spark, cfg)
     env = filter_interceptor(env, F.col("operation") != "unknown")
     # optional config-driven payload upcast chain — runs BEFORE the
@@ -221,30 +240,22 @@ def mongo_to_kafka(spark: SparkSession, cfg: ScopedConfig):
                            excluded_fields=("updatedAt", "modifiedAt"),
                            assign_watermark=False)
 
-    def fan_out(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
-            ok, schema_dlq = schema_enforcer(
-                batch, "payload_json",
-                [SchemaVersion("v1", required={"_id": "any"})],
-                source="MongoToKafka")
-            ok = stamp_processor(ok, deterministic_from=F.col("primary_key"))
-            write_batch(kafka_compacted_output(ok.drop("metadata"),
-                                               key_col="primary_key"),
-                        f"{out}/out", batch_id)
-            write_batch(schema_dlq, f"{out}/dlq_schema", batch_id)
-        finally:
-            batch.unpersist()
+    def egress(rows: DataFrame, batch_id: int) -> None:
+        ok, schema_dlq = schema_enforcer(
+            rows, "payload_json",
+            [SchemaVersion("v1", required={"_id": "any"})],
+            source="MongoToKafka")
+        ok = stamp_processor(ok, deterministic_from=F.col("primary_key"))
+        write_batch(kafka_compacted_output(ok.drop("metadata"),
+                                           key_col="primary_key"),
+                    f"{out}/out", batch_id)
+        write_batch(schema_dlq, f"{out}/dlq_schema", batch_id)
 
-    check_batch_output(spark, (f"{out}/out", f"{out}/dlq_schema"),
-                       f"{ckpt}/egress")
-    chain = start_without_idle_batches(
-        env.writeStream.outputMode("append").foreachBatch(fan_out)
-        .option("checkpointLocation", f"{ckpt}/egress"))
-    sinks = [chain, _sink(parse_dlq, cfg, "dlq_parse")]
-    if mig_dlq is not None:
-        sinks.append(_sink(mig_dlq, cfg, "dlq_migrate"))
-    return sinks
+    return _one_query(
+        spark, cfg,
+        {"egress": env, "dlq_parse": parse_dlq, "dlq_migrate": mig_dlq},
+        writers={"egress": egress}, outputs=("out", "dlq_schema"),
+        start=start_without_idle_batches)
 
 
 @stream_job("KafkaToMongo")
@@ -277,44 +288,36 @@ def kafka_to_mongo(spark: SparkSession, cfg: ScopedConfig):
                             name="_id")],
         source="KafkaToMongo")
     ok = stamp_processor(ok, deterministic_from=F.col("primary_key"))
-    out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
-    upsert = foreach_batch_upsert(
-        ok, f"{out}/table", ["primary_key"], ["event_time"],
-        f"{ckpt}/upsert", op_col="operation").start()
-    sinks = [upsert, _sink(parse_dlq, cfg, "dlq_parse"),
-             _sink(dlq, cfg, "dlq_constraint")]
-    if mig_dlq is not None:
-        sinks.append(_sink(mig_dlq, cfg, "dlq_migrate"))
-    return sinks
+    table = upsert_batch(f"{cfg.require('OUTPUT_PATH')}/table",
+                         ["primary_key"], ["event_time"], op_col="operation")
+    return _one_query(spark, cfg, {"upsert": ok, "dlq_parse": parse_dlq,
+                                   "dlq_constraint": dlq,
+                                   "dlq_migrate": mig_dlq},
+                      writers={"upsert": table})
 
 
 @stream_job("EventRouter")
 def event_router(spark: SparkSession, cfg: ScopedConfig):
     """Predicate routing to per-destination sinks (job/route/
     EventRouterJob.java:56-82): orders/payments -> ES-shaped sinks,
-    everything else -> the main Mongo-shaped sink. One foreachBatch
-    computes the route tag once and writes all three splits
-    (zero-copy fan-out), each per batch id so a replay never
-    duplicates rows."""
+    everything else -> the main Mongo-shaped sink. The route tag is
+    computed once, and the query's foreachBatch splits the tagged
+    branch by it into all three outputs (zero-copy fan-out), each per
+    batch id so a replay never duplicates rows."""
     env, parse_dlq = _envelopes(spark, cfg)
     tagged = routed(env, [("orders", F.col("source") == "orders"),
                           ("payments", F.col("source") == "payments")])
-    out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
+    out = cfg.require("OUTPUT_PATH")
     subs = {"orders": "es_orders", "payments": "es_payments",
             "main": "mongo_main"}
 
-    def route(batch: DataFrame, batch_id: int) -> None:
-        def write_to(sub: str):
-            return lambda df: write_batch(df, f"{out}/{sub}", batch_id)
+    def router(rows: DataFrame, batch_id: int) -> None:
+        for route, sub in subs.items():
+            write_batch(rows.filter(F.col("route") == route).drop("route"),
+                        f"{out}/{sub}", batch_id)
 
-        split_sinks(batch, {r: write_to(sub) for r, sub in subs.items()})
-
-    check_batch_output(spark, [f"{out}/{sub}" for sub in subs.values()],
-                       f"{ckpt}/router")
-    router = (tagged.writeStream.outputMode("append")
-              .foreachBatch(route)
-              .option("checkpointLocation", f"{ckpt}/router").start())
-    return [router, _sink(parse_dlq, cfg, "dlq_parse")]
+    return _one_query(spark, cfg, {"router": tagged, "dlq_parse": parse_dlq},
+                      writers={"router": router}, outputs=tuple(subs.values()))
 
 
 @stream_job("MergedIngest")
@@ -334,8 +337,8 @@ def merged_ingest(spark: SparkSession, cfg: ScopedConfig):
             spark, cfg, ("SOURCE_PATH", "SOURCE_PATH_SECONDARY")))
     merged = _with_meta(merged, "ingestSource", F.col("ingest_source"))
     merged = merged.drop("ingest_source")
-    return [_sink(merged, cfg, "merged"),
-            _sink(dlq1.unionByName(dlq2), cfg, "dlq_parse")]
+    return _one_query(spark, cfg, {"merged": merged,
+                                   "dlq_parse": dlq1.unionByName(dlq2)})
 
 
 @stream_job("OrderPaymentJoin")
@@ -358,8 +361,8 @@ def order_payment_join(spark: SparkSession, cfg: ScopedConfig):
         F.col("l.event_time").alias("order_time"),
         F.col("r.payload_json").alias("payment_payload"),
         F.col("r.event_time").alias("payment_time"))
-    return [_sink(out, cfg, "joined"),
-            _sink(dlq1.unionByName(dlq2), cfg, "dlq_parse")]
+    return _one_query(spark, cfg, {"joined": out,
+                                   "dlq_parse": dlq1.unionByName(dlq2)})
 
 
 @stream_job("UserStateMaterialize")
@@ -381,8 +384,8 @@ def user_state_materialize(spark: SparkSession, cfg: ScopedConfig):
             F.col("before"), F.col("after"))).alias("payload_json"),
         F.col("ts").alias("event_time"),
         F.col("key").alias("primary_key"))
-    return [_sink(wrapped, cfg, "changelog"),
-            _sink(parse_dlq, cfg, "dlq_parse")]
+    return _one_query(spark, cfg, {"changelog": wrapped,
+                                   "dlq_parse": parse_dlq})
 
 
 @stream_job("UserSessionAnalysis")
@@ -410,8 +413,8 @@ def user_session_analysis(spark: SparkSession, cfg: ScopedConfig):
             F.col("ops"))).alias("payload_json"),
         F.col("session_end").alias("event_time"),
         F.col("primary_key"))
-    return [_sink(wrapped, cfg, "sessions"),
-            _sink(parse_dlq, cfg, "dlq_parse")]
+    return _one_query(spark, cfg, {"sessions": wrapped,
+                                   "dlq_parse": parse_dlq})
 
 
 _DOC_SCHEMA = T.StructType([
@@ -1123,8 +1126,7 @@ def dlq_replay(spark: SparkSession, cfg: ScopedConfig):
 
     The DLQ itself is never rewritten: the reference's DLQ is a Kafka
     topic — an immutable log you consume, not a table you edit — and
-    the parquet twin is a streaming-sink-owned dir (a ``_spark_metadata``
-    manifest, or per-batch-id dirs) that batch rewrites would corrupt.
+    the parquet twin is per-batch-id dirs a streaming query owns.
     Already-recovered rows are excluded by anti-joining the ledger on
     the raw_event hash, so the pool shrinks logically run over run
     while the log stays intact (still-failing rows simply re-grade —
@@ -1288,7 +1290,7 @@ def snapshot_handoff(spark: SparkSession, cfg: ScopedConfig):
         EVENT_RANK, POS_COL, RANK_COL, bootstrap_snapshot,
     )
 
-    out, ckpt = cfg.require("OUTPUT_PATH"), cfg.require("CHECKPOINT_DIR")
+    out = cfg.require("OUTPUT_PATH")
     src = cfg.require("SOURCE_PATH")
     n_chunks = int(cfg.get("N_CHUNKS") or 8)
     target = f"{out}/state"
@@ -1312,7 +1314,6 @@ def snapshot_handoff(spark: SparkSession, cfg: ScopedConfig):
             return -1
         return row[0] if row and row[0] is not None else -1
 
-    from streamforge_spark.streaming.sinks import upsert_batch
     upsert = upsert_batch(target, ["primary_key"], [POS_COL, RANK_COL],
                           op_col="operation")
 
@@ -1361,14 +1362,12 @@ def snapshot_handoff(spark: SparkSession, cfg: ScopedConfig):
     events = (positioned.filter(F.col(POS_COL).isNotNull())
               .filter(F.col(POS_COL) > F.lit(int(resume)))
               .withColumn(RANK_COL, F.lit(EVENT_RANK)))
-    q = (foreach_batch_upsert(
-            events.select("primary_key", "payload_json", "operation",
-                          POS_COL, RANK_COL),
-            target, ["primary_key"], [POS_COL, RANK_COL],
-            f"{ckpt}/state", op_col="operation")
-         .start())
-    return [q, _sink(parse_dlq, cfg, "dlq_parse"),
-            _sink(noseq_dlq, cfg, "dlq_noseq")]
+    return _one_query(
+        spark, cfg,
+        {"state": events.select("primary_key", "payload_json", "operation",
+                                POS_COL, RANK_COL),
+         "dlq_parse": parse_dlq, "dlq_noseq": noseq_dlq},
+        writers={"state": upsert})
 
 
 @stream_job("StateAudit")

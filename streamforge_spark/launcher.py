@@ -17,9 +17,9 @@ gets a structured gap row in ``OUTPUT_PATH/_gaps`` BEFORE the resume
 makes the loss invisible.  Policy is report-and-continue: the file
 source replays the lost range as an empty batch (measured Spark 4.1
 behavior), which is exactly restart-from-now with continuous batch
-ids — archiving the checkpoint instead would restart sink batch
-numbering against the parquet sink's _spark_metadata manifest and
-silently skip writes.  The archive+filter degrade path
+ids — archiving the checkpoint instead would restart the batch
+numbering, which ``check_batch_output`` refuses over the job's
+``batch_id=<n>`` outputs.  The archive+filter degrade path
 (``start_with_token_recovery``) remains the right tool for loud
 losses (Kafka offsets out of range) where the resume itself dies.
 """
@@ -37,8 +37,8 @@ def _preflight_recover(spark, cfg: ScopedConfig) -> None:
     """Report-and-continue token-expiry audit: write a gap row for
     every sink checkpoint whose pending batches reference deleted
     source files, then let the resume proceed (the file source skips
-    the lost range as an empty replay — continuous batch ids keep the
-    parquet sink manifest consistent).  No-op when healthy."""
+    the lost range as an empty replay — a restarted batch numbering
+    would be refused by ``check_batch_output``).  No-op when healthy."""
     import datetime
     import hashlib
 

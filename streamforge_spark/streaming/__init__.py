@@ -7,8 +7,8 @@ share their column algebra with these streaming forms:
 - dedup/suppression within watermark (dedup.py)
 - stateful materializer via applyInPandasWithState (materialize.py)
 - per-key silence detection via ProcessingTimeTimeout (flow_disruption.py)
-- foreachBatch sinks: idempotent upsert, DLQ, compacted/tombstone
-  output (sinks.py)
+- foreachBatch sinks: idempotent upsert, compacted/tombstone output,
+  one query's per-batch-id output and DLQ fan-out (sinks.py)
 """
 
 from streamforge_spark.streaming.dedup import streaming_dedup, streaming_merger
@@ -16,11 +16,11 @@ from streamforge_spark.streaming.materialize import streaming_materializer
 from streamforge_spark.streaming.flow_disruption import flow_disruption_detector
 from streamforge_spark.streaming.sources import file_stream, rate_stream, kafka_stream
 from streamforge_spark.streaming.sinks import (
-    foreach_batch_upsert, kafka_compacted_output, parquet_sink,
+    foreach_batch_upsert, kafka_compacted_output,
 )
 
 __all__ = [
     "streaming_dedup", "streaming_merger", "streaming_materializer",
     "flow_disruption_detector", "file_stream", "rate_stream", "kafka_stream",
-    "foreach_batch_upsert", "kafka_compacted_output", "parquet_sink",
+    "foreach_batch_upsert", "kafka_compacted_output",
 ]

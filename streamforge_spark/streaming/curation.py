@@ -442,8 +442,7 @@ def streaming_dsir_gate(doc_stream: DataFrame, llr_model: DataFrame,
     comparison stays exact and replayable under any micro-batch
     replay.
     """
-    from streamforge_spark.functions.dsir import (
-        DSIR_BUCKETS, DSIR_MICRO, dsir_bucket)
+    from streamforge_spark.functions.dsir import DSIR_BUCKETS, dsir_bucket
 
     # smoothed score for a bucket never seen at fit time: counts are
     # zero on both sides, so the ratio collapses to ln((nr+B)/(nt+B)).

@@ -18,6 +18,7 @@ docs/recovery/fault-tolerance.md §4). The batch/flush cadence knobs
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -211,21 +212,16 @@ def foreach_batch_kafka_eo(df: DataFrame, topic: str, bootstrap_servers: str,
 
 def foreach_batch_upsert(df: DataFrame, target_path: str, key_cols: list[str],
                          order_cols: list[str], checkpoint: str,
-                         op_col: str | None = None,
-                         trigger_seconds: int | None = None):
+                         op_col: str | None = None):
     """Wire a streaming DataFrame into the idempotent upsert sink."""
-    writer = (df.writeStream.outputMode("update")
-              .foreachBatch(upsert_batch(target_path, key_cols, order_cols, op_col))
-              .option("checkpointLocation", checkpoint))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer
+    return (df.writeStream.outputMode("update")
+            .foreachBatch(upsert_batch(target_path, key_cols, order_cols, op_col))
+            .option("checkpointLocation", checkpoint))
 
 
 def foreach_batch_es_upsert(df: DataFrame, target_path: str, checkpoint: str,
                             id_col: str = "trace_id",
-                            time_cols: list[str] | None = None,
-                            trigger_seconds: int | None = None):
+                            time_cols: list[str] | None = None):
     """ElasticsearchSinkBuilder analog (ElasticsearchSinkBuilder.java:
     doc id = traceId): document-id-keyed idempotent upsert — the exact
     semantics ES gives via `_id`-addressed index requests, expressed
@@ -239,7 +235,7 @@ def foreach_batch_es_upsert(df: DataFrame, target_path: str, checkpoint: str,
     return foreach_batch_upsert(
         df, target_path, key_cols=[id_col],
         order_cols=time_cols or ["processed_time"],
-        checkpoint=checkpoint, trigger_seconds=trigger_seconds)
+        checkpoint=checkpoint)
 
 
 def es_bulk_writer(url: str, index: str, id_col: str,
@@ -359,8 +355,7 @@ def es_bulk_writer(url: str, index: str, id_col: str,
 def foreach_batch_es_bulk(df: DataFrame, url: str, index: str,
                           checkpoint: str, id_col: str = "trace_id",
                           order_cols: list[str] | None = None,
-                          op_col: str | None = None,
-                          trigger_seconds: int | None = None):
+                          op_col: str | None = None):
     """ElasticsearchSinkBuilder over real HTTP: per micro-batch,
     reduce to the latest row per document id (so one replayed batch
     cannot interleave stale versions), then stream each partition
@@ -378,23 +373,8 @@ def foreach_batch_es_bulk(df: DataFrame, url: str, index: str,
         latest.foreachPartition(
             es_bulk_writer(url, index, id_col, op_col=op_col))
 
-    writer = (df.writeStream.outputMode("update").foreachBatch(fn)
-              .option("checkpointLocation", checkpoint))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer
-
-
-def parquet_sink(df: DataFrame, path: str, checkpoint: str,
-                 partition_by: list[str] | None = None):
-    """Append-mode parquet sink (the DLQ channel, event archives)."""
-    writer = (df.writeStream.format("parquet")
-              .option("path", path)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("append"))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    return writer
+    return (df.writeStream.outputMode("update").foreachBatch(fn)
+            .option("checkpointLocation", checkpoint))
 
 
 BATCH_COL = "batch_id"
@@ -452,15 +432,37 @@ def check_batch_output(spark: SparkSession, paths: Iterable[str],
                     f"(docs/RECOVERY.md §1)")
 
 
-def split_sinks(batch_df: DataFrame,
-                routes: dict[str, Callable[[DataFrame], None]],
-                route_col: str = "route") -> None:
-    """Multi-sink fan-out inside one foreachBatch: compute the routed
-    batch once, persist, write each split (ParallelSplitter's
-    zero-copy side outputs, SURVEY §4 'zero-copy fan-out')."""
-    batch_df.persist()
-    try:
-        for name, write in routes.items():
-            write(batch_df.filter(F.col(route_col) == name).drop(route_col))
-    finally:
-        batch_df.unpersist()
+SINK_COL = "_sink"
+
+
+def union_sinks(branches: dict[str, DataFrame]) -> DataFrame:
+    """Several outputs as one streaming DataFrame, so one query (one
+    checkpoint, one source offset per batch) carries them: each
+    branch's rows are tagged with its output name (``_sink``) and its
+    columns packed into a struct column of that name, so branches of
+    any schemas union exactly. Unpack with :func:`split_sinks`."""
+    packed = {name: df.select(F.struct(*df.columns).alias(name))
+              for name, df in branches.items()}
+    types = {name: df.schema[name].dataType for name, df in packed.items()}
+    return reduce(DataFrame.unionByName, [
+        df.select(F.lit(name).alias(SINK_COL),
+                  *[F.col(n) if n == name else F.lit(None).cast(t).alias(n)
+                    for n, t in types.items()])
+        for name, df in packed.items()])
+
+
+def split_sinks(writers: dict[str, Callable[[DataFrame, int], None]]):
+    """The ``foreachBatch`` of a :func:`union_sinks` stream: persist the
+    batch once and hand each writer its branch's unpacked rows and the
+    batch id (ParallelSplitter's zero-copy side outputs, SURVEY §4)."""
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            for name, write in writers.items():
+                write(batch_df.filter(F.col(SINK_COL) == name)
+                      .select(f"{name}.*"), batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return apply

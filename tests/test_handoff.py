@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from streamforge_spark.config import ScopedConfig
 from streamforge_spark.launcher import run_job
+from tests.test_jobs import started_queries
 from streamforge_spark.streaming.handoff import (
     CHUNK_RANK, POS_COL, RANK_COL, bootstrap_snapshot,
     handoff_merged, handoff_state,
@@ -157,8 +158,9 @@ def handoff_cfg(tmp_path, snap_pos: int) -> ScopedConfig:
     })
 
 
-def test_snapshot_handoff_job_and_restart(spark, tmp_path):
+def test_snapshot_handoff_job_and_restart(spark, tmp_path, monkeypatch):
     s0, n1, n2 = 14, 30, 36
+    started = started_queries(monkeypatch, "SnapshotHandoff")
 
     # point-in-time dump consistent with log position s0
     snap = spark.createDataFrame(
@@ -188,6 +190,7 @@ def test_snapshot_handoff_job_and_restart(spark, tmp_path):
 
     expected = {f"u{k}": v for k, v in world_at(n2 - 1).items()}
     assert state_of(spark, tmp_path) == expected
+    assert [len(qs) for qs in started] == [1, 1]
     m2 = spark.read.parquet(str(tmp_path / "out" / "handoff_manifest"))
     assert sorted(map(tuple, m2.collect())) == first_manifest
 
@@ -207,10 +210,13 @@ def test_snapshot_handoff_replay_is_idempotent(spark, tmp_path):
     run_job("SnapshotHandoff", cfg, spark=spark, drain=True)
     before = state_of(spark, tmp_path)
 
-    # wipe ONLY the stream checkpoint: the next run re-reads every log
-    # file from scratch against the existing seeded state
+    # wipe the stream checkpoint: the next run re-reads every log file
+    # from scratch against the existing seeded state. Its batch ids
+    # restart at 0, so the per-batch-id DLQ dirs go with it
+    # (check_batch_output refuses to overwrite them otherwise)
     import shutil
-    shutil.rmtree(str(tmp_path / "ckpt" / "state"))
+    for d in ("ckpt/state", "out/dlq_parse", "out/dlq_noseq"):
+        shutil.rmtree(str(tmp_path / d))
     run_job("SnapshotHandoff", cfg, spark=spark, drain=True)
 
     assert state_of(spark, tmp_path) == before

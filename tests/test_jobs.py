@@ -44,7 +44,8 @@ def read(spark, tmp_path, sub):
     return spark.read.parquet(str(tmp_path / "out" / sub))
 
 
-def test_mongo_to_kafka_job(spark, tmp_path):
+def test_mongo_to_kafka_job(spark, tmp_path, monkeypatch):
+    started = started_queries(monkeypatch, "MongoToKafka")
     write_lines(tmp_path / "in", [
         env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),
         env_line(op="insert", pk="a", t="2024-01-01 10:00:00"),   # dup (pk, t)
@@ -57,6 +58,7 @@ def test_mongo_to_kafka_job(spark, tmp_path):
         "not json at all",                                        # parse DLQ
     ])
     run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     out = read(spark, tmp_path, "out").collect()
     assert sorted(r.key for r in out) == ["a", "a"]
     assert all(r.value is not None for r in out)
@@ -79,34 +81,35 @@ def trim_commits(ckpt, first: int | None = None) -> int:
     return first
 
 
-def started_queries(monkeypatch) -> list[list]:
-    """Record the queries each ``run_job("MongoToKafka")`` starts: one
-    list per run, in the order the job returns them."""
+def started_queries(monkeypatch, name: str) -> list[list]:
+    """Record the queries each ``run_job(name)`` starts: one list per
+    run, in the order the job returns them."""
     from streamforge_spark.jobs import JOB_REGISTRY
     started = []
-    job = JOB_REGISTRY["MongoToKafka"]
+    job = JOB_REGISTRY[name]
 
     def recording(spark, cfg):
         queries = job(spark, cfg)
         started.append(queries)
         return queries
-    monkeypatch.setitem(JOB_REGISTRY, "MongoToKafka", recording)
+    monkeypatch.setitem(JOB_REGISTRY, name, recording)
     return started
 
 
 def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
         spark, tmp_path, monkeypatch):
     """Restart on the same checkpoint, then a replay of the last batch
-    id: ``out`` and ``dlq_schema`` (one stateful query fanning out per
-    batch id) hold exactly the rows of one clean run over both files,
-    and the job starts 2 queries — the chain and the parse DLQ — that
-    hold 2 stateful operators between them (dedup and merger, once).
+    id: ``out``, ``dlq_schema`` and ``dlq_parse`` (one stateful query
+    fanning out per batch id) hold exactly the rows of one clean run
+    over both files, and each run starts 1 query — the chain with the
+    parse DLQ as its branch — that holds 2 stateful operators (dedup
+    and merger, once).
     The first run starts its checkpoint under 32 shuffle partitions:
     the restart and the replay keep 32 state partitions per operator
     (Spark restores the count from the offset log), while the clean
     run's fresh checkpoint starts with 2 x cores."""
     from streamforge_spark.session import default_parallelism
-    started = started_queries(monkeypatch)
+    started = started_queries(monkeypatch, "MongoToKafka")
 
     def partitions(queries) -> list[int]:
         return [op["numShufflePartitions"]
@@ -156,7 +159,7 @@ def test_mongo_to_kafka_exactly_once_across_restart_and_replay(
     got = {s: read(spark, tmp_path, s).count() for s in ("out", "dlq_schema")}
     assert got == want
     assert read(spark, tmp_path, "dlq_parse").count() == 1
-    assert [len(qs) for qs in started] == [2, 2, 2, 2]
+    assert [len(qs) for qs in started] == [1, 1, 1, 1]
     assert [partitions(qs) for qs in started] == \
         [[2 * default_parallelism()] * 2] + [[32, 32]] * 3
 
@@ -167,7 +170,7 @@ def test_mongo_to_kafka_runs_no_idle_batch(spark, tmp_path, monkeypatch):
     would run to evict state once the watermark moves: a one-file drain
     runs (and writes) batch 0 only, and the session conf is left as it
     was."""
-    started = started_queries(monkeypatch)
+    started = started_queries(monkeypatch, "MongoToKafka")
     flag = "spark.sql.streaming.noDataMicroBatches.enabled"
     before = spark.conf.get(flag, None)
     write_lines(tmp_path / "in", [
@@ -195,8 +198,10 @@ def test_mongo_to_kafka_watermark_and_eviction_survive_restart(
     inside the horizon and evicts the state that expired under that
     watermark. Spark cuts late rows at the PREVIOUS batch's watermark,
     so that batch still admits a fresh key at 10:05; the next batch
-    drops one as late."""
-    started = started_queries(monkeypatch)
+    drops one as late. The query scans its source twice per batch (the
+    chain and the parse DLQ branch), so ``numInputRows`` counts each
+    line twice."""
+    started = started_queries(monkeypatch, "MongoToKafka")
     write_lines(tmp_path / "in", [
         env_line(pk="a", t="2024-01-01 10:00:00"),   # expires at 10:10
         env_line(pk="x", t="2024-01-01 10:25:00"),
@@ -211,7 +216,7 @@ def test_mongo_to_kafka_watermark_and_eviction_survive_restart(
     assert sorted(r.key for r in read(spark, tmp_path, "out").collect()) == [
         "a", "b", "late", "x"]
     restarted = started[1][0].lastProgress
-    assert (restarted["batchId"], restarted["numInputRows"]) == (1, 2)
+    assert (restarted["batchId"], restarted["numInputRows"]) == (1, 2 * 2)
     assert restarted["eventTime"]["watermark"] == "2024-01-01T10:20:00.000Z"
     # each operator evicts "a" and "late" (expired under 10:20) and
     # keeps "x" and "b"
@@ -225,7 +230,7 @@ def test_mongo_to_kafka_watermark_and_eviction_survive_restart(
     run_job("MongoToKafka", job_cfg(tmp_path), spark=spark, drain=True)
     assert read(spark, tmp_path, "out").count() == 4
     late = started[2][0].lastProgress
-    assert (late["batchId"], late["numInputRows"]) == (2, 1)
+    assert (late["batchId"], late["numInputRows"]) == (2, 2 * 1)
     assert sum(op["numRowsDroppedByWatermark"]
                for op in late["stateOperators"]) == 1
 
@@ -252,7 +257,8 @@ def test_mongo_to_kafka_refuses_new_checkpoint_over_output(spark, tmp_path):
     assert read(spark, tmp_path, "out").count() == 2
 
 
-def test_kafka_to_mongo_job(spark, tmp_path):
+def test_kafka_to_mongo_job(spark, tmp_path, monkeypatch):
+    started = started_queries(monkeypatch, "KafkaToMongo")
     # reference snapshot: two versions of key 'a' -> latest must win
     ref = spark.createDataFrame(
         [("a", '{"plan": "old"}', "2024-01-01 09:00:00"),
@@ -272,6 +278,7 @@ def test_kafka_to_mongo_job(spark, tmp_path):
     ])
     run_job("KafkaToMongo", job_cfg(tmp_path, REFERENCE_PATH=tmp_path / "ref"),
             spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     table = {r.primary_key: r for r in read(spark, tmp_path, "table").collect()}
     assert set(table) == {"b"}                                    # a deleted, x rejected
     assert json.loads(table["b"].payload_json)["v"] == 2
@@ -297,7 +304,8 @@ def test_kafka_to_mongo_enrichment_metadata(spark, tmp_path):
     assert "enrichedRef1" not in (rows["miss"] or {})             # miss passes through
 
 
-def test_event_router_job(spark, tmp_path):
+def test_event_router_job(spark, tmp_path, monkeypatch):
+    started = started_queries(monkeypatch, "EventRouter")
     write_lines(tmp_path / "in", [
         env_line(source="orders", pk="o1"),
         env_line(source="payments", pk="p1"),
@@ -305,6 +313,7 @@ def test_event_router_job(spark, tmp_path):
         env_line(source="orders", pk="o2"),
     ])
     run_job("EventRouter", job_cfg(tmp_path), spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     assert sorted(r.primary_key for r in read(spark, tmp_path, "es_orders").collect()) == ["o1", "o2"]
     assert [r.primary_key for r in read(spark, tmp_path, "es_payments").collect()] == ["p1"]
     assert [r.primary_key for r in read(spark, tmp_path, "mongo_main").collect()] == ["c1"]
@@ -312,17 +321,19 @@ def test_event_router_job(spark, tmp_path):
 
 def test_event_router_replay_does_not_duplicate(spark, tmp_path):
     """A replayed micro-batch rewrites its own batch-id dirs: the
-    routed counts do not change."""
+    routed counts and the parse DLQ do not change."""
     write_lines(tmp_path / "in", [
         env_line(source="orders", pk="o1"),
         env_line(source="payments", pk="p1"),
         env_line(source="clicks", pk="c1"),
         env_line(source="orders", pk="o2"),
+        "not json",
     ])
-    subs = ("es_orders", "es_payments", "mongo_main")
+    subs = ("es_orders", "es_payments", "mongo_main", "dlq_parse")
     run_job("EventRouter", job_cfg(tmp_path), spark=spark, drain=True)
     before = {s: read(spark, tmp_path, s).count() for s in subs}
-    assert before == {"es_orders": 2, "es_payments": 1, "mongo_main": 1}
+    assert before == {"es_orders": 2, "es_payments": 1, "mongo_main": 1,
+                      "dlq_parse": 1}
     trim_commits(tmp_path / "ckpt" / "router")
     run_job("EventRouter", job_cfg(tmp_path), spark=spark, drain=True)
     assert {s: read(spark, tmp_path, s).count() for s in subs} == before
@@ -340,18 +351,21 @@ def test_event_router_refuses_append_layout(spark, tmp_path):
         run_job("EventRouter", job_cfg(tmp_path), spark=spark, drain=True)
 
 
-def test_merged_ingest_job(spark, tmp_path):
+def test_merged_ingest_job(spark, tmp_path, monkeypatch):
+    started = started_queries(monkeypatch, "MergedIngest")
     write_lines(tmp_path / "in", [env_line(source="orders", pk="o1")])
     write_lines(tmp_path / "in2", [env_line(source="payments", pk="p1")])
     run_job("MergedIngest",
             job_cfg(tmp_path, SOURCE_PATH_SECONDARY=tmp_path / "in2"),
             spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     rows = {r.primary_key: r.metadata["ingestSource"]
             for r in read(spark, tmp_path, "merged").collect()}
     assert rows == {"o1": "orders", "p1": "payments"}
 
 
-def test_order_payment_join_job(spark, tmp_path):
+def test_order_payment_join_job(spark, tmp_path, monkeypatch):
+    started = started_queries(monkeypatch, "OrderPaymentJoin")
     write_lines(tmp_path / "in", [
         env_line(source="orders", pk="k1", t="2024-01-01 10:00:00"),
         env_line(source="orders", pk="k2", t="2024-01-01 10:01:00"),  # never paid
@@ -366,12 +380,14 @@ def test_order_payment_join_job(spark, tmp_path):
     run_job("OrderPaymentJoin",
             job_cfg(tmp_path, SOURCE_PATH_SECONDARY=tmp_path / "in2"),
             spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     rows = {r.primary_key: r for r in read(spark, tmp_path, "joined").collect()}
     assert rows["k1"].payment_payload is not None
     assert "k2" in rows and rows["k2"].payment_payload is None    # left-outer emission
 
 
-def test_user_state_materialize_job(spark, tmp_path):
+def test_user_state_materialize_job(spark, tmp_path, monkeypatch):
+    started = started_queries(monkeypatch, "UserStateMaterialize")
     write_lines(tmp_path / "in", [
         env_line(op="insert", pk="a", t="2024-01-01 10:00:00",
                  payload={"_id": "a", "v": 1}),
@@ -380,6 +396,7 @@ def test_user_state_materialize_job(spark, tmp_path):
         env_line(op="delete", pk="a", t="2024-01-01 10:02:00"),
     ])
     run_job("UserStateMaterialize", job_cfg(tmp_path), spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     log = sorted(read(spark, tmp_path, "changelog").collect(),
                  key=lambda r: r.event_time)
     kinds = [r.operation for r in log]
@@ -388,7 +405,8 @@ def test_user_state_materialize_job(spark, tmp_path):
     assert json.loads(upd["before"])["v"] == 1 and json.loads(upd["after"])["v"] == 2
 
 
-def test_user_session_analysis_job(spark, tmp_path):
+def test_user_session_analysis_job(spark, tmp_path, monkeypatch):
+    started = started_queries(monkeypatch, "UserSessionAnalysis")
     write_lines(tmp_path / "in", [
         env_line(op="insert", pk="u1", t="2024-01-01 10:00:00"),
         env_line(op="update", pk="u1", t="2024-01-01 10:10:00"),
@@ -397,6 +415,7 @@ def test_user_session_analysis_job(spark, tmp_path):
         env_line(op="insert", pk="u9", t="2024-01-01 15:00:00"),
     ])
     run_job("UserSessionAnalysis", job_cfg(tmp_path), spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     rows = [json.loads(r.payload_json)
             for r in read(spark, tmp_path, "sessions").collect()
             if r.primary_key == "u1"]
@@ -1401,7 +1420,7 @@ def test_budget_gate_single_batch_equals_token_budget_mix(spark):
     assert gate_admit == batch_admit
 
 
-def test_kafka_to_mongo_schema_migrations(spark, tmp_path):
+def test_kafka_to_mongo_schema_migrations(spark, tmp_path, monkeypatch):
     """The ingress edge runs the SAME config-shipped upcast chain as
     the egress (judge r9 item 5 — symmetric consumers of one
     envelope): a v1 payload entering via the Kafka side is migrated
@@ -1424,8 +1443,10 @@ def test_kafka_to_mongo_schema_migrations(spark, tmp_path):
         env_line(op="insert", pk="c", t="2024-01-01 10:00:00",
                  payload={"_id": "c", "schema_version": "v0"}),
     ])
+    started = started_queries(monkeypatch, "KafkaToMongo")
     run_job("KafkaToMongo", job_cfg(tmp_path, SCHEMA_MIGRATIONS=chain),
             spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     table = {r.primary_key: _json.loads(r.payload_json)
              for r in read(spark, tmp_path, "table").collect()}
     assert set(table) == {"a", "b"}
@@ -1483,7 +1504,7 @@ def test_dlq_replay_recovers_after_migration_fix(spark, tmp_path):
     assert read(spark, tmp_path, "replayed").count() == 1
 
 
-def test_mongo_to_kafka_schema_migrations(spark, tmp_path):
+def test_mongo_to_kafka_schema_migrations(spark, tmp_path, monkeypatch):
     """Config-shipped payload upcast chain runs inside the job before
     dedup/merger: v1 payloads are normalized (rename + version bump),
     unknown versions dual-output to dlq_migrate, v-current passes
@@ -1501,9 +1522,11 @@ def test_mongo_to_kafka_schema_migrations(spark, tmp_path):
         env_line(op="insert", pk="c", t="2024-01-01 10:00:00",
                  payload={"_id": "c", "amt": "9", "schema_version": "v0"}),
     ])
+    started = started_queries(monkeypatch, "MongoToKafka")
     run_job("MongoToKafka",
             job_cfg(tmp_path, SCHEMA_MIGRATIONS=chain),
             spark=spark, drain=True)
+    assert [len(qs) for qs in started] == [1]
     out = {r.key: _json.loads(_json.loads(r.value)["payload_json"])
            for r in read(spark, tmp_path, "out").collect()}
     assert set(out) == {"a", "b"}
@@ -1516,10 +1539,10 @@ def test_mongo_to_kafka_schema_migrations(spark, tmp_path):
 
 
 def test_dlq_replay_unions_schema_and_migrate_classes(spark, tmp_path):
-    """DlqReplay over both DLQ classes at once: ``dlq_schema`` is
-    written per batch id (a ``batch_id`` partition column) and
-    ``dlq_migrate`` by a file sink (no such column); the pools still
-    union and the fixed chain recovers the migrate-class row."""
+    """DlqReplay over both DLQ classes at once: both are written per
+    batch id (a ``batch_id`` partition column, which the replay drops);
+    the pools union and the fixed chain recovers the migrate-class
+    row."""
     import json as _json
     chain = [{"from": "v1", "to": "v2", "rename": {"legacy_id": "_id"},
               "set": {"schema_version": "v2"}}]

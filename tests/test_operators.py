@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streamforge_spark.operators.dedup import deduplicator, stateful_merger
-from streamforge_spark.operators.joins import dynamic_joiner, latest_per_key, static_joiner
+from streamforge_spark.operators.joins import dynamic_joiner, static_joiner
 from streamforge_spark.operators.materialize import materializer_changelog, materializer_latest
 from streamforge_spark.operators.quality import (
     SchemaVersion, constraint_enforcer, date_rule, email_rule,

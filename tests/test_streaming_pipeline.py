@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from streamforge_spark.operators.dedup import deduplicator
 from streamforge_spark.operators.sessions import session_analyzer
 from streamforge_spark.streaming.dedup import streaming_dedup
-from streamforge_spark.streaming.sinks import parquet_sink
 from streamforge_spark.streaming.sources import file_stream
 from tests.test_streaming import EVENTS_SCHEMA
 
@@ -104,7 +103,8 @@ def test_checkpoint_recovery_exactly_once(spark, workdir):
 
     def run_once():
         stream = file_stream(spark, src, EVENTS_SCHEMA)
-        q = parquet_sink(stream, out, ckpt).start()
+        q = (stream.writeStream.format("parquet").option("path", out)
+             .option("checkpointLocation", ckpt).start())
         q.processAllAvailable()
         q.stop()
 

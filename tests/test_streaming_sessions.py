@@ -1,7 +1,7 @@
 """Streaming sessionization (SURVEY §2.8 SessionAnalyzer) and
 zero-copy multi-sink fan-out (§2.5 ParallelSplitter side outputs):
 session windows close as the watermark passes, and one foreachBatch
-writes every route from a single routed pass."""
+writes every route from a single union of the routes."""
 
 from __future__ import annotations
 
@@ -13,9 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from streamforge_spark.operators.routing import routed
+from streamforge_spark.operators.routing import parallel_splitter
 from streamforge_spark.operators.sessions import session_analyzer
-from streamforge_spark.streaming.sinks import split_sinks
+from streamforge_spark.streaming.sinks import split_sinks, union_sinks
 from streamforge_spark.streaming.sources import file_stream
 
 SCHEMA = T.StructType([
@@ -79,18 +79,18 @@ def test_streaming_session_windows_match_batch(spark, workdir):
 def test_streaming_split_sinks_zero_copy_fanout(spark, workdir):
     src = f"{workdir}/in"
     _write(spark, src, ROWS)
-    stream = routed(file_stream(spark, src, SCHEMA), [
+    stream = union_sinks(parallel_splitter(file_stream(spark, src, SCHEMA), [
         ("purchases", F.col("op") == "purchase"),
         ("signups", F.col("op") == "signup"),
-    ])
+    ]))
     out = {name: f"{workdir}/{name}" for name in ("purchases", "signups", "main")}
 
     def write_to(path):
-        return lambda df: df.write.mode("append").parquet(path)
+        return lambda df, _id: df.write.mode("append").parquet(path)
 
     q = (stream.writeStream
-         .foreachBatch(lambda b, _id: split_sinks(
-             b, {name: write_to(path) for name, path in out.items()}))
+         .foreachBatch(split_sinks(
+             {name: write_to(path) for name, path in out.items()}))
          .option("checkpointLocation", f"{workdir}/ckpt")
          .start())
     q.processAllAvailable()
