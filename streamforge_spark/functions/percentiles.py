@@ -4,9 +4,7 @@ The two-phase trick behind `exact_percentiles_by_type`: when values
 are bounded integers (cents), the fact table collapses to a
 (key, value, count) frequency rollup whose cardinality is the value
 DOMAIN, not the row count — and exact percentile_disc selection is
-then window algebra on the rollup.  Shared by the batch query and the
-streaming drain (`streaming_cents_histogram` -> this), so the online
-path provably computes the same statistic as the batch oracle.
+then window algebra on the rollup.
 """
 
 from __future__ import annotations

@@ -139,9 +139,10 @@ GOPHER_MIN_ALPHA_PPM = 800_000
 
 def gopher_metrics(df, id_cols=("doc_id",), text_col: str = "text"):
     """Per-row Gopher rule metrics and flags — shared by the batch
-    query (queries/text.py::gopher_quality_flags) and the streaming
-    gate (streaming/curation.py::streaming_gopher_gate); pure column
-    algebra, identical in both modes because there is no state.
+    query (queries/text.py::gopher_quality_flags) and the online
+    funnel's first stage (streaming/curation.py::corpus_funnel_verdicts);
+    pure column algebra, identical in both modes because there is no
+    state.
 
     The mean-word-length identity ``sum(len(w)) == length(text) -
     (n_words - 1)`` is exact under the single-space corpus contract.

@@ -138,16 +138,13 @@ FROM stats, shadow
 
 @query("bloom_fp_bound", oracle=_BLOOM_FP_ORACLE)
 def bloom_fp_bound(spark, sf_dir):
-    """Static false-positive audit of the streaming bloom dedup
-    (streaming/dedup.py::streaming_bloom_dedup): after inserting every
-    key into an m=65536-bit filter with 2 md5-derived hash positions,
-    report (a) the occupied-bit count and the resulting fresh-key
-    false-positive rate (set_bits/m)^2 in ppm, and (b) the number of
-    keys BOTH of whose positions are shared with other keys — the
-    keys that would be suppressed if they arrived after their
-    shadowers.  This is the batch twin the streaming operator's
-    "classic bloom rate" docstring promises, on the same table the
-    driver checks (VERDICT r3 item 6).
+    """Static false-positive audit of a bloom-filter dedup: after
+    inserting every key into an m=65536-bit filter with 2 md5-derived
+    hash positions, report (a) the occupied-bit count and the
+    resulting fresh-key false-positive rate (set_bits/m)^2 in ppm, and
+    (b) the number of keys BOTH of whose positions are shared with
+    other keys — the keys that would be suppressed if they arrived
+    after their shadowers (VERDICT r3 item 6).
 
     Position math is the cross-engine 60-bit md5 hash
     (functions/simdedup.py::oracle_hash60), so the oracle is EXACT —

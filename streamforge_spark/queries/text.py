@@ -1736,7 +1736,7 @@ def exact_substring_cut_release(spark, sf_dir):
 
 #: Gopher rule thresholds (Rae et al. 2021, Appendix A1.1), in the
 #: repo's integer fixed-point units — the column logic is shared with
-#: the streaming gate via functions.text.gopher_metrics
+#: the online funnel's gopher stage via functions.text.gopher_metrics
 from streamforge_spark.functions.text import (  # noqa: E402
     GOPHER_MAX_MWL_MILLI, GOPHER_MAX_WORDS, GOPHER_MIN_ALPHA_PPM,
     GOPHER_MIN_MWL_MILLI, GOPHER_MIN_STOPWORDS, GOPHER_MIN_WORDS,

@@ -15,7 +15,7 @@ partial aggregation — no driver-side data movement, no per-row Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from streamforge_spark.queries.common import prep
@@ -23,23 +23,6 @@ from streamforge_spark.registry import query
 
 def _cents():
     return F.round(F.col("value") * 100).cast("long")
-
-
-def ohlc_aggs():
-    """The OHLC aggregate spec over (cents, ts, event_id) — pure
-    algebraic aggregates (min_by/max_by with the unique (ts, event_id)
-    order key), so it is map-side combinable AND legal in a streaming
-    groupBy (no window functions). Shared by the batch query and
-    streaming/timeseries.py::streaming_ohlc."""
-    seq = F.struct("ts", "event_id")
-    return [
-        F.min_by("cents", seq).alias("open_cents"),
-        F.max("cents").alias("high_cents"),
-        F.min("cents").alias("low_cents"),
-        F.max_by("cents", seq).alias("close_cents"),
-        F.count(F.lit(1)).alias("n_trades"),
-        F.sum("cents").alias("volume_cents"),
-    ]
 
 
 @query(
@@ -127,15 +110,19 @@ def ohlc_daily(spark, sf_dir):
     event stream. A SINGLE map-side-combinable aggregation (no rank
     window, no sort): open/close are min_by/max_by under the unique
     (ts, event_id) key — deterministic, and the identical result to
-    the oracle's rank-1 formulation. Exact BIGINT cents throughout;
-    the same agg spec runs unchanged under a streaming watermark
-    (test_streaming_ohlc_matches_batch)."""
+    the oracle's rank-1 formulation. Exact BIGINT cents throughout."""
     (events,) = prep(spark, sf_dir, "events")
     projected = events.select(
         "user_id", F.to_date("ts").alias("day"), _cents().alias("cents"),
         "ts", "event_id")
+    seq = F.struct("ts", "event_id")
     return (projected.groupBy("user_id", "day")
-            .agg(*ohlc_aggs())
+            .agg(F.min_by("cents", seq).alias("open_cents"),
+                 F.max("cents").alias("high_cents"),
+                 F.min("cents").alias("low_cents"),
+                 F.max_by("cents", seq).alias("close_cents"),
+                 F.count(F.lit(1)).alias("n_trades"),
+                 F.sum("cents").alias("volume_cents"))
             .select("user_id", F.col("day").cast("timestamp").alias("day"),
                     "open_cents", "high_cents", "low_cents", "close_cents",
                     "n_trades", "volume_cents"))
@@ -1774,13 +1761,58 @@ GROUP BY 1, 2
 """
 
 
+def drift_vs_baseline(hist: DataFrame, baseline: DataFrame) -> DataFrame:
+    """Total-variation drift (x2, ppm) of each (event_type, day)
+    histogram ``(event_type, day, bucket, n)`` against a static
+    baseline distribution ``(event_type, bucket, share_ppm)`` — same
+    transcendental-free integer statistic as the batch
+    `value_drift_report`.
+
+    Per-window totals are a tiny rollup; the baseline is KB-scale and
+    broadcast; buckets absent on either side of a given (type, day)
+    contribute their full share via the explicit (type, day) x bucket
+    grid.
+
+    Absence semantics: the distance is summed over the FULL grid of
+    observed (event_type, day) windows crossed with the union of
+    observed-and-baseline buckets per type.  A join keyed only on
+    (event_type, bucket) would be wrong: a baseline bucket that
+    matched SOME day of a type would never produce a null-day row, so
+    days where that bucket has zero observations would silently lose
+    their |0 - base_ppm| term — suppressing exactly the
+    bucket-vanished-today signal the monitor exists to raise.
+    """
+    # the histogram is rollup-sized (types x windows x buckets);
+    # materialize once so the three consumers below (shares, observed
+    # windows, the bucket union) never replay the upstream scan, and
+    # self-join lineage stays unambiguous
+    hist = (hist.select("event_type", "day", "bucket", "n")
+            .localCheckpoint(eager=False))
+    t = F.sum("n").over(Window.partitionBy("event_type", "day"))
+    sh = hist.select("event_type", "day", "bucket",
+                     F.round(F.col("n").cast("double") / t.cast("double")
+                             * 1000000).cast("long").alias("share_ppm"))
+    base = F.broadcast(
+        baseline.withColumnRenamed("share_ppm", "base_ppm"))
+    days = hist.select("event_type", "day").distinct()
+    buckets = (hist.select("event_type", "bucket")
+               .unionByName(baseline.select("event_type", "bucket"))
+               .distinct())
+    grid = days.join(buckets, "event_type")
+    return (grid.join(sh, ["event_type", "day", "bucket"], "left")
+            .join(base, ["event_type", "bucket"], "left")
+            .groupBy("event_type", "day")
+            .agg(F.sum(F.abs(F.coalesce("share_ppm", F.lit(0))
+                             - F.coalesce("base_ppm", F.lit(0))))
+                 .alias("tv2_ppm")))
+
+
 @query("tv_drift_by_day", oracle=_TV_DRIFT_DAY_ORACLE)
 def tv_drift_by_day(spark, sf_dir):
     """Daily total-variation drift of each event type's value
     histogram against its first-week baseline — runs the ACTUAL
-    monitoring operator (`streaming/timeseries.py::drift_vs_baseline`,
-    the batch half of the streaming drift monitor) so the driver's
-    independent gate covers the grid-absence semantics fixed this
+    monitoring operator (`drift_vs_baseline` above) so the independent
+    DuckDB oracle covers the grid-absence semantics fixed this
     round: a baseline bucket with zero observations on some day MUST
     contribute its full |0 - base_ppm| term to that day (the old
     (type, bucket)-keyed outer join silently lost it — exactly the
@@ -1792,7 +1824,6 @@ def tv_drift_by_day(spark, sf_dir):
     table is scanned twice (histogram + baseline) and never joined
     row-wise.
     """
-    from streamforge_spark.streaming.timeseries import drift_vs_baseline
     (events,) = prep(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
     bucket = F.floor(cents / F.lit(5000)).cast("long").alias("bucket")

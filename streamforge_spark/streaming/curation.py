@@ -1,6 +1,4 @@
-"""Streaming corpus curation: the online gates of the ingest funnel,
-plus per-stream admission operators (token budget, rate limit, chunk
-packing).
+"""Streaming corpus curation: the online gates of the ingest funnel.
 
 The batch forms (queries/curation.py) scan the whole corpus; in
 production new documents ARRIVE.  The model-backed gates check the
@@ -18,224 +16,6 @@ from pyspark.sql import functions as F
 
 from streamforge_spark.functions.exprs import lit_double_array
 from streamforge_spark.functions.text import word_ngrams
-
-
-def streaming_token_budget(doc_stream: DataFrame, *, budget: int,
-                           id_col: str = "doc_id", src_col: str = "source",
-                           tokens_col: str = "n_tokens") -> DataFrame:
-    """Streaming per-source token-budget admission: documents arrive,
-    each source's running token total accumulates in keyed state, and
-    a doc is ADMITTED only while its source's cumulative total (after
-    adding it) stays within the budget — the arrival-order streaming
-    twin of the batch `token_budget_mix` (which admits in determinstic
-    hash order instead).
-
-    State per source is ONE integer.  Within a micro-batch, docs
-    process in (doc_id) order for determinism; admission is
-    first-come-first-served, the semantics an ingest gate actually
-    has.  Emits only admitted docs (append mode) with their
-    cumulative position, so downstream sees a corpus that never
-    overshoots any source budget.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType([
-        T.StructField("source", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("cum_tokens", T.LongType()),
-    ])
-    state_schema = T.StructType([T.StructField("used", T.LongType())])
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        import pandas as pd
-        used = state.get[0] if state.exists else 0
-        # accumulate ALL Arrow chunks before the single sort: a
-        # per-chunk sort would make admission order depend on chunk
-        # boundaries (~10k rows) instead of the documented
-        # deterministic doc_id order within the micro-batch
-        docs = []
-        for pdf in pdfs:
-            docs.extend(zip((int(d) for d in pdf["doc_id"]),
-                            (int(n) for n in pdf["n_tokens"])))
-        docs.sort()
-        rows = []
-        for did, nt in docs:
-            if used + nt <= budget:
-                used += nt
-                rows.append((did, nt, used))
-        state.update((used,))
-        yield pd.DataFrame({
-            "source": [key[0]] * len(rows),
-            "doc_id": [r[0] for r in rows],
-            "n_tokens": [r[1] for r in rows],
-            "cum_tokens": [r[2] for r in rows],
-        })
-
-    prepared = doc_stream.select(
-        F.col(src_col).alias("source"), F.col(id_col).alias("doc_id"),
-        F.col(tokens_col).cast("long").alias("n_tokens"))
-    return prepared.groupBy("source").applyInPandasWithState(
-        fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
-
-
-def streaming_rate_limit(events: DataFrame, *, rate_num: int = 1,
-                         rate_den: int = 1, burst: int = 1,
-                         key_col: str = "user_id") -> DataFrame:
-    """Per-key token-bucket rate limiting as keyed streaming state:
-    each key's bucket refills ``rate_num/rate_den`` tokens per
-    EVENT-TIME second (a fraction, so hourly-scale quotas stay exact
-    integers) up to ``burst``; an event is admitted iff a token is
-    available, else marked throttled — the admission-control operator
-    in front of a hot sink or a paid downstream API.
-
-    Event-time refill keeps the decision independent of wall-clock
-    scheduling, and within a micro-batch events are folded in
-    (event-time, event_id) order.  ACROSS micro-batches the fold is
-    order-of-arrival: an event arriving in a LATER batch with an
-    EARLIER event time is judged against already-advanced state
-    (refill never rewinds), so replays that re-draw batch boundaries
-    around late events can change admit/throttle verdicts.  Determinism
-    therefore assumes in-order arrival per key — enforce it upstream
-    with a watermark + late-event drop (or accept at-arrival
-    semantics, which is what a live admission gate usually wants).
-    State per key is TWO integers (token count scaled by rate, last
-    event-time micros).  Emits every event with its verdict (append mode) so
-    downstream can route admitted vs throttled like any dual-output
-    stage.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("admitted", T.BooleanType()),
-        T.StructField("tokens_after", T.LongType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("tokens_scaled", T.LongType()),   # tokens * 1e6
-        T.StructField("last_us", T.LongType()),
-    ])
-    scale = 1_000_000
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        import pandas as pd
-        if state.exists:
-            tokens, last_us = state.get
-        else:
-            tokens, last_us = burst * scale, None
-        ids, ts_us, verdicts, remaining = [], [], [], []
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["eus", "event_id"])
-            rows.extend(zip((int(e) for e in pdf["event_id"]),
-                            (int(u) for u in pdf["eus"])))
-        rows.sort(key=lambda r: (r[1], r[0]))
-        for eid, eus in rows:
-            if last_us is not None and eus > last_us:
-                # Δus * (num/den) tokens/sec == scaled tokens (exact)
-                refill = (eus - last_us) * rate_num // rate_den
-                tokens = min(burst * scale, tokens + refill)
-            last_us = eus if last_us is None else max(last_us, eus)
-            if tokens >= scale:
-                tokens -= scale
-                ok = True
-            else:
-                ok = False
-            ids.append(eid)
-            verdicts.append(ok)
-            remaining.append(tokens // scale)
-        state.update((int(tokens), int(last_us if last_us is not None else 0)))
-        yield pd.DataFrame({
-            "user_id": [key[0]] * len(ids),
-            "event_id": ids,
-            "admitted": verdicts,
-            "tokens_after": remaining,
-        })
-
-    prepared = events.select(
-        F.col(key_col).alias("user_id"), "event_id",
-        F.unix_micros("ts").alias("eus"))
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
-
-
-def streaming_pack_chunks(doc_stream: DataFrame, *, chunk_tokens: int = 2048,
-                          id_col: str = "doc_id", src_col: str = "source",
-                          tokens_col: str = "n_tokens") -> DataFrame:
-    """Streaming sequence packing: as documents arrive, append each
-    source's token stream to its running concat-and-chunk position and
-    emit the chunk span every document lands on — the online twin of
-    the batch `pack_chunk_stats` audit, for pipelines that shard
-    training chunks as data flows in rather than in a nightly pass.
-
-    State per source is ONE integer (the running token total), so the
-    packing position survives micro-batch boundaries: a chunk can
-    start in one batch and finish in a later one and both documents
-    see the same chunk id.  Within a micro-batch, rows across ALL
-    Arrow chunks are accumulated first and folded once in doc_id
-    order (the chunk-boundary-independence rule
-    `streaming_token_budget` follows); across batches, order is
-    arrival order — deterministic when the upstream feed is in-order
-    per source, the same contract as the rest of this module.
-
-    Emits (source, doc_id, n_tokens, start_pos, chunk_first,
-    chunk_last, split) in append mode.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType([
-        T.StructField("source", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("start_pos", T.LongType()),
-        T.StructField("chunk_first", T.LongType()),
-        T.StructField("chunk_last", T.LongType()),
-        T.StructField("split", T.BooleanType()),
-    ])
-    state_schema = T.StructType([T.StructField("cum", T.LongType())])
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        import pandas as pd
-        cum = state.get[0] if state.exists else 0
-        docs = []
-        for pdf in pdfs:
-            docs.extend(zip((int(d) for d in pdf["doc_id"]),
-                            (int(n) for n in pdf["n_tokens"])))
-        docs.sort()
-        rows = []
-        for did, nt in docs:
-            if nt <= 0:
-                continue
-            start = cum
-            cum += nt
-            cf, cl = start // chunk_tokens, (cum - 1) // chunk_tokens
-            rows.append((did, nt, start, cf, cl, cf != cl))
-        state.update((cum,))
-        yield pd.DataFrame({
-            "source": [key[0]] * len(rows),
-            "doc_id": [r[0] for r in rows],
-            "n_tokens": [r[1] for r in rows],
-            "start_pos": [r[2] for r in rows],
-            "chunk_first": [r[3] for r in rows],
-            "chunk_last": [r[4] for r in rows],
-            "split": [r[5] for r in rows],
-        })
-
-    prepared = doc_stream.select(
-        F.col(src_col).alias("source"), F.col(id_col).alias("doc_id"),
-        F.col(tokens_col).cast("long").alias("n_tokens"))
-    return prepared.groupBy("source").applyInPandasWithState(
-        fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
 
 
 def substring_hash_index(ref_docs: DataFrame, k: int | None = None,
@@ -472,22 +252,6 @@ def streaming_dsir_gate(doc_stream: DataFrame, llr_model: DataFrame,
                     .alias("avg_llr_micro"))
             .withColumn("admitted",
                         F.col("avg_llr_micro") >= F.lit(int(threshold_micro))))
-
-
-def streaming_gopher_gate(doc_stream: DataFrame,
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
-    """Streaming Gopher quality gate: the same rule columns as the
-    batch query (functions/text.py::gopher_metrics — literally shared
-    code, so streaming == batch by construction), evaluated per
-    arriving document with ZERO state — it is pure column algebra, so
-    it runs map-side inside the micro-batch and is the cheapest first
-    gate of the online funnel (gopher -> vocab OOV -> substring
-    contamination -> DSIR admission), dropping documents before any
-    stateful or model-backed stage pays for them."""
-    from streamforge_spark.functions.text import gopher_metrics
-    return gopher_metrics(doc_stream, id_cols=(id_col,),
-                          text_col=text_col)
 
 
 def minhash_corpus_index(ref_docs: DataFrame, ngram: int = 3):
@@ -815,7 +579,8 @@ def corpus_funnel_verdicts(docs: DataFrame,
     gates on everything.
 
     Each stage is LITERALLY the standalone gate its own test/oracle
-    verifies (streaming_gopher_gate / streaming_vocab_oov /
+    verifies (functions/text.py::gopher_metrics, the column algebra of
+    the ``gopher_quality_flags`` oracle / streaming_vocab_oov /
     streaming_substring_contamination / streaming_fuzzy_dedup_gate /
     streaming_dsir_gate), fed only the survivors of the previous
     stage, so the composition inherits their verified semantics and

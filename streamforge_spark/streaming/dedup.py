@@ -157,71 +157,3 @@ def streaming_merger_exact(df: DataFrame, key_col: str, payload_col: str,
     return prepared.groupBy(key_col).applyInPandasWithState(
         fn, outputStructType=out_schema, stateStructType=_MERGER_STATE,
         outputMode="append", timeoutConf=timeout)
-
-
-def streaming_bloom_dedup(stream: DataFrame, *, key_col: str = "key",
-                          m_bits: int = 1 << 16,
-                          n_buckets: int = 8) -> DataFrame:
-    """Forever-dedup with BOUNDED state: a keyed bloom filter replaces
-    the exact seen-set.  `streaming_dedup` (dropDuplicatesWithin-
-    Watermark) is exact but FORGETS once the watermark passes — a
-    duplicate arriving a week later sails through.  This operator
-    never forgets and never grows: state per bucket is a fixed
-    ``m_bits``-bit array, whatever the cardinality.
-
-    The trade is exactness: false POSITIVES (a genuinely-new record
-    suppressed) occur at the classic bloom rate (~(1-e^{-2n/m})² for
-    2 hashes after n keys) — acceptable for dedup, where dropping a
-    rare fresh record costs a row, while missing duplicates costs
-    correctness downstream.  False negatives cannot happen: the first
-    occurrence ALWAYS emits.
-
-    Keys shard over ``n_buckets`` state groups (md5-derived, so
-    placement is deterministic and replayable); scale the bucket
-    count, not the per-bucket bitset, as cardinality grows.
-    """
-    import hashlib
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType([T.StructField("key", T.StringType())])
-    state_schema = T.StructType([
-        T.StructField("words", T.ArrayType(T.LongType()))])
-    n_words = m_bits // 64
-
-    def positions(key: str):
-        h = hashlib.md5(key.encode()).digest()
-        return (int.from_bytes(h[:8], "big") % m_bits,
-                int.from_bytes(h[8:16], "big") % m_bits)
-
-    def fn(bucket: tuple, pdfs, state: GroupState):
-        import pandas as pd
-        words = list(state.get[0]) if state.exists else [0] * n_words
-        fresh = []
-        for pdf in pdfs:
-            for k in pdf["key"].sort_values():
-                p1, p2 = positions(str(k))
-                seen = ((words[p1 // 64] >> (p1 % 64)) & 1) \
-                    and ((words[p2 // 64] >> (p2 % 64)) & 1)
-                if not seen:
-                    fresh.append(str(k))
-                    for p in (p1, p2):
-                        # keep the word in signed-64 range for the
-                        # LongType state column
-                        w = words[p // 64] | (1 << (p % 64))
-                        words[p // 64] = w - (1 << 64) if w >= (1 << 63) else w
-        state.update((words,))
-        yield pd.DataFrame({"key": fresh})
-
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("bkt:"),
-                                          F.col(key_col).cast("string"))),
-                           1, 15), 16, 10).cast("long"),
-        F.lit(n_buckets))
-    prepared = stream.select(F.col(key_col).cast("string").alias("key"),
-                             bucket.alias("bucket"))
-    return prepared.groupBy("bucket").applyInPandasWithState(
-        fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)

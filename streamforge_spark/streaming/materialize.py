@@ -100,36 +100,3 @@ def streaming_materializer(df: DataFrame, key_col: str, value_col: str,
             timeoutConf=timeout,
         )
     )
-
-
-def streaming_scd2_enrich(stream: DataFrame, versions: DataFrame, *,
-                          key: str = "primary_key",
-                          ts_col: str = "event_time") -> DataFrame:
-    """Stream-static temporal enrichment: each streamed event joins
-    the SCD-2 version of its key that was valid AT its event time —
-    the serving-side twin of the batch `scd2_temporal_join`.
-
-    ``versions`` is the (static, periodically refreshed) history table
-    (key, payload_json, valid_from, valid_to).  Because a key's
-    validity intervals partition the timeline, the interval predicate
-    matches AT MOST ONE version per event, so a plain LEFT join with
-    the range condition is exact — and since stream-static joins are
-    stateless (re-evaluated per micro-batch against the current
-    static snapshot), there is no watermark, no state store, and a
-    dimension refresh is picked up on the next trigger.
-
-    Scale: the version table broadcasts (KB..GB-scale dims); the
-    stream side never shuffles.  A dimension too big to broadcast
-    pre-buckets on the key so the per-batch join is co-located.
-    """
-    from pyspark.sql import functions as F
-    v = versions.select(
-        F.col(key).alias("_v_key"),
-        F.col("payload_json").alias("state_payload"),
-        F.col("valid_from").alias("state_valid_from"),
-        F.col("valid_to").alias("_v_to"))
-    cond = ((F.col(key) == F.col("_v_key"))
-            & (F.col(ts_col) >= F.col("state_valid_from"))
-            & (F.col("_v_to").isNull() | (F.col(ts_col) < F.col("_v_to"))))
-    return (stream.join(F.broadcast(v), cond, "left")
-            .drop("_v_key", "_v_to"))

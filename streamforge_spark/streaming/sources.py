@@ -24,12 +24,6 @@ def file_stream(spark: SparkSession, path: str, schema: T.StructType,
     return reader.load(path)
 
 
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic (timestamp, value) stream for tests/demos."""
-    return (spark.readStream.format("rate")
-            .option("rowsPerSecond", str(rows_per_second)).load())
-
-
 def kafka_stream(spark: SparkSession, bootstrap: str, topic: str,
                  starting_offsets: str = "latest",
                  exactly_once: bool = False) -> DataFrame:

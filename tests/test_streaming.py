@@ -101,22 +101,49 @@ def test_streaming_materializer_changelog(spark, workdir):
     ]
 
 
-def test_streaming_materializer_state_across_batches(spark, workdir):
-    src = f"{workdir}/in"
-    _write_batch(spark, src, [(1, "k", ts("2024-01-01 10:00:00"), "insert", "v1")])
-    stream = file_stream(spark, src, EVENTS_SCHEMA)
-    log = streaming_materializer(stream, key_col="key", value_col="payload",
-                                 time_col="t", delete_op_col="op")
-    q = (log.writeStream.format("memory").queryName("mat2")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    _write_batch(spark, src, [(2, "k", ts("2024-01-01 10:05:00"), "update", "v2")])
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("select * from mat2 order by ts").collect()
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider")
+
+
+def test_streaming_materializer_state_across_batches(spark, workdir,
+                                                     provider=None):
+    # the pandas user state (applyInPandasWithState) that
+    # UserStateMaterialize runs must carry across batches on both the
+    # default HDFS-backed store and the RocksDB provider
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    if provider:
+        spark.conf.set(_PROVIDER_CONF, provider)
+    try:
+        src = f"{workdir}/in"
+        _write_batch(spark, src,
+                     [(1, "k", ts("2024-01-01 10:00:00"), "insert", "v1")])
+        stream = file_stream(spark, src, EVENTS_SCHEMA)
+        log = streaming_materializer(stream, key_col="key",
+                                     value_col="payload", time_col="t",
+                                     delete_op_col="op")
+        q = (log.writeStream.format("memory").queryName("mat2")
+             .outputMode("append").start())
+        q.processAllAvailable()
+        _write_batch(spark, src,
+                     [(2, "k", ts("2024-01-01 10:05:00"), "update", "v2")])
+        q.processAllAvailable()
+        q.stop()
+        rows = spark.sql("select * from mat2 order by ts").collect()
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, prev)
     # second batch must see first batch's state: UPDATE with before=v1
     assert [(r.change_type, r.before, r.after) for r in rows] == [
         ("INSERT", None, "v1"), ("UPDATE", "v1", "v2")]
+
+
+def test_streaming_materializer_state_across_batches_under_rocksdb(
+        spark, workdir):
+    test_streaming_materializer_state_across_batches(
+        spark, workdir, provider=_ROCKSDB)
 
 
 def test_kafka_compacted_tombstones(spark):
@@ -418,84 +445,13 @@ def test_effectively_once_ledger_self_compacts(spark, workdir):
     apply(b, 7)  # replay inside the window is still skipped (no error)
 
 
-def test_streaming_ohlc_matches_batch(spark, workdir):
-    # the shared algebraic agg spec must produce identical bars when
-    # fed incrementally under a watermark as in one batch pass
-    from streamforge_spark.io import load
-    from streamforge_spark.queries.timeseries import ohlc_daily
-    from streamforge_spark.streaming.timeseries import streaming_ohlc
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "user_id", "value")
-    # two arrival batches, split mid-month to exercise bar updates
-    src = f"{workdir}/ev"
-    events.filter(F.dayofmonth("ts") <= 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = streaming_ohlc(stream)
-    q = (out.writeStream.format("memory").queryName("ohlc_out")
-         .outputMode("update").start())
-    q.processAllAvailable()
-    events.filter(F.dayofmonth("ts") > 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    # update mode re-emits a bar on change: keep the LAST emission per key
-    got_df = spark.sql(
-        "select * from (select *, row_number() over "
-        "(partition by user_id, day order by n_trades desc) rn "
-        "from ohlc_out) where rn = 1").drop("rn")
-    got = {(r.user_id, r.day): (r.open_cents, r.high_cents, r.low_cents,
-                                r.close_cents, r.n_trades, r.volume_cents)
-           for r in got_df.collect()}
-    want = {(r.user_id, r.day): (r.open_cents, r.high_cents, r.low_cents,
-                                 r.close_cents, r.n_trades, r.volume_cents)
-            for r in ohlc_daily(spark, "/root/testdata/sf0.001").collect()}
-    assert got == want
-
-
-def test_streaming_topk_matches_batch(spark, workdir):
-    # keyed-state top-k fed in two batches must equal the batch
-    # window-rank result on the same data
-    from streamforge_spark.io import load
-    from streamforge_spark.queries.windows import topk_per_group
-    from streamforge_spark.streaming.timeseries import streaming_topk
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "event_type", "value")
-    src = f"{workdir}/evk"
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = streaming_topk(stream, k=3)
-    q = (out.writeStream.format("memory").queryName("topk_out")
-         .outputMode("update").start())
-    q.processAllAvailable()
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    want = {(r.event_type, r.event_id, r.cents, r.rank)
-            for r in topk_per_group(spark, "/root/testdata/sf0.001").collect()}
-    # the memory sink appends every update; the final top-k per (group,
-    # rank) is the best emission seen there, since each merge only ever
-    # improves a rank slot
-    final = {}
-    for r in spark.sql("select * from topk_out").collect():
-        cur = final.get((r.event_type, r.rank))
-        if cur is None or (r.cents, -r.event_id) > (cur[1], -cur[0]):
-            final[(r.event_type, r.rank)] = (r.event_id, r.cents)
-    got = {(g, eid, c, rk) for (g, rk), (eid, c) in final.items()}
-    assert got == want
-
-
 def test_streaming_dedup_under_rocksdb_state_store(spark, workdir):
     # the production state backend: RocksDB provider (incremental
     # checkpoints, state spills off-heap — the 100 TB configuration)
     # must run our watermark-scoped dedup identically to the default
     # HDFS-backed store. JVM-side only — no protobuf gate.
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
     try:
         src = f"{workdir}/in"
         _write_batch(spark, src, [
@@ -512,86 +468,9 @@ def test_streaming_dedup_under_rocksdb_state_store(spark, workdir):
         assert len(got) == 3 and got[0] in (1, 2) and got[1:] == [3, 4]
     finally:
         if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(_PROVIDER_CONF)
         else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_streaming_ewma_matches_sequential_spec(spark, workdir):
-    # the keyed-state recursive EWMA fed in two time-ordered batches
-    # must equal the sequential per-key recursion over all events
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.timeseries import (
-        ewma_recursion, streaming_ewma)
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "user_id", "value")
-    src = f"{workdir}/ewma_in"
-    first = F.dayofmonth("ts") <= 15
-    events.filter(first).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = streaming_ewma(stream)
-    q = (out.writeStream.format("memory").queryName("ewma_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    events.filter(~first).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.user_id, r.event_id): (r.x_micro, r.ewma_micro, r.is_anomaly)
-           for r in spark.sql("select * from ewma_out").collect()}
-    pdf = events.toPandas().sort_values(["ts", "event_id"])
-    want = {}
-    for uid, g in pdf.groupby("user_id"):
-        xs = [int(round(v * 100)) * 10000 for v in g["value"]]
-        rows, _ = ewma_recursion(xs, None)
-        for eid, row in zip(g["event_id"], rows):
-            want[(uid, int(eid))] = row
-    assert len(got) == len(want)
-    assert got == want
-
-
-def test_streaming_debounce_emits_latest_after_quiet_gap(spark, workdir):
-    # trailing-edge debounce: a burst of edits per key must produce ONE
-    # emission — the latest row — and only after the watermark passes
-    # the quiet period; a key still inside its quiet window stays held
-    import pandas as pd
-    from streamforge_spark.streaming.timeseries import streaming_debounce
-    schema = ("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
-    src = f"{workdir}/deb_in"
-
-    def write(rows):
-        spark.createDataFrame(
-            pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "value"]),
-            schema=schema).coalesce(1).write.mode("append").parquet(src)
-
-    write([(1, pd.Timestamp("2024-01-01 10:00:00"), 1, 1.0),
-           (2, pd.Timestamp("2024-01-01 10:00:05"), 1, 2.0),
-           (3, pd.Timestamp("2024-01-01 10:00:03"), 2, 3.0)])
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_debounce(stream, quiet_ms=60_000, watermark="10 seconds")
-    q = (out.writeStream.format("memory").queryName("deb_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    assert spark.sql("select * from deb_out").count() == 0  # all still held
-    # advance the watermark past both quiet windows via an unrelated key
-    write([(4, pd.Timestamp("2024-01-01 10:05:00"), 3, 4.0)])
-    q.processAllAvailable()
-    got = {(r.user_id, r.event_id, r.value_cents)
-           for r in spark.sql("select * from deb_out").collect()}
-    assert got == {(1, 2, 200), (2, 3, 300)}  # latest of the burst only
-    # key 3 is still inside its own quiet window: a newer event for it
-    # replaces the held row instead of emitting the old one
-    write([(5, pd.Timestamp("2024-01-01 10:10:00"), 3, 5.0)])
-    q.processAllAvailable()
-    held3 = {r.event_id for r in spark.sql(
-        "select * from deb_out where user_id = 3").collect()}
-    assert held3 == set()
-    # and once the watermark clears 10:10 + quiet, the LATEST emits
-    write([(6, pd.Timestamp("2024-01-01 10:20:00"), 4, 6.0)])
-    q.processAllAvailable()
-    q.stop()
-    held3 = {(r.event_id, r.value_cents) for r in spark.sql(
-        "select * from deb_out where user_id = 3").collect()}
-    assert held3 == {(5, 500)}
+            spark.conf.set(_PROVIDER_CONF, prev)
 
 
 def test_streaming_hll_daily_matches_batch(spark, workdir):
@@ -622,115 +501,6 @@ def test_streaming_hll_daily_matches_batch(spark, workdir):
     want = {(r.scope, r.est_users)
             for r in hll_daily_distinct(spark, "/root/testdata/sf0.001")
             .filter(F.col("scope") != "total").collect()}
-    assert got == want
-
-
-def test_streaming_cep_matches_batch(spark, workdir):
-    # the watermark-driven CEP state machine fed in two time-ordered
-    # halves (+ a sentinel to push the final watermark) must emit
-    # exactly the batch pattern matches
-    import pandas as pd
-    from streamforge_spark.io import load
-    from streamforge_spark.queries.analytics import cep_click_error_pattern
-    from streamforge_spark.streaming.cep import streaming_cep_click_error
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "user_id", "event_type")
-    src = f"{workdir}/cep_in"
-    first = F.dayofmonth("ts") <= 15
-    events.filter(first).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = streaming_cep_click_error(stream)
-    q = (out.writeStream.format("memory").queryName("cep_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    events.filter(~first).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    # sentinel: a 'view' event a year out advances the watermark past
-    # every undecided click's deadline
-    spark.createDataFrame(
-        pd.DataFrame([{"event_id": 10**9,
-                       "ts": pd.Timestamp("2025-06-01"),
-                       "user_id": 9999, "event_type": "view"}]),
-        schema=events.schema).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.user_id, r.click_id, r.error_id, r.gap_us)
-           for r in spark.sql("select * from cep_out").collect()}
-    want = {(r.user_id, r.click_id, r.error_id, r.gap_us)
-            for r in cep_click_error_pattern(
-                spark, "/root/testdata/sf0.001").collect()}
-    assert got == want and len(want) > 0
-
-
-def test_streaming_cep_under_rocksdb_state_store(spark, workdir):
-    # the CEP buffer state must behave identically on the production
-    # RocksDB state-store backend
-    import pandas as pd
-    from streamforge_spark.io import load
-    from streamforge_spark.queries.analytics import cep_click_error_pattern
-    from streamforge_spark.streaming.cep import streaming_cep_click_error
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try:
-        events = load(spark, "/root/testdata/sf0.001", "events") \
-            .select("event_id", "ts", "user_id", "event_type")
-        src = f"{workdir}/cepr_in"
-        events.coalesce(1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        q = (streaming_cep_click_error(stream)
-             .writeStream.format("memory").queryName("cepr_out")
-             .outputMode("append").start())
-        q.processAllAvailable()
-        spark.createDataFrame(
-            pd.DataFrame([{"event_id": 10**9,
-                           "ts": pd.Timestamp("2025-06-01"),
-                           "user_id": 9999, "event_type": "view"}]),
-            schema=events.schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        got = {(r.user_id, r.click_id, r.error_id, r.gap_us)
-               for r in spark.sql("select * from cepr_out").collect()}
-        want = {(r.user_id, r.click_id, r.error_id, r.gap_us)
-                for r in cep_click_error_pattern(
-                    spark, "/root/testdata/sf0.001").collect()}
-        assert got == want
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_streaming_holt_matches_batch(spark, workdir):
-    # per-key (level, trend) state fed in two month-ordered batches
-    # must equal the batch WITH RECURSIVE holt_forecast bit-for-bit
-    from streamforge_spark.io import load
-    from streamforge_spark.queries.timeseries import holt_forecast
-    from streamforge_spark.streaming.timeseries import streaming_holt
-    sf = "/root/testdata/sf0.001"
-    orders = load(spark, sf, "orders")
-    series = (orders.groupBy(F.col("o_custkey").alias("c_custkey"),
-                             F.date_trunc("month", "o_orderdate").alias("month"))
-              .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                   .alias("rev_cents")))
-    pivot = "1998-01-01"
-    src = f"{workdir}/holt_src"
-    series.filter(F.col("month") < pivot).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(series.schema).parquet(src)
-    out = streaming_holt(stream)
-    q = (out.writeStream.format("memory").queryName("holt_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    series.filter(F.col("month") >= pivot).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {tuple(r) for r in spark.sql("select * from holt_out").collect()}
-    want = {tuple(r) for r in holt_forecast(spark, sf).collect()}
     assert got == want
 
 
@@ -768,12 +538,11 @@ def test_state_inspect_reads_dedup_checkpoint(spark, workdir):
 
 def test_drift_counts_per_day_bucket_absence(spark):
     # A baseline bucket that is present on day 1 but VANISHES on day 2
-    # must still contribute |0 - base_ppm| to day 2's distance.  The
-    # streaming==batch test can't see this (both sides share the code);
-    # a (event_type, bucket)-keyed outer join loses the term whenever
-    # the bucket matched ANY day of that type.
+    # must still contribute |0 - base_ppm| to day 2's distance: a
+    # (event_type, bucket)-keyed outer join loses the term whenever the
+    # bucket matched ANY day of that type.
     import datetime
-    from streamforge_spark.streaming.timeseries import drift_vs_baseline
+    from streamforge_spark.queries.timeseries import drift_vs_baseline
     d1 = datetime.datetime(2024, 1, 1)
     d2 = datetime.datetime(2024, 1, 2)
     hist = spark.createDataFrame(
@@ -787,433 +556,6 @@ def test_drift_counts_per_day_bucket_absence(spark):
     # day1: shares 500000/500000 == baseline -> 0
     # day2: |1000000-500000| + |0-500000| = 1000000 (NOT 500000)
     assert got == {(d1, 0), (d2, 1000000)}
-
-
-def test_streaming_drift_matches_batch(spark, workdir):
-    # windowed histogram fed in two arrival batches + TV drift vs a
-    # static baseline must equal the same computation done in one batch
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.timeseries import (
-        drift_vs_baseline, streaming_value_histogram)
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "event_type", "value")
-    src = f"{workdir}/evd"
-    events.filter(F.dayofmonth("ts") <= 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = streaming_value_histogram(stream)
-    q = (out.writeStream.format("memory").queryName("drift_hist")
-         .outputMode("update").start())
-    q.processAllAvailable()
-    events.filter(F.dayofmonth("ts") > 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    # update mode re-emits on change: last (= max n) emission per key wins
-    hist = spark.sql(
-        "select event_type, day, bucket, max(n) as n from drift_hist "
-        "group by event_type, day, bucket")
-    # baseline: the first week's distribution, computed batch-side
-    base_ev = events.filter(F.dayofmonth("ts") <= 7)
-    cents = F.round(F.col("value") * 100).cast("long")
-    bh = (base_ev.groupBy("event_type",
-                          F.floor(cents / F.lit(5000)).cast("long")
-                          .alias("bucket"))
-          .agg(F.count(F.lit(1)).alias("n")))
-    bt = bh.groupBy("event_type").agg(F.sum("n").alias("t"))
-    baseline = (bh.join(bt, "event_type")
-                .select("event_type", "bucket",
-                        F.round(F.col("n").cast("double")
-                                / F.col("t").cast("double") * 1000000)
-                        .cast("long").alias("share_ppm")))
-    got = {(r.event_type, r.day, r.tv2_ppm)
-           for r in drift_vs_baseline(hist, baseline).collect()}
-    # batch analog: identical histogram computed in one pass
-    batch_hist = (events.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day"),
-        F.floor(cents / F.lit(5000)).cast("long").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n")))
-    want = {(r.event_type, r.day, r.tv2_ppm)
-            for r in drift_vs_baseline(batch_hist, baseline).collect()}
-    assert got == want and len(got) > 10
-
-
-def test_streaming_hll_distinct_matches_batch(spark, workdir):
-    # HLL register merges are max-ops (order-insensitive), so the
-    # streaming estimate must EQUAL the batch estimate, not approximate
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.timeseries import streaming_daily_distinct
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "user_id")
-    src = f"{workdir}/evh"
-    # time-ordered arrival (watermark-legal), with day 15 sent in BOTH
-    # batches: exercises cross-batch register merge for one window and
-    # HLL's insensitivity to duplicate arrivals
-    events.filter(F.dayofmonth("ts") <= 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (streaming_daily_distinct(stream)
-         .writeStream.format("memory").queryName("hll_out")
-         .outputMode("update").start())
-    q.processAllAvailable()
-    events.filter(F.dayofmonth("ts") >= 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.day, r.est_users) for r in spark.sql(
-        "select day, max(est_users) as est_users from hll_out group by day"
-    ).collect()}
-    want = {(r.day, r.est_users) for r in
-            (events.groupBy(F.window("ts", "1 day").alias("w"))
-             .agg(F.hll_sketch_agg("user_id").alias("sk"))
-             .select(F.col("w.start").alias("day"),
-                     F.hll_sketch_estimate("sk").alias("est_users"))
-             ).collect()}
-    assert got == want and len(got) > 5
-
-
-def test_streaming_scd2_enrich_matches_batch(spark, workdir):
-    # stream-static temporal join must enrich each event with the same
-    # version the batch SCD2 join picks
-    from streamforge_spark.envelope import envelope_from_events
-    from streamforge_spark.io import load
-    from streamforge_spark.operators.materialize import materializer_history
-    from streamforge_spark.streaming.materialize import streaming_scd2_enrich
-    events = load(spark, "/root/testdata/sf0.001", "events")
-    env = envelope_from_events(events)
-    hist = materializer_history(
-        env, ["primary_key"], ["event_time", "event_id"], "event_time",
-        delete_predicate=F.col("operation") == "delete")
-    versions = hist.select("primary_key", "payload_json",
-                           "valid_from", "valid_to").localCheckpoint()
-    left = env.select("event_id", "primary_key", "event_time")
-    want = {(r.event_id, r.state_payload) for r in
-            streaming_scd2_enrich(left, versions).collect()}
-    src = f"{workdir}/scd2"
-    left.coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(left.schema).parquet(src)
-    q = (streaming_scd2_enrich(stream, versions)
-         .writeStream.format("memory").queryName("scd2_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.event_id, r.state_payload)
-           for r in spark.sql("select * from scd2_out").collect()}
-    assert got == want and len(got) > 100
-
-
-def test_streaming_token_budget_admission(spark, workdir):
-    # per-source budget: arrival-order admission across two batches
-    # must equal the batch prefix-sum spec in the same order, and
-    # never overshoot any source's budget
-    from streamforge_spark.functions.text import token_count
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.curation import streaming_token_budget
-    budget = 800
-    docs = (load(spark, "/root/testdata/sf0.001", "documents")
-            .select("doc_id", "source",
-                    token_count(F.col("text")).alias("n_tokens")))
-    src = f"{workdir}/docs"
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    q = (streaming_token_budget(stream, budget=budget)
-         .writeStream.format("memory").queryName("budget_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = [(r.source, r.doc_id, r.cum_tokens)
-           for r in spark.sql(
-               "select * from budget_out order by source, cum_tokens").collect()]
-    # batch spec: same arrival order (evens by doc_id, then odds)
-    from pyspark.sql import Window
-    ordered = docs.withColumn(
-        "arr", F.struct((F.col("doc_id") % 2).alias("p"), "doc_id"))
-    w = (Window.partitionBy("source").orderBy("arr")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    spec = (ordered.withColumn("cum", F.sum("n_tokens").over(w))
-            .where(F.col("cum") <= budget))
-    # NOTE: the window spec admits only while the prefix stays in
-    # budget CONTIGUOUSLY; FCFS admission skips an oversized doc and
-    # may admit a later smaller one, so compare against a python fold
-    rows = ordered.select("source", "doc_id", "n_tokens", "arr").collect()
-    used, want = {}, []
-    for r in sorted(rows, key=lambda r: (r.source, (r.arr.p, r.arr.doc_id))):
-        u = used.get(r.source, 0)
-        if u + r.n_tokens <= budget:
-            used[r.source] = u + r.n_tokens
-            want.append((r.source, r.doc_id, used[r.source]))
-    assert got == sorted(want, key=lambda t: (t[0], t[2]))
-    assert max(used.values()) <= budget
-
-
-def test_streaming_rate_limit_matches_batch_fold(spark, workdir):
-    # token bucket over two arrival batches == one python fold over the
-    # event-time-ordered stream (event-time refill => deterministic)
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.curation import streaming_rate_limit
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "user_id")
-    src = f"{workdir}/evr"
-    events.filter(F.dayofmonth("ts") <= 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (streaming_rate_limit(stream, rate_num=1, rate_den=100_000, burst=2)
-         .writeStream.format("memory").queryName("rate_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    events.filter(F.dayofmonth("ts") > 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {r.event_id: (r.admitted, r.tokens_after)
-           for r in spark.sql("select * from rate_out").collect()}
-    # batch spec: same fold in python over (user, ts) order
-    scale = 1_000_000
-    rows = events.select("user_id", "event_id",
-                         F.unix_micros("ts").alias("eus")).collect()
-    state = {}
-    want = {}
-    for r in sorted(rows, key=lambda r: (r.user_id, r.eus, r.event_id)):
-        tokens, last = state.get(r.user_id, (2 * scale, None))
-        if last is not None and r.eus > last:
-            tokens = min(2 * scale, tokens + (r.eus - last) * 1 // 100_000)
-        last = r.eus if last is None else max(last, r.eus)
-        ok = tokens >= scale
-        if ok:
-            tokens -= scale
-        state[r.user_id] = (tokens, last)
-        want[r.event_id] = (ok, tokens // scale)
-    assert got == want
-    assert any(not v[0] for v in got.values())   # throttling actually bites
-
-
-def test_streaming_bloom_dedup_never_forgets(spark, workdir):
-    # duplicates arriving in a later batch (far beyond any watermark)
-    # must STILL be suppressed; every first occurrence must emit
-    from streamforge_spark.streaming.dedup import streaming_bloom_dedup
-    src = f"{workdir}/bloomdd"
-    b1 = spark.createDataFrame([(f"k{i}",) for i in range(200)], "key string")
-    b1.coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = (streaming_bloom_dedup(stream)
-         .writeStream.format("memory").queryName("bloom_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    # batch 2: 100 repeats + 100 new keys
-    b2 = spark.createDataFrame(
-        [(f"k{i}",) for i in range(100)] + [(f"n{i}",) for i in range(100)],
-        "key string")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = [r.key for r in spark.sql("select * from bloom_out").collect()]
-    assert len(got) == len(set(got))            # nothing emitted twice
-    emitted = set(got)
-    # no false negatives: a key absent from the output must be a
-    # bloom false positive of an earlier DIFFERENT key — at 300 keys
-    # over 2x64k bits that's vanishingly rare, so demand near-total
-    # coverage and full suppression of the 100 repeats
-    assert len(emitted) >= 298
-    assert sum(1 for k in emitted if k.startswith("k")) <= 200
-
-
-def test_streaming_histogram_under_rocksdb_matches_default(spark, workdir):
-    # the windowed drift histogram must be store-agnostic: RocksDB
-    # provider (the 100 TB configuration) == default HDFS-backed store
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.timeseries import streaming_value_histogram
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "event_type", "value")
-
-    def run(name, provider):
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None)
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider)
-        try:
-            src = f"{workdir}/{name}"
-            events.coalesce(1).write.mode("append").parquet(src)
-            stream = spark.readStream.schema(events.schema).parquet(src)
-            q = (streaming_value_histogram(stream)
-                 .writeStream.format("memory").queryName(name)
-                 .outputMode("update").start())
-            q.processAllAvailable()
-            q.stop()
-            return {(r.event_type, r.day, r.bucket, r.n)
-                    for r in spark.sql(f"select * from {name}").collect()}
-        finally:
-            if provider and prev:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev)
-
-    default = run("hist_default", None)
-    rocks = run("hist_rocks", "org.apache.spark.sql.execution.streaming."
-                "state.RocksDBStateStoreProvider")
-    assert default == rocks and len(default) > 50
-
-
-def test_streaming_pack_chunks_state_spans_batches(spark, workdir):
-    # packing positions must be continuous across micro-batches: a
-    # chunk that starts in batch 1 finishes in batch 2 with the same
-    # chunk id, and the whole two-batch run equals one python fold in
-    # the same arrival order
-    from streamforge_spark.functions.text import token_count
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.curation import streaming_pack_chunks
-    C = 512
-    docs = (load(spark, "/root/testdata/sf0.001", "documents")
-            .select("doc_id", "source",
-                    token_count(F.col("text")).alias("n_tokens")))
-    src = f"{workdir}/packdocs"
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    q = (streaming_pack_chunks(stream, chunk_tokens=C)
-         .writeStream.format("memory").queryName("pack_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.source, r.doc_id): (r.start_pos, r.chunk_first,
-                                  r.chunk_last, r.split)
-           for r in spark.sql("select * from pack_out").collect()}
-    # python fold in arrival order (evens by doc_id, then odds)
-    rows = docs.collect()
-    cum, want = {}, {}
-    for r in sorted(rows, key=lambda r: (r.doc_id % 2, r.doc_id)):
-        if r.n_tokens <= 0:
-            continue
-        s = cum.get(r.source, 0)
-        cum[r.source] = s + r.n_tokens
-        cf, cl = s // C, (cum[r.source] - 1) // C
-        want[(r.source, r.doc_id)] = (s, cf, cl, cf != cl)
-    assert got == want and len(got) > 100
-    # at least one doc straddles a batch boundary chunk: its start is
-    # in batch-1 territory but its chunk completes with batch-2 docs
-    assert any(v[3] for v in got.values())
-
-
-def test_streaming_funnel_matches_batch_min_chain(spark, workdir):
-    # staged funnel state across two in-order batches == the batch
-    # chained-MIN formulation (funnel_conversion's spec)
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.funnel import streaming_funnel
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "user_id", "event_type")
-    src = f"{workdir}/funnel_src"
-    events.filter(F.dayofmonth("ts") <= 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (streaming_funnel(stream)
-         .writeStream.format("memory").queryName("funnel_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    events.filter(F.dayofmonth("ts") > 15).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.user_id, r.stage_idx): r.completed_us
-           for r in spark.sql("select * from funnel_out").collect()}
-    # batch spec: chained MINs over the full history (order-free)
-    rows = events.select("user_id", "event_type",
-                         F.unix_micros("ts").alias("eus")).collect()
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r.user_id, []).append((r.eus, r.event_type))
-    want = {}
-    for u, evs in by_user.items():
-        t1 = min((e for e, t in evs if t == "signup"), default=None)
-        if t1 is None:
-            continue
-        want[(u, 0)] = t1
-        t2 = min((e for e, t in evs if t == "click" and e > t1),
-                 default=None)
-        if t2 is None:
-            continue
-        want[(u, 1)] = t2
-        t3 = min((e for e, t in evs if t == "purchase" and e > t2),
-                 default=None)
-        if t3 is not None:
-            want[(u, 2)] = t3
-    assert got == want and len(got) > 30
-
-
-def test_streaming_funnel_state_crosses_batches(spark, workdir):
-    # signup arrives in batch 1, click/purchase in batch 2: the stage
-    # state must survive the boundary and enforce strict ordering
-    # (the click at the SAME instant as signup does not count)
-    import datetime as dt
-    from streamforge_spark.streaming.funnel import streaming_funnel
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string")
-    src = f"{workdir}/funnel2"
-    spark.createDataFrame(
-        [(1, t0, 7, "signup"), (2, t0, 7, "click")], schema) \
-        .coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema).parquet(src)
-    q = (streaming_funnel(stream)
-         .writeStream.format("memory").queryName("funnel2_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    spark.createDataFrame(
-        [(3, t0 + dt.timedelta(minutes=1), 7, "click"),
-         (4, t0 + dt.timedelta(minutes=2), 7, "purchase")], schema) \
-        .coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = [(r.stage_idx, r.stage) for r in spark.sql(
-        "select * from funnel2_out order by completed_us, stage_idx")
-        .collect()]
-    # batch 1: only signup (same-instant click fails strict order);
-    # batch 2: click then purchase complete against carried state
-    assert got == [(0, "signup"), (1, "click"), (2, "purchase")]
-
-
-def test_streaming_exact_percentiles_match_batch(spark, workdir):
-    # drained streaming cents-histogram + shared percentile selection
-    # == the oracle-checked batch exact_percentiles_by_type
-    from streamforge_spark.functions.percentiles import (
-        percentiles_from_frequencies,
-    )
-    from streamforge_spark.io import load
-    from streamforge_spark.streaming.timeseries import (
-        streaming_cents_histogram,
-    )
-    from streamforge_spark.registry import QUERIES, load_all
-    load_all()
-    events = load(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "ts", "event_type", "value")
-    src = f"{workdir}/pctl_src"
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (streaming_cents_histogram(stream)
-         .writeStream.format("memory").queryName("pctl_hist")
-         .outputMode("update").start())
-    q.processAllAvailable()
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    drained = spark.sql(
-        "select event_type, c, max(k) as k from pctl_hist "
-        "group by event_type, c")
-    got = {(r.event_type): (r.p50_cents, r.p90_cents, r.p99_cents)
-           for r in percentiles_from_frequencies(
-               drained, ["event_type"]).collect()}
-    want = {(r.event_type): (r.p50_cents, r.p90_cents, r.p99_cents)
-            for r in QUERIES["exact_percentiles_by_type"](
-                spark, "/root/testdata/sf0.001").collect()}
-    assert got == want and len(got) >= 4
 
 
 def test_streaming_substring_contamination_matches_batch(spark, workdir):
@@ -1391,37 +733,6 @@ def test_streaming_dsir_gate_matches_batch(spark, workdir):
         dsir_bucket(F.lit("alpha")).alias("b")).collect()[0].b
     assert got[12][0] == 2
     assert got[12][1] == model_rows[alpha_bkt]
-
-
-def test_streaming_gopher_gate_matches_batch(spark, workdir):
-    # the gate is stateless shared column algebra: streaming rows ==
-    # the batch builder's rows for the same documents
-    from streamforge_spark.functions.text import gopher_metrics
-    from streamforge_spark.streaming.curation import streaming_gopher_gate
-
-    DOCS = T.StructType([T.StructField("doc_id", T.LongType()),
-                         T.StructField("text", T.StringType())])
-    rows = [(1, " ".join(["the"] * 50)),
-            (2, "too short"),
-            (3, " ".join(["of"] * 49 + ["the"]))]
-    src = f"{workdir}/gopherdocs"
-    spark.createDataFrame(rows[:2], DOCS).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(DOCS).parquet(src)
-    q = (streaming_gopher_gate(stream)
-         .writeStream.format("memory").queryName("gopher_out")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    spark.createDataFrame(rows[2:], DOCS).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {r.doc_id: r.asDict() for r in
-           spark.sql("select * from gopher_out").collect()}
-    want = {r.doc_id: r.asDict() for r in
-            gopher_metrics(spark.createDataFrame(rows, DOCS)).collect()}
-    assert got == want
-    assert got[1]["gopher_pass"] and not got[2]["gopher_pass"]
 
 
 def test_streaming_fuzzy_dedup_gate(spark, workdir):

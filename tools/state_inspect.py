@@ -15,7 +15,7 @@ Prints the operator/state metadata (state-metadata source), then a
 sample of the keyed state rows (statestore source) with per-partition
 row counts — the skew view that tells you which state partition is
 hot. Works on any checkpoint written by this repo's streaming jobs
-(dedup, merger, materializer, CEP, Holt, EWMA, debounce).
+(dedup, merger, materializer, sessions, joins).
 """
 
 from __future__ import annotations
