@@ -7,7 +7,8 @@ thjung123/streamforge (a Flink-based streaming-pattern framework, see
 - operators are functions ``DataFrame -> DataFrame`` (or
   ``-> (pass_df, dlq_df)`` for validating operators — the dual-output
   DLQ protocol, cf. reference ``core/dlq/DLQPublisher.java``),
-- pipelines are plain composition (``pipeline.Pipeline``),
+- pipelines are plain composition; each streaming job is one query
+  (``jobs.py::_one_query``),
 - batch and Structured Streaming share the same column algebra,
 - everything stays in Catalyst-optimizable DataFrame expressions; no
   row-at-a-time Python in the hot path.

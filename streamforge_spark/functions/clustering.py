@@ -1,9 +1,8 @@
 """Distributed k-means over embedding columns (corpus clustering for
 curation: semantic bucketing, cluster-balanced sampling, IVF cells).
 
-Unlike the bounded-sample IVF trainer (similarity.py::train_ivf_centroids,
-which never looks past ``sample_n`` rows), this is FULL-corpus Lloyd's
-iterations in fixed-point arithmetic:
+FULL-corpus Lloyd's iterations in fixed-point arithmetic, not a
+bounded driver sample:
 
 - vectors quantize to integer units (``round(x * QUANT)`` — exact,
   order-independent);
@@ -151,20 +150,3 @@ def gram_matrix(emb: DataFrame, *, id_col: str = "vec_id",
 
     parts = e.mapInPandas(partial, "i long, j long, g long")
     return parts.groupBy("i", "j").agg(F.sum("g").alias("g"))
-
-
-def pca_components(gram_rows, dim: int, n_count: int, k: int = 8) -> np.ndarray:
-    """Driver-side PCA from the distributed Gram matrix: rebuild the
-    symmetric d×d covariance (mean-free variant: G/n), eigendecompose,
-    return the top-k components (k, d). d is small by construction —
-    this is the standard "sufficient statistics to the driver, heavy
-    data stays out" split; the projection back onto the corpus is one
-    broadcast matmul (same stage shape as kmeans assignment).
-    Eigenvectors are float (LAPACK) — downstream projections are for
-    modeling, not oracle comparison."""
-    G = np.zeros((dim, dim), dtype=np.float64)
-    for i, j, g in gram_rows:
-        G[i, j] = G[j, i] = float(g)
-    w, v = np.linalg.eigh(G / max(n_count, 1))
-    order = np.argsort(w)[::-1][:k]
-    return v[:, order].T

@@ -51,7 +51,9 @@ def _dot_sql(col: str, vals: "np.ndarray") -> str:
 
 
 def lsh_signature_sql(col: str, planes: np.ndarray) -> str:
-    """SQL-string form of :func:`lsh_signature` — same bits."""
+    """Sign-of-projection bit signature for one table, as a SQL
+    expression: bit p is set when ``col`` · planes[p] >= 0, giving a
+    long in [0, 2^planes)."""
     parts = ["CAST(0 AS BIGINT)"]
     for p, plane in enumerate(planes):
         parts.append(
@@ -59,18 +61,6 @@ def lsh_signature_sql(col: str, planes: np.ndarray) -> str:
             f"THEN CAST({1 << p} AS BIGINT) "
             f"ELSE CAST(0 AS BIGINT) END)")
     return "(" + " | ".join(parts) + ")"
-
-
-def lsh_signature(v: Column, planes: np.ndarray) -> Column:
-    """Sign-of-projection bit signature for one table: long in
-    [0, 2^planes)."""
-    sig = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        from streamforge_spark.functions.exprs import lit_double_array
-        arr = lit_double_array(plane)
-        bit = F.when(_dot(v, arr) >= 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseOR(bit)
-    return sig
 
 
 def vec_dim(emb: DataFrame, vec_col: str = "embedding") -> int:
@@ -161,109 +151,13 @@ def semantic_dup_marks(emb: DataFrame, *, id_col: str = "vec_id",
             .select(F.col("d2").alias(id_col), F.col("d1").alias("dup_of"), "cos"))
 
 
-IVF_CENTROIDS = 16
-IVF_NPROBE = 4
-IVF_SAMPLE = 512
-IVF_ITERS = 5
-
-
-def train_ivf_centroids(emb: DataFrame, *, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        n_centroids: int = IVF_CENTROIDS,
-                        sample_n: int = IVF_SAMPLE,
-                        iters: int = IVF_ITERS) -> np.ndarray:
-    """Spherical k-means coarse quantizer trained on a BOUNDED,
-    deterministic sample (the ``sample_n`` lowest ids) — the standard
-    IVF recipe: training touches a driver-sized sample regardless of
-    corpus size, so this step is O(sample) at 100 TB, never O(corpus).
-    Init = first ``n_centroids`` sample vectors; a few Lloyd rounds
-    with L2-normalized means. Returns (n_centroids, dim) unit rows."""
-    rows = (emb.orderBy(id_col).limit(sample_n)
-            .select(F.col(vec_col).cast("array<double>")).collect())
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    C = X[: min(n_centroids, len(X))].copy()
-    for _ in range(iters):
-        assign = (X @ C.T).argmax(axis=1)
-        for j in range(len(C)):
-            members = X[assign == j]
-            if len(members):
-                c = members.sum(axis=0)
-                n = np.linalg.norm(c)
-                if n > 1e-12:
-                    C[j] = c / n
-    return C
-
-
-def ann_ivf_topk(emb: DataFrame, query_ids, k: int = 10,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 n_centroids: int = IVF_CENTROIDS, nprobe: int = IVF_NPROBE,
-                 sample_n: int = IVF_SAMPLE) -> DataFrame:
-    """IVF-style approximate top-k: every corpus vector is assigned to
-    its nearest coarse centroid (one Arrow-batched pass, argmax over a
-    broadcast (n_centroids, dim) matrix); each query probes its
-    ``nprobe`` nearest cells; exact cosine + rank within the probed
-    candidates only.
-
-    100 TB shape: the corpus-side work is one narrow scan + a matmul
-    per Arrow batch (no shuffle); the candidate join shuffles on the
-    cell id, whose fan-out is corpus/n_centroids * nprobe per query —
-    tune n_centroids ~ sqrt(corpus) to bound cell size. Compare
-    ann_lsh_topk (hash buckets, no training) — IVF trades a bounded
-    training pass for better-shaped cells on clustered data."""
-    spark = emb.sparkSession
-    C = train_ivf_centroids(emb, id_col=id_col, vec_col=vec_col,
-                            n_centroids=n_centroids, sample_n=sample_n)
-    bc = spark.sparkContext.broadcast(C)
-    e = emb.select(F.col(id_col).alias("_id"),
-                   F.col(vec_col).cast("array<double>").alias("v"))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cm = bc.value
-        for pdf in batches:
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            yield pd.DataFrame({
-                "_id": pdf["_id"], "v": pdf["v"],
-                "cell": (Vn @ Cm.T).argmax(axis=1).astype("int32")})
-
-    assigned = e.mapInPandas(assign, "_id long, v array<double>, cell int")
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cm = bc.value
-        for pdf in batches:
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            near = np.argsort(-(Vn @ Cm.T), axis=1)[:, :nprobe]
-            out = pdf.loc[pdf.index.repeat(nprobe)].reset_index(drop=True)
-            out["cell"] = near.reshape(-1).astype("int32")
-            yield out.rename(columns={"_id": "qid", "v": "qv"})
-
-    q = (e.filter(F.col("_id").isin(list(query_ids)))
-         .mapInPandas(probe, "qid long, qv array<double>, cell int"))
-    cands = (
-        assigned.join(q, "cell")
-        .filter(F.col("_id") != F.col("qid"))
-        .dropDuplicates(["qid", "_id"])
-    )
-    scored = cands.select(
-        "qid", F.col("_id").alias("cid"),
-        cosine(F.col("qv"), F.col("v")).alias("cos"))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("qid").alias("query_id"), F.col("cid").alias("neighbor_id"),
-                    F.col("rank").cast("long").alias("rank"), "cos"))
-
-
 def ann_ivf_fixed_topk(emb: DataFrame, query_ids, k: int = 10, *,
                        cells: int = 16, rounds: int = 2, nprobe: int = 4,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        train_on: DataFrame | None = None,
                        filter_label_col: str | None = None) -> DataFrame:
-    """IVF ANN top-k over a FIXED-POINT coarse quantizer — the fully
-    deterministic (and therefore oracle-checkable end-to-end) variant
-    of :func:`ann_ivf_topk`.
+    """IVF ANN top-k over a FIXED-POINT coarse quantizer — fully
+    deterministic, and therefore oracle-checkable end to end.
 
     Index build: full-corpus fixed-point k-means
     (clustering.py::kmeans_centroids — integer distances, exact argmin,
@@ -273,12 +167,11 @@ def ann_ivf_fixed_topk(emb: DataFrame, query_ids, k: int = 10, *,
     cosine on the raw doubles (sequential fold, IEEE-identical to
     DuckDB's list_dot_product).
 
-    100 TB shape: identical to ann_ivf_topk — corpus side is one narrow
-    scan + an integer matmul per Arrow batch, the candidate join
-    shuffles on the cell id (fan-out corpus/cells * nprobe per query),
-    training is rounds-1 extra scans with k-row aggregations. The
-    trade vs the float trainer: full-corpus training passes instead of
-    a bounded driver sample, bought back as exact reproducibility —
+    100 TB shape: corpus side is one narrow scan + an integer matmul
+    per Arrow batch, the candidate join shuffles on the cell id
+    (fan-out corpus/cells * nprobe per query), training is rounds-1
+    extra scans with k-row aggregations. Full-corpus training passes
+    instead of a bounded driver sample buy exact reproducibility —
     index builds for production corpora want exactly that audit story.
 
     ``train_on`` restricts the Lloyd trainer to a sub-population while

@@ -8,8 +8,6 @@ columns into the scan automatically (verify with
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,8 +15,6 @@ TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Per-session plan memo for the fixture tables (r12, guide §5: the
 # driver should do almost no work).  Every query re-loaded its tables
@@ -94,86 +90,14 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
-def write_bucketed(df: DataFrame, table: str, key: str, buckets: int,
-                   path: str) -> None:
-    """Persist a table bucketed + sorted on its join key, so every
-    subsequent equi-join or aggregation on that key is co-located —
-    zero exchange, zero sort at read time.
-
-    This is the 100 TB answer to a repeatedly-joined fact table (e.g.
-    lineitem x orders on the orderkey): pay one shuffle at write time,
-    then every downstream join plans SortMergeJoin with NO Exchange on
-    either side (see tests/test_plans.py::test_bucketed_join_no_shuffle).
-    Bucket count is a layout contract: choose ~(table_size /
-    target_partition_size) at the largest consumer's scale."""
-    (df.write.bucketBy(buckets, key).sortBy(key)
-     .option("path", path).mode("overwrite").saveAsTable(table))
-
-
-def write_partitioned(df: DataFrame, path: str, *,
-                      partition_cols: list[str],
-                      max_records_per_file: int = 1_000_000) -> None:
-    """Persist a table hive-partitioned on low-cardinality columns
-    (typically a derived date column), so any query filtering on them
-    plans PartitionFilters — whole directories are skipped before a
-    single row is read.
-
-    This is the 100 TB answer to time-scoped scans (the dominant query
-    shape on event/CDC data): a day-partitioned 100 TB table serves a
-    one-week query by listing 7 directories. maxRecordsPerFile bounds
-    file sizes so a skewed partition still splits across tasks."""
-    (df.write.partitionBy(*partition_cols)
-     .option("maxRecordsPerFile", max_records_per_file)
-     .mode("overwrite").parquet(path))
-
-
-def load_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet directory whose schema has WIDENED over time
-    (columns added by newer writers — the standard additive-evolution
-    policy for long-lived event/CDC archives): ``mergeSchema`` unions
-    the per-file schemas and older files surface the new columns as
-    NULL. Additive-only is the contract — renames/retypes need a
-    rewrite (compact_files is the natural place).
-
-    At 100 TB, schema merging reads every file FOOTER up front —
-    that's why it is opt-in here rather than session-default; tables
-    under a catalog (Delta/Iceberg/metastore) carry the merged schema
-    in metadata and skip the footer sweep entirely."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def compact_files(spark: SparkSession, path: str, *,
-                  target_file_bytes: int = 128 * 1024 * 1024) -> int:
-    """Compact a parquet directory written by many small micro-batches
-    into ~target-sized files; returns the resulting file count.
-
-    Streaming foreachBatch sinks produce one file per partition per
-    trigger — at a 10s trigger that's ~8.6k files/day/partition, and
-    at 100 TB the scan's file-listing + footer reads dominate. This
-    rewrites the directory via coalesce (no shuffle — existing
-    partitions are merged, not repartitioned) into
-    ceil(bytes/target) files. Run it on cold partitions (e.g. closed
-    date= directories of a write_partitioned layout), never on the
-    directory a live stream is appending to."""
-    import math
-    fs_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    size = fs.getContentSummary(fs_path).getLength()
-    n_files = max(1, math.ceil(size / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    swap_dir(spark, path, tmp)
-    return n_files
-
-
 def swap_dir(spark: SparkSession, path: str, tmp: str) -> None:
     """Atomically (rename-aside) replace directory ``path`` with
     ``tmp`` so no crash point loses data: the original survives (as
     __compact_old) until the new copy is in place.  Crash between the
     renames => data still on disk in __compact_old and/or ``tmp``;
-    recovery = rename either back into place.  Shared by
-    compact_files and the CorpusCompact rewrite (jobs.py)."""
+    recovery = rename either back into place.  Used by the
+    CorpusCompact and QuarantineReplay rewrites (jobs.py) and by
+    functions/similarity.py."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     fs_path = jpath(path)
     fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -208,117 +132,3 @@ def zorder_key(x, y, bits: int = ZORDER_BITS):
         z = z.bitwiseOR(F.shiftleft(x.cast("long").bitwiseAND(F.lit(1 << b)), b))
         z = z.bitwiseOR(F.shiftleft(y.cast("long").bitwiseAND(F.lit(1 << b)), b + 1))
     return z
-
-
-def write_zordered(df: DataFrame, path: str, zcol, *,
-                   num_files: int = 16) -> None:
-    """Lay a table out Z-ordered: range-partition on the Morton key
-    (contiguous key ranges per file = disjoint Z-curve segments), sort
-    within partitions, write one file each. Point/range predicates on
-    EITHER interleaved dimension then skip most files on parquet
-    min/max stats alone — the layout is the optimization; readers need
-    nothing special."""
-    (df.withColumn("_z", zcol)
-     .repartitionByRange(num_files, F.col("_z"))
-     .sortWithinPartitions("_z")
-     .drop("_z")
-     .write.mode("overwrite").parquet(path))
-
-
-def backfill_partitions(df: DataFrame, target_path: str,
-                        partition_col: str, values: list) -> None:
-    """Recompute and replace ONLY the named partitions of a
-    hive-partitioned target (the operational backfill: a late-data or
-    bug-fix rebuild of specific days) — dynamic partition overwrite
-    writes just the directories present in the corrected frame, so a
-    3-day repair on a 100 TB table touches 3 directories and the other
-    ~36,000 day-partitions are never read, rewritten, or locked.
-    Pairs with incremental_agg_merge (algebraic re-aggregation) for
-    derived tables; the same mechanism backs the upsert sink's bucket
-    rewrite (streaming/sinks.py)."""
-    out = df.filter(F.col(partition_col).isin(values))
-    (out.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(partition_col)
-     .parquet(target_path))
-
-
-def plan_compaction(spark: SparkSession, path: str, *,
-                    target_file_bytes: int = 128 * 1024 * 1024,
-                    small_file_bytes: int | None = None) -> list[dict]:
-    """Compaction PLANNER: inspect a parquet directory's file sizes
-    (Hadoop FS listing — metadata only, no data read) and bin-pack the
-    small files into merge groups of ~``target_file_bytes`` via
-    first-fit-decreasing. Returns one dict per group:
-    ``{"files": [...], "bytes": N}`` — the schedule an operator (or
-    compact_files per group) executes, letting operations see and
-    bound the rewrite cost BEFORE touching 100 TB of data.
-
-    Files >= ``small_file_bytes`` (default: target/2) are already
-    healthy and excluded. Deterministic: sizes descending, name
-    ascending."""
-    if small_file_bytes is None:
-        small_file_bytes = target_file_bytes // 2
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = fs_path.getFileSystem(conf)
-    files = []
-    for st in fs.listStatus(fs_path):
-        name = st.getPath().getName()
-        if st.isFile() and name.endswith(".parquet"):
-            size = st.getLen()
-            if size < small_file_bytes:
-                files.append((int(size), name))
-    files.sort(key=lambda t: (-t[0], t[1]))
-    groups: list[dict] = []
-    for size, name in files:
-        placed = False
-        for g in groups:
-            if g["bytes"] + size <= target_file_bytes:
-                g["files"].append(name)
-                g["bytes"] += size
-                placed = True
-                break
-        if not placed:
-            groups.append({"files": [name], "bytes": size})
-    return groups
-
-
-def read_csv_quarantine(spark: SparkSession, path: str, schema,
-                        **options) -> tuple[DataFrame, DataFrame]:
-    """CSV ingestion with format-error quarantine: parse in PERMISSIVE
-    mode with a ``_corrupt_record`` capture column and split into the
-    pipeline's dual-output ``(pass_df, dlq_df)`` protocol — extending
-    the reference's DLQ discipline (DLQPublisher, SURVEY §2.2) from
-    semantic violations down to the byte/format layer, where real feed
-    breakage usually starts.
-
-    A row is quarantined when the raw line failed to parse (corrupt
-    column non-null).  The DLQ branch carries the ORIGINAL raw line as
-    ``raw_event``, so the quarantine is replayable after a parser fix.
-
-    Scale: PERMISSIVE parsing is a per-task scan concern — no shuffle;
-    the split is two filters over one cached parse (Catalyst shares
-    the scan), and schema/column pruning still applies to the clean
-    branch.
-    """
-    from streamforge_spark.pipeline import dlq_event
-    import pyspark.sql.types as T_
-    full = T_.StructType(list(schema.fields)
-                         + [T_.StructField("_corrupt_record", T_.StringType())])
-    # Spark refuses to evaluate a plan that filters on the internal
-    # corrupt-record column of a live scan (QUERY_ONLY_CORRUPT_RECORD
-    # _COLUMN); materialize the parse once, then split — which is also
-    # the right plan: one parse feeding both branches.
-    raw = (spark.read.schema(full)
-           .options(mode="PERMISSIVE", columnNameOfCorruptRecord="_corrupt_record",
-                    **options)
-           .csv(path)
-           .localCheckpoint(eager=False))
-    bad = raw.where(F.col("_corrupt_record").isNotNull())
-    passed = (raw.where(F.col("_corrupt_record").isNull())
-              .drop("_corrupt_record"))
-    dlq = dlq_event(bad, "FORMAT_ERROR", F.lit("malformed csv record"),
-                    source=path, raw_event=F.col("_corrupt_record"))
-    return passed, dlq

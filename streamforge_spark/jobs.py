@@ -802,7 +802,8 @@ def corpus_compact(spark: SparkSession, cfg: ScopedConfig):
     work and returns no streaming queries — ``run_job`` with or
     without --drain completes when the rewrite lands.  Run it on a
     quiesced corpus (between ingest windows), never under a live
-    writer — the same discipline as io.compact_files.
+    writer: ``io.swap_dir`` replaces the directory a writer would be
+    appending to.
 
     Config:
       CORPUS_PATH         admitted-corpus parquet (doc_id, text, ...)

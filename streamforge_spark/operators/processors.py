@@ -31,72 +31,3 @@ def stamp_processor(df: DataFrame, trace_col: str = "trace_id",
         df.withColumn(trace_col, F.coalesce(F.col(trace_col), new_trace))
         .withColumn(processed_col, processed)
     )
-
-
-def chunk_udtf():
-    """Python UDTF (Spark 4's 1-to-N row extension slot — the surface
-    SURVEY §2.12 notes the reference lacks entirely): explode a
-    document into fixed-width word chunks with positions, as a
-    TABLE function usable from SQL via LATERAL join.
-
-    Prefer the pure-column doc_chunks query (queries/text.py) on the
-    hot path — this exists to cover the UDTF plugin point with a real,
-    tested implementation, for the cases column algebra can't express
-    (per-row imperative chunking policies).
-
-    Usage::
-
-        spark.udtf.register("doc_chunks_udtf", chunk_udtf())
-        spark.sql("SELECT d.doc_id, c.* FROM documents d, "
-                  "LATERAL doc_chunks_udtf(d.text, 5) c")
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx int, chunk string, n_words int")
-    class ChunkDoc:
-        def eval(self, text: str, width: int):
-            if text is None:
-                return
-            words = text.split(" ")
-            for i in range(0, len(words), width):
-                part = words[i:i + width]
-                yield (i // width, " ".join(part), len(part))
-
-    return ChunkDoc
-
-
-def pseudonymize(df, cols, salt: str):
-    """GDPR pseudonymization: replace identifier columns with
-    deterministic keyed tokens (md5 over salt:value — stable across
-    runs and engines, so joins on the token still work), and return a
-    separate VAULT mapping tokens back to originals for the
-    re-identification path that lawful bases permit.
-
-    Returns ``(tokenized_df, vault_df)``; the vault holds one row per
-    distinct (column, original) pair and is the only artifact that
-    needs restricted storage — the tokenized table can flow to the
-    analytics tier.  Deleting a subject from the vault (the
-    `deletion_propagation_report` flow) makes their tokens
-    permanently unlinkable: crypto-shredding without touching the
-    fact tables.
-
-    Both outputs are narrow projections of one scan; the vault adds a
-    per-column distinct rollup.
-    """
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-    token = lambda c: F.md5(  # noqa: E731
-        F.concat(F.lit(f"{salt}:{c}:"), F.col(c).cast("string")))
-    out = df
-    for c in cols:
-        out = out.withColumn(
-            c, F.when(F.col(c).isNotNull(), token(c)))
-    vaults = [
-        df.select(F.lit(c).alias("column"),
-                  F.col(c).cast("string").alias("original"),
-                  token(c).alias("token"))
-        .where(F.col("original").isNotNull()).distinct()
-        for c in cols
-    ]
-    return out, reduce(lambda a, b: a.unionByName(b), vaults)

@@ -150,73 +150,6 @@ def constraint_enforcer(df: DataFrame, rules: list[tuple[str, Column]],
     return passed, dlq
 
 
-def infer_constraints(df: DataFrame, columns: list[str],
-                      sample_ratio: float | None = None) -> list[dict]:
-    """Profile ``columns`` and propose enforceable constraints — the
-    bootstrap for a ConstraintEnforcer rule set when no contract
-    exists yet (the reference assumes hand-written rules;
-    in practice they start from data).
-
-    Per column, ONE aggregation computes null count, distinct count
-    (exact), min/max, and row count; proposals follow:
-    ``not_null`` when no nulls observed, ``unique`` when distinct ==
-    rows, ``range(lo, hi)`` for numeric columns (bounds widened 10%
-    so the observed extremes don't immediately violate).
-
-    Returns a list of dicts {column, rule, params}.  Feed through
-    :func:`rules_from_inference` to get enforcer-ready (name, Column)
-    pairs.  At 100 TB run on a sample (``sample_ratio``) — inference
-    needs fidelity, not exactness; the ENFORCEMENT stays exact.
-    """
-    src = df.sample(sample_ratio, seed=7) if sample_ratio else df
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    numeric = set()
-    for f in src.schema.fields:
-        if f.name not in columns:
-            continue
-        aggs.append(F.count(F.when(F.col(f.name).isNull(), 1))
-                    .alias(f"{f.name}__nulls"))
-        aggs.append(F.countDistinct(f.name).alias(f"{f.name}__distinct"))
-        if f.dataType.typeName() in ("long", "integer", "double", "float",
-                                     "short", "decimal"):
-            numeric.add(f.name)
-            aggs.append(F.min(f.name).alias(f"{f.name}__min"))
-            aggs.append(F.max(f.name).alias(f"{f.name}__max"))
-    row = src.agg(*aggs).collect()[0].asDict()
-    out = []
-    for c in columns:
-        if row[f"{c}__nulls"] == 0:
-            out.append({"column": c, "rule": "not_null", "params": {}})
-        if row[f"{c}__distinct"] == row["_rows"] - row[f"{c}__nulls"] \
-                and row["_rows"] > 1:
-            out.append({"column": c, "rule": "unique", "params": {}})
-        if c in numeric and row.get(f"{c}__min") is not None:
-            lo, hi = row[f"{c}__min"], row[f"{c}__max"]
-            import decimal
-            if isinstance(lo, decimal.Decimal):  # Decimal * float raises
-                lo, hi = float(lo), float(hi)
-            pad = (hi - lo) * 0.1 or abs(hi) * 0.1 or 1
-            out.append({"column": c, "rule": "range",
-                        "params": {"lo": lo - pad, "hi": hi + pad}})
-    return out
-
-
-def rules_from_inference(proposals: list[dict]) -> list[tuple[str, Column]]:
-    """Turn :func:`infer_constraints` proposals into enforcer rules.
-    ``unique`` is a profile fact, not a row-local predicate — it is
-    skipped here (enforce it with the Deduplicator instead)."""
-    rules: list[tuple[str, Column]] = []
-    for p in proposals:
-        c, kind = p["column"], p["rule"]
-        if kind == "not_null":
-            rules.append((f"{c}_not_null", F.col(c).isNotNull()))
-        elif kind == "range":
-            lo, hi = p["params"]["lo"], p["params"]["hi"]
-            rules.append((f"{c}_range",
-                          (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))))
-    return rules
-
-
 # --- schema migration: versioned payload upcasting --------------------
 
 @dataclass(frozen=True)

@@ -57,27 +57,3 @@ def salted_aggregate(df: DataFrame, key_cols: Sequence[str],
     return partial.groupBy(*key_cols).agg(*[
         _MERGE[fn](f"_p_{alias}").alias(alias) for alias, (c, fn) in aggs.items()
     ])
-
-
-def salted_join(fact: DataFrame, dim: DataFrame, key: str,
-                salt_buckets: int = 16, how: str = "inner") -> DataFrame:
-    """Skew-hardened equi-join: salt the fact side, replicate the dim
-    side across every salt value, join on (key, salt).
-
-    The manual fallback for when AQE skew-split can't help — e.g. the
-    dim is too big to broadcast and a handful of fact keys carry a
-    large share of rows: a plain shuffle join puts each hot key in ONE
-    task; here its rows spread over ``salt_buckets`` tasks, at the
-    cost of shuffling the dim ``salt_buckets`` times (fine when
-    |dim| << |fact|, the usual skew shape). Result-identical to
-    ``fact.join(dim, key, how)`` for inner/left joins (each fact row
-    still meets each dim row exactly once)."""
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left (dim side must stay unique per salt)")
-    salted_fact = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]),
-                        F.lit(salt_buckets)))
-    replicated_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
-    return (salted_fact.join(replicated_dim, [key, "_salt"], how)
-            .drop("_salt"))

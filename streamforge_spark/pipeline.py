@@ -1,25 +1,17 @@
-"""Pipeline composition + the dual-output DLQ protocol.
+"""The dual-output DLQ protocol.
 
-The reference composes patterns through a fluent builder
-(``core/pipeline/PipelineBuilder.java:8-79``); here a pipeline is just
-function composition over DataFrames. Validating operators return
-``(pass_df, dlq_df)`` pairs; ``Pipeline`` accumulates the DLQ branches
-and unions them at the end so 9 publishing points don't mean 9 extra
-passes (SURVEY §7.5#7) — validity columns are computed inline and the
-split happens once per stage.
+Validating operators return ``(pass_df, dlq_df)`` pairs, and every DLQ
+branch has the one DlqEvent shape that ``dlq_event`` projects. A job
+composes its operators as plain function calls and writes the DLQ
+branches as outputs of its one streaming query
+(``jobs.py::_one_query``), so validity columns are computed inline and
+the split happens once per stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Union
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-Operator = Callable[[DataFrame], Union[DataFrame, tuple[DataFrame, DataFrame]]]
-
-DLQ_COLUMNS = ("error_type", "error_message", "source", "timestamp", "raw_event", "stacktrace")
 
 
 def dlq_event(df: DataFrame, error_type: str, error_message, source: str,
@@ -36,54 +28,3 @@ def dlq_event(df: DataFrame, error_type: str, error_message, source: str,
         raw.cast("string").alias("raw_event"),
         F.lit(None).cast("string").alias("stacktrace"),
     )
-
-
-class Pipeline:
-    """Compose operators; collect DLQ side-outputs.
-
-    >>> p = Pipeline(df).then(op1).then(op2)
-    >>> result, dlq = p.df, p.dlq()
-    """
-
-    def __init__(self, df: DataFrame):
-        self.df = df
-        self._dlq: list[DataFrame] = []
-
-    def then(self, op: Operator) -> "Pipeline":
-        out = op(self.df)
-        if isinstance(out, tuple):
-            self.df, dlq = out
-            if dlq is not None:
-                self._dlq.append(dlq)
-        else:
-            self.df = out
-        return self
-
-    def dlq(self) -> DataFrame | None:
-        if not self._dlq:
-            return None
-        out = self._dlq[0]
-        for d in self._dlq[1:]:
-            out = out.unionByName(d)
-        return out
-
-
-def replay_dlq(dlq: DataFrame,
-               versions=None, source: str = "dlq-replay") -> tuple[DataFrame, DataFrame]:
-    """Dead-letter replay (docs/recovery/dlq-replay-guide.md workflow):
-    re-run dead-lettered ``raw_event`` strings through the envelope
-    parser — and, when the failure was a schema violation that a NEWER
-    schema version now permits, through an updated ``versions`` list —
-    returning ``(recovered_envelopes, still_dead)``.
-
-    Works uniformly because every DLQ publishing point emits the same
-    DlqEvent shape with the full serialized record in ``raw_event``."""
-    from streamforge_spark.envelope import parse_stream_envelop
-    ok, bad = parse_stream_envelop(
-        dlq.select(F.col("raw_event").alias("value")))
-    if versions:
-        from streamforge_spark.operators.quality import schema_enforcer
-        ok, schema_bad = schema_enforcer(ok, "payload_json", versions,
-                                         source=source)
-        bad = bad.unionByName(schema_bad)
-    return ok, bad

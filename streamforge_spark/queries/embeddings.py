@@ -394,9 +394,9 @@ def embedding_gram_matrix(spark, sf_dir):
     """Distributed second-moment (Gram) matrix of the embedding corpus
     in exact fixed-point integers — the one-pass sufficient statistic
     PCA / whitening / covariance estimation needs
-    (functions/clustering.py::gram_matrix; pca_components consumes it
-    driver-side). Every entry is an exact integer sum, so the oracle
-    match covers the full d×(d+1)/2 upper triangle bit-for-bit."""
+    (functions/clustering.py::gram_matrix). Every entry is an exact
+    integer sum, so the oracle match covers the full d×(d+1)/2 upper
+    triangle bit-for-bit."""
     from streamforge_spark.functions.clustering import gram_matrix
     (emb,) = prep(spark, sf_dir, "embeddings")
     return gram_matrix(emb)

@@ -6,8 +6,8 @@ is deterministic — the only obstacle was the hash function, so content
 hashing moved to the md5-derived :func:`~streamforge_spark.functions.
 simdedup.oracle_hash60` (reproducible in SQL) and the LSH hyperplanes
 (fixed-seed driver literals) are inlined into the generated oracle.
-``ann_ivf_topk`` now rides the fixed-point k-means trainer, so even
-its training iterations unroll into the oracle SQL.
+``ann_ivf_topk`` rides the fixed-point k-means trainer, so even its
+training iterations unroll into the oracle SQL.
 """
 
 from __future__ import annotations
@@ -334,10 +334,8 @@ def ann_ivf_topk_q(spark, sf_dir):
     """IVF coarse-quantizer ANN top-k, fixed-point trainer
     (similarity.py::ann_ivf_fixed_topk): full-corpus integer Lloyd
     cells + nprobe probing + exact cosine re-rank. The oracle replays
-    training, cell assignment, probing, and ranking end-to-end in SQL
-    — the previously rows-only float-sample variant (ann_ivf_topk in
-    similarity.py) remains as library code with its clustered-recall
-    unit test."""
+    training, cell assignment, probing, and ranking end-to-end in
+    SQL."""
     from streamforge_spark.functions.similarity import ann_ivf_fixed_topk
     (emb,) = prep(spark, sf_dir, "embeddings")
     return ann_ivf_fixed_topk(emb, query_ids=range(ANN_NQ), k=ANN_K,

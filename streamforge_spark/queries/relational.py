@@ -466,8 +466,8 @@ def data_profile(spark, sf_dir):
     Catalyst's Expand — one shuffle carrying (column-tag, value)
     pairs, i.e. O(ncols·rows) exchange but a single pass and no
     driver involvement. At 100 TB swap exact distinct for HLL
-    (approx_count_distinct — approx_distinct_users shows the sketch
-    contract) column-by-column without changing the output schema.
+    (approx_count_distinct) column-by-column without changing the
+    output schema.
     The wide 1-row aggregate is reshaped to long form with a
     zero-cost 6-element explode.
     """
@@ -505,7 +505,7 @@ def key_skew_report(spark, sf_dir):
     prospective join/partition key with exact row counts and
     parts-per-million share — the report you run BEFORE a 100 TB
     join to decide between plain hash, broadcast, AQE skew-join, or
-    explicit salting (operators/skew.py::salted_join consumes
+    explicit salting (operators/skew.py::salted_aggregate consumes
     exactly this signal). Integer ppm (BIGINT multiply + floor
     divide), no float share.
 
@@ -603,8 +603,7 @@ def zorder_layout_key(spark, sf_dir):
     """Morton (Z-order) interleave of (user_id, value-cents) per event —
     the sort key that makes ONE physical layout serve range predicates
     on BOTH dimensions via parquet min/max skipping
-    (io.py::zorder_key / write_zordered; clustering property asserted
-    in test_write_zordered_clusters_both_dims). Pure bit algebra on the
+    (io.py::zorder_key). Pure bit algebra on the
     scan: no shuffle, no UDF, whole-stage codegen; the oracle replays
     the 32-term interleave exactly."""
     from streamforge_spark.io import zorder_key
@@ -1165,7 +1164,7 @@ def join_explosion_risk(spark, sf_dir):
     orders on customer key), report the 20 keys whose per-side
     multiplicities multiply into the most output rows — the keys that
     blow up a fanout join and the input to a salting / skew-hint
-    decision (the estimator behind `operators/skew.py::salted_join`).
+    decision.
 
     Scale: each side collapses to a per-key count with ONE map-side-
     combined rollup (counts move, rows don't); the rollups join on the

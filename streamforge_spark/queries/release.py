@@ -178,32 +178,6 @@ def training_data_release(spark, sf_dir):
             .select("doc_id", "source", "n_tokens", "verdict", "shard"))
 
 
-def export_release(spark, sf_dir: str, out_dir: str) -> dict:
-    """Materialize the release: kept documents land under
-    ``out_dir/shard=<source>-<n>/`` (hive-partitioned by shard so a
-    trainer lists exactly the shards it wants), and the verdict ledger
-    — every document with its gate decision — lands under
-    ``out_dir/_ledger`` for audit/reproduction. Returns summary counts.
-
-    One extra join against the raw text (the release plan itself stays
-    narrow); the shard write is partitionBy so each shard is its own
-    directory — at 100 TB that is the layout the downstream tokenizer
-    job consumes shard-by-shard."""
-    from streamforge_spark.io import load
-    verdicts = training_data_release(spark, sf_dir)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    kept = (verdicts.filter(F.col("verdict") == "kept")
-            .join(docs, "doc_id")
-            .select("doc_id", "source", "n_tokens", "text", "shard"))
-    kept.write.mode("overwrite").partitionBy("shard").parquet(
-        f"{out_dir}/corpus")
-    verdicts.write.mode("overwrite").parquet(f"{out_dir}/_ledger")
-    n_kept = kept.count()
-    n_all = verdicts.count()
-    return {"docs": n_all, "kept": n_kept,
-            "shards": kept.select("shard").distinct().count()}
-
-
 _SUMMARY_ORACLE = f"""
 WITH ledger AS ({_release_oracle().strip()})
 SELECT source, verdict,

@@ -614,8 +614,7 @@ def mad_outliers(spark, sf_dir):
     handful of rows, so both enrichment joins broadcast. Integer
     cents end-to-end: ABS/compare on BIGINT, no float tolerance
     anywhere. A skewed type at 100 TB swaps the exact rank pass for
-    percentile_approx (approx_event_percentiles) without changing
-    the contract.
+    percentile_approx without changing the contract.
     """
     (events,) = prep(spark, sf_dir, "events")
     v = events.select("event_id", "event_type", _cents().alias("cents"))
@@ -806,8 +805,8 @@ def equidepth_histogram(spark, sf_dir):
     rollup that follows — the rollup's grouping is a prefix extension
     of the window partitioning, so no second shuffle. A single
     monster type at 100 TB swaps ntile for rank-over-range chunks
-    (the approx_event_percentiles t-digest is the sketch fallback);
-    the exact form is the auditable one."""
+    (a percentile_approx t-digest is the sketch fallback); the exact
+    form is the auditable one."""
     (events,) = prep(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     t = events.select(
@@ -986,7 +985,7 @@ def rolling_active_users(spark, sf_dir):
     map-side-combinable rollup. Only report days that exist in the
     data appear (calendar gap-fill composes via gap_fill_daily). The
     sketch alternative at extreme scale is a mergeable HLL per day
-    (approx_distinct_users' machinery) unioned across the window —
+    (approx_count_distinct) unioned across the window —
     this exact form is the audit baseline."""
     (events,) = prep(spark, sf_dir, "events")
     act = (events.select(

@@ -175,44 +175,6 @@ def sliding_window_stats(spark, sf_dir):
     )
 
 
-def approx_distinct_users(spark, sf_dir):
-    """HyperLogLog++ approximate COUNT(DISTINCT user_id) per event
-    type (rsd 0.5%) next to the exact count-distinct. At 100 TB the
-    exact distinct is a full shuffle of (type, user) pairs; the HLL
-    sketch is fixed-size per group, merges map-side, and never
-    shuffles raw keys — the standard trade for cardinality dashboards.
-    NOT driver-registered (judge r10 item 1): approximate output has
-    no exact DuckDB oracle, and the driver hard-fails un-oracled
-    names. The error bound vs exact is gated in
-    tests/test_operators.py instead."""
-    (events,) = prep(spark, sf_dir, "events")
-    return (
-        events.groupBy("event_type")
-        .agg(F.approx_count_distinct("user_id", rsd=0.005).alias("approx_users"),
-             F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def approx_event_percentiles(spark, sf_dir):
-    """t-digest approximate percentiles (percentile_approx) per event
-    type — the sketch path for when a group outgrows a partition and
-    the exact order-statistics plan (event_value_percentiles) would
-    sort-spill: sketches are fixed-size and merge map-side, so the
-    shuffle carries one digest per group per task. NOT
-    driver-registered (judge r10 item 1): approximate output has no
-    exact DuckDB oracle, and the driver hard-fails un-oracled names.
-    Error vs the exact rank statistics is gated in
-    tests/test_operators.py instead."""
-    (events,) = prep(spark, sf_dir, "events")
-    p = F.percentile_approx(
-        F.round(F.col("value") * 100).cast("long"), [0.5, 0.9, 0.99], 10000)
-    return (events.groupBy("event_type")
-            .agg(p.getItem(0).alias("p50_cents"),
-                 p.getItem(1).alias("p90_cents"),
-                 p.getItem(2).alias("p99_cents"),
-                 F.count(F.lit(1)).alias("n_events")))
-
-
 @query(
     "cascading_rollup",
     oracle="""

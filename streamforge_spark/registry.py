@@ -88,10 +88,9 @@ def _assert_all_oracled() -> None:
     ``oracle_sql()`` entry returns ``err: no_oracle``, a red row.
     Two HLL/t-digest sketch queries sat registered-without-oracle for
     ~7 rounds on that false assumption and broke the 50/50 streak in
-    r10 when the window finally sampled them.  Sketch-style queries
-    whose output is approximate by construction stay OFF the driver
-    surface (pytest error-bound gates only, tests/test_operators.py)
-    or are reshaped into exactly-checkable faces before registration.
+    r10 when the window finally sampled them.  A sketch-style query
+    whose output is approximate by construction is reshaped into an
+    exactly-checkable face before registration, or is not shipped.
     """
     missing = sorted(n for n in QUERIES if n not in ORACLES)
     if missing:

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -99,7 +98,6 @@ def test_gopher_rule_boundaries(spark):
         GOPHER_MIN_MWL_MILLI, GOPHER_MIN_WORDS)
     from streamforge_spark import registry
     registry.load_all()
-    import duckdb
     # boundary docs: exactly 50 3-char words (both thresholds land
     # exactly on their inclusive bounds), 49 words (fails count), and
     # a mean word length just under 3 (fails length)

@@ -329,48 +329,6 @@ def test_incremental_agg_merge_equals_full(spark):
     assert {tuple(r) for r in inc.collect()} == {tuple(r) for r in full.collect()}
 
 
-def test_ann_ivf_topk_clustered(spark):
-    # 3 well-separated clusters; every top-3 neighbor of a cluster's
-    # query must come from the same cluster (cells must isolate them)
-    from streamforge_spark.functions.similarity import ann_ivf_topk
-    rows = []
-    for c in range(3):
-        for i in range(20):
-            v = [0.0] * 8
-            v[c] = 1.0
-            for j in range(8):   # deterministic small perturbation
-                v[j] += 0.03 * ((((i + 1) * (j + 2) * (c + 3)) % 7) - 3) / 3.0
-            rows.append((i * 3 + c, [float(x) for x in v], c))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    out = ann_ivf_topk(emb, query_ids=[0, 1, 2], k=3, n_centroids=4, nprobe=2)
-    got = out.collect()
-    assert len(got) == 9
-    by_q = {}
-    for r in got:
-        assert r.neighbor_id != r.query_id
-        assert r.neighbor_id % 3 == r.query_id % 3
-        by_q.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == [1, 2, 3] for v in by_q.values())
-
-
-def test_approx_distinct_users_error_bound(spark):
-    # HLL++ at rsd=0.5% must land within 5% of the exact distinct on
-    # every event_type group at sf0.001 (rows-only query — this test
-    # is its accuracy gate)
-    from streamforge_spark.queries.windows import approx_distinct_users
-    from streamforge_spark.queries.common import prep
-    sf_small = "/root/testdata/sf0.001"
-    approx = {r.event_type: r.approx_users
-              for r in approx_distinct_users(spark, sf_small).collect()}
-    (events,) = prep(spark, sf_small, "events")
-    exact = {r.event_type: r.n for r in
-             events.groupBy("event_type")
-             .agg(F.countDistinct("user_id").alias("n")).collect()}
-    assert set(approx) == set(exact)
-    for t, n in exact.items():
-        assert abs(approx[t] - n) <= max(1, 0.05 * n), (t, approx[t], n)
-
-
 def test_interval_join_boundary_semantics(spark):
     # bounds are [start, end); intervals spanning bucket boundaries
     # must still match every covered point exactly once
@@ -411,22 +369,6 @@ def test_materializer_history_scd2(spark):
     assert rows["v1"] == (ts("2024-01-01 10:00:00"), ts("2024-01-01 10:01:00"), False)
     assert rows["v2"] == (ts("2024-01-01 10:01:00"), ts("2024-01-01 10:02:00"), False)
     assert rows["v3"] == (ts("2024-01-01 10:03:00"), None, True)
-
-
-def test_approx_percentiles_close_to_exact(spark):
-    # the sketch must land within 2% of the exact order statistic on
-    # every group/quantile (rows-only query — this is its gate)
-    from streamforge_spark.queries.windows import (
-        approx_event_percentiles, event_value_percentiles)
-    sf = "/root/testdata/sf0.001"
-    ap = {r.event_type: (r.p50_cents, r.p90_cents, r.p99_cents)
-          for r in approx_event_percentiles(spark, sf).collect()}
-    ex = {r.event_type: (r.p50_cents, r.p90_cents, r.p99_cents)
-          for r in event_value_percentiles(spark, sf).collect()}
-    assert set(ap) == set(ex)
-    for t in ex:
-        for a, e in zip(ap[t], ex[t]):
-            assert abs(a - e) <= max(2, 0.02 * e), (t, ap[t], ex[t])
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -588,63 +530,6 @@ def test_int8_quantize_endpoints_and_constant_dim(spark):
     assert got[3] == [0, 0]
 
 
-def test_pca_components_recover_dominant_direction(spark):
-    # corpus varying almost entirely along dim 0: the top component
-    # must align with e0; built from the DISTRIBUTED gram matrix
-    from streamforge_spark.functions.clustering import (
-        gram_matrix, pca_components)
-    import numpy as np
-    rows = [(i, [float(i - 50) * 2.0, 0.1 if i % 2 else -0.1, 0.0])
-            for i in range(101)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    g = gram_matrix(emb).collect()
-    comps = pca_components([(r.i, r.j, r.g) for r in g], dim=3,
-                           n_count=101, k=2)
-    assert comps.shape == (2, 3)
-    assert abs(comps[0][0]) > 0.99          # top component ~ e0
-    assert abs(comps[1][1]) > 0.99          # second ~ e1
-
-
-def test_load_evolving_merges_widened_schema(spark, tmp_path):
-    # additive schema evolution: old files lack the new column and
-    # must surface it as NULL under the merged read
-    from streamforge_spark.io import load_evolving
-    p = str(tmp_path / "evolve")
-    spark.createDataFrame([(1, "a")], "id long, v string") \
-        .write.mode("append").parquet(p)
-    spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double") \
-        .write.mode("append").parquet(p)
-    got = {r.id: (r.v, r.score) for r in load_evolving(spark, p).collect()}
-    assert got[1] == ("a", None)
-    assert got[2] == ("b", 9.5)
-
-
-def test_write_zordered_clusters_both_dims(spark, tmp_path):
-    # after Z-order layout, per-file spans must be narrow in BOTH
-    # dimensions (a single-dim sort leaves the other dimension's span
-    # at ~full range in every file)
-    from streamforge_spark.io import write_zordered, zorder_key
-    from pyspark.sql import functions as F
-    n = 4096
-    rows = [(i, (i * 37) % 256, (i * 101) % 256) for i in range(n)]
-    df = spark.createDataFrame(rows, "id long, x long, y long")
-    p = str(tmp_path / "zord")
-    write_zordered(df, p, zorder_key(F.col("x"), F.col("y"), bits=8),
-                   num_files=16)
-    got = spark.read.parquet(p)
-    spans = (got.withColumn("f", F.input_file_name())
-             .groupBy("f")
-             .agg((F.max("x") - F.min("x")).alias("sx"),
-                  (F.max("y") - F.min("y")).alias("sy"))
-             .agg(F.avg("sx").alias("ax"), F.avg("sy").alias("ay"))
-             .first())
-    # 16 z-range files over a 256x256 grid: each file covers ~1/16 of
-    # the curve => expected span ~64-128 per dim; a linear x-sort gives
-    # sy ~ 255. Assert both dims are clustered well below full range.
-    assert spans.ax < 160, spans
-    assert spans.ay < 160, spans
-
-
 def test_ab_cuped_zero_variance_covariate_degrades(spark):
     # all activity in the post-period (no pre-period history): theta's
     # denominator is 0 and the readout must fall back to the raw arm
@@ -693,23 +578,6 @@ def test_cosine_zero_vector_scores_zero_not_crashing(spark):
     assert got == [0.0, 1.0]
 
 
-def test_backfill_partitions_touches_only_named_days(spark, tmp_path):
-    from streamforge_spark.io import backfill_partitions
-    p = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "d1", 10), (2, "d2", 20), (3, "d3", 30)], "id long, day string, v long")
-    base.write.partitionBy("day").parquet(p)
-    import os
-    before = {d: sorted(os.listdir(f"{p}/day={d}")) for d in ("d1", "d2", "d3")}
-    fixed = spark.createDataFrame(
-        [(2, "d2", 99), (9, "d9", 1)], "id long, day string, v long")
-    backfill_partitions(fixed, p, "day", ["d2"])
-    got = {r.id: r.v for r in spark.read.parquet(p).collect()}
-    assert got == {1: 10, 2: 99, 3: 30}          # d2 replaced, d9 filtered out
-    after = {d: sorted(os.listdir(f"{p}/day={d}")) for d in ("d1", "d3")}
-    assert after == {d: before[d] for d in ("d1", "d3")}  # untouched files
-
-
 def test_decode_media_dispatches_all_three_real_codecs(spark):
     # magic-byte sniffing routes PNG / WAV / GIF payloads through
     # their real codecs in one decode stage
@@ -751,61 +619,6 @@ def test_asof_join_tolerance_nulls_stale_matches(spark):
     assert got[5] is None      # 4 days old: refused
 
 
-def test_plan_compaction_bins_small_files(spark, tmp_path):
-    # the planner must see only small files, pack them under the
-    # target, and be deterministic
-    from streamforge_spark.io import load, plan_compaction
-    p = str(tmp_path / "frag")
-    ev = load(spark, "/root/testdata/sf0.001", "events")
-    ev.repartition(10).write.mode("overwrite").parquet(p)
-    groups = plan_compaction(spark, p, target_file_bytes=40_000)
-    assert groups and all(g["bytes"] <= 40_000 for g in groups)
-    n_files = sum(len(g["files"]) for g in groups)
-    assert n_files == 10  # every fragment planned exactly once
-    assert groups == plan_compaction(spark, p, target_file_bytes=40_000)
-    # a healthy file (>= target/2) is left alone
-    few = plan_compaction(spark, p, target_file_bytes=2 * ev.count())
-    assert sum(len(g["files"]) for g in few) <= 10
-
-
-def test_chunk_udtf_lateral_matches_python(spark):
-    from streamforge_spark.io import load
-    from streamforge_spark.operators.processors import chunk_udtf
-    spark.udtf.register("doc_chunks_udtf", chunk_udtf())
-    load(spark, "/root/testdata/sf0.001", "documents") \
-        .limit(20).createOrReplaceTempView("_docs20")
-    got = {(r.doc_id, r.chunk_idx): (r.chunk, r.n_words)
-           for r in spark.sql(
-               "SELECT d.doc_id, c.* FROM _docs20 d, "
-               "LATERAL doc_chunks_udtf(d.text, 5) c").collect()}
-    rows = spark.table("_docs20").collect()
-    want = {}
-    for r in rows:
-        words = r.text.split(" ")
-        for i in range(0, len(words), 5):
-            want[(r.doc_id, i // 5)] = (" ".join(words[i:i + 5]),
-                                        len(words[i:i + 5]))
-    assert got == want and len(got) > 20
-
-
-def test_export_release_writes_shard_partitions_and_ledger(spark, tmp_path):
-    from streamforge_spark.queries.release import export_release
-    out = str(tmp_path / "rel")
-    summary = export_release(spark, "/root/testdata/sf0.001", out)
-    assert summary["kept"] > 0 and summary["docs"] == 500
-    corpus = spark.read.parquet(f"{out}/corpus")
-    assert corpus.count() == summary["kept"]
-    # hive layout: shard is a partition directory, prunable at read
-    import os
-    shard_dirs = [d for d in os.listdir(f"{out}/corpus")
-                  if d.startswith("shard=")]
-    assert len(shard_dirs) == summary["shards"] > 1
-    ledger = spark.read.parquet(f"{out}/_ledger")
-    assert ledger.count() == 500
-    assert set(r.verdict for r in ledger.select("verdict").distinct()
-               .collect()) >= {"kept", "benchmark"}
-
-
 def test_bloom_prune_superset_and_selective(spark):
     from streamforge_spark.operators.bloomjoin import bloom_prune, bloom_words
     m = 1 << 14
@@ -819,158 +632,6 @@ def test_bloom_prune_superset_and_selective(spark):
     assert set(range(1000)) <= kept
     # real pruning: non-members mostly dropped (fp rate well under 50%)
     assert len(kept) < 1000 + 0.5 * 19000
-
-
-def test_read_csv_quarantine_splits_and_replays(spark, tmp_path):
-    from pyspark.sql import types as T
-    from streamforge_spark.io import read_csv_quarantine
-    p = tmp_path / "feed.csv"
-    p.write_text(
-        "1,alice,10.5\n"
-        "2,bob,not_a_number\n"      # type failure -> corrupt
-        "3,carol,7.25\n"
-        "garbage line without commas\n")
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("amount", T.DoubleType())])
-    passed, dlq = read_csv_quarantine(spark, str(p), schema)
-    ok = {(r.id, r.name, r.amount) for r in passed.collect()}
-    assert ok == {(1, "alice", 10.5), (3, "carol", 7.25)}
-    bad = dlq.collect()
-    assert len(bad) == 2
-    assert all(r.error_type == "FORMAT_ERROR" for r in bad)
-    # the original raw lines ride along for replay
-    raws = {r.raw_event for r in bad}
-    assert "2,bob,not_a_number" in raws
-    assert "garbage line without commas" in raws
-
-
-def test_backfill_resumes_and_is_idempotent(spark, tmp_path):
-    from streamforge_spark.backfill import backfill
-    from streamforge_spark.io import load
-    target = str(tmp_path / "bf")
-
-    def transform(spark_, lo, hi):
-        ev = load(spark_, "/root/testdata/sf0.001", "events")
-        return (ev.where((F.to_date("ts") >= lo) & (F.to_date("ts") < hi))
-                .groupBy(F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
-                         "event_type")
-                .agg(F.count(F.lit(1)).alias("n")))
-
-    chunks = [("2024-01-01", "2024-01-08"),
-              ("2024-01-08", "2024-01-15"),
-              ("2024-01-15", "2024-01-22")]
-    r1 = backfill(spark, transform=transform, target=target,
-                  partition_col="day", chunks=chunks)
-    assert len(r1["run"]) == 3 and not r1["skipped"]
-    full = spark.read.parquet(target)
-    want = full.count()
-    # resume: everything ledgered -> nothing re-runs, data untouched
-    r2 = backfill(spark, transform=transform, target=target,
-                  partition_col="day", chunks=chunks)
-    assert not r2["run"] and len(r2["skipped"]) == 3
-    assert spark.read.parquet(target).count() == want
-    # crash simulation: drop one ledger marker -> ONLY that chunk
-    # re-runs, and dynamic overwrite keeps the total identical
-    import os
-    os.remove(f"{target}/_backfill/2024-01-08__2024-01-15")
-    r3 = backfill(spark, transform=transform, target=target,
-                  partition_col="day", chunks=chunks)
-    assert r3["run"] == ["2024-01-08__2024-01-15"] and len(r3["skipped"]) == 2
-    assert spark.read.parquet(target).count() == want
-    # chunk result matches a direct one-shot computation (fresh read:
-    # the rewrite invalidated the earlier DataFrame's file listing)
-    final = spark.read.parquet(target).select("day", "event_type", "n")
-    direct = transform(spark, "2024-01-01", "2024-01-22")
-    assert (final.exceptAll(direct).count() == 0
-            and direct.exceptAll(final).count() == 0)
-
-
-def test_write_audit_publish_gates_bad_versions(spark, tmp_path):
-    from streamforge_spark.backfill import publish_wap, read_published
-    root = str(tmp_path / "wap")
-    checks = [("null_key", "k IS NULL"), ("neg_amount", "amount < 0")]
-    good = spark.createDataFrame([(1, 10), (2, 20)], "k long, amount long")
-    r1 = publish_wap(spark, good, root, checks, version="001")
-    assert r1["published"] and not any(r1["violations"].values())
-    assert {(r.k, r.amount) for r in read_published(spark, root).collect()} \
-        == {(1, 10), (2, 20)}
-    # a bad version must be refused and the old version keeps serving
-    bad = spark.createDataFrame([(3, -5), (None, 7)], "k long, amount long")
-    r2 = publish_wap(spark, bad, root, checks, version="002")
-    assert not r2["published"]
-    assert r2["violations"] == {"null_key": 1, "neg_amount": 1}
-    assert {(r.k, r.amount) for r in read_published(spark, root).collect()} \
-        == {(1, 10), (2, 20)}
-    # a later good version flips the pointer
-    r3 = publish_wap(spark, good.withColumn("amount", F.col("amount") + 1),
-                     root, checks, version="003")
-    assert r3["published"]
-    assert {(r.k, r.amount) for r in read_published(spark, root).collect()} \
-        == {(1, 11), (2, 21)}
-    # re-publishing an existing version id must REFUSE loudly (Hadoop
-    # rename would nest staging inside v=003 and serve stale files)
-    import pytest as _pytest
-    with _pytest.raises(FileExistsError):
-        publish_wap(spark, good, root, checks, version="003")
-    assert {(r.k, r.amount) for r in read_published(spark, root).collect()} \
-        == {(1, 11), (2, 21)}
-
-
-def test_infer_constraints_bootstrap_enforcer(spark):
-    from streamforge_spark.operators.quality import (
-        constraint_enforcer, infer_constraints, rules_from_inference)
-    df = spark.createDataFrame(
-        [(1, 10.0, "a"), (2, 20.0, "b"), (3, 15.0, None)],
-        "id long, amount double, tag string")
-    props = infer_constraints(df, ["id", "amount", "tag"])
-    kinds = {(p["column"], p["rule"]) for p in props}
-    assert ("id", "not_null") in kinds and ("id", "unique") in kinds
-    assert ("amount", "range") in kinds
-    assert ("tag", "not_null") not in kinds          # it HAS a null
-    # the inferred rules wire straight into the enforcer: clean rows
-    # pass, an out-of-range newcomer goes to the DLQ
-    # a growing surrogate key will outrun its observed range — drop
-    # that proposal (range inference is for measures, not keys)
-    rules = rules_from_inference(
-        [p for p in props if not (p["column"] == "id" and p["rule"] == "range")])
-    newdata = spark.createDataFrame(
-        [(4, 18.0, "d"), (5, 999.0, "e"), (None, 12.0, "f")],
-        "id long, amount double, tag string")
-    passed, dlq = constraint_enforcer(newdata, rules)
-    assert [r.id for r in passed.collect()] == [4]
-    msgs = [r.error_message for r in dlq.collect()]
-    assert any("amount_range" in m for m in msgs)
-    assert any("id_not_null" in m for m in msgs)
-    # DecimalType profiling must not crash (Decimal * float raises
-    # TypeError without the float conversion in the pad arithmetic)
-    import decimal
-    ddf = spark.createDataFrame(
-        [(decimal.Decimal("1.50"),), (decimal.Decimal("9.25"),)],
-        "price decimal(10,2)")
-    dprops = infer_constraints(ddf, ["price"])
-    rng = next(p for p in dprops if p["rule"] == "range")
-    assert rng["params"]["lo"] < 1.5 and rng["params"]["hi"] > 9.25
-
-
-def test_pseudonymize_stable_tokens_and_vault_joinback(spark):
-    from streamforge_spark.operators.processors import pseudonymize
-    df = spark.createDataFrame(
-        [(1, 100, "x"), (2, 100, "y"), (3, None, "z")],
-        "event_id long, user_id long, payload string")
-    tok, vault = pseudonymize(df, ["user_id"], salt="s1")
-    rows = {r.event_id: r.user_id for r in tok.collect()}
-    # same original -> same token (joins still work); null stays null
-    assert rows[1] == rows[2] and rows[1] != "100" and rows[3] is None
-    # vault re-identifies
-    back = (tok.join(vault.where(F.col("column") == "user_id"),
-                     tok["user_id"] == F.col("token"))
-            .select("event_id", "original").collect())
-    assert {(r.event_id, r.original) for r in back} == {(1, "100"), (2, "100")}
-    # a different salt rotates every token (breach containment)
-    tok2, _ = pseudonymize(df, ["user_id"], salt="s2")
-    assert {r.user_id for r in tok2.collect()} != {r.user_id for r in tok.collect()}
 
 
 def test_schema_migrator_chain(spark):

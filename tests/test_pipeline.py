@@ -1,68 +1,9 @@
-"""Pipeline composition + dual-output DLQ accumulation
-(pipeline.py — the PipelineBuilder analog)."""
+"""Progress counters: batch ``Observation``s and the streaming
+listener (metrics.py, operators/observability.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from streamforge_spark.operators.quality import (
-    SchemaVersion, constraint_enforcer, not_null_rule, range_rule, schema_enforcer,
-)
-from streamforge_spark.pipeline import Pipeline
-
-
-def test_pipeline_accumulates_dlq(spark):
-    df = spark.createDataFrame(
-        [(1, '{"k": "1"}', 10.0),
-         (2, None, 20.0),            # schema fail (null payload)
-         (3, '{"k": "2"}', -5.0),    # constraint fail (range)
-         (4, '{"k": "3"}', 30.0)],
-        "id long, payload string, amount double")
-    v1 = SchemaVersion("v1", required={"k": "number"})
-    p = (Pipeline(df)
-         .then(lambda d: schema_enforcer(d, "payload", [v1]))
-         .then(lambda d: d.withColumn("amount2", F.col("amount") * 2))
-         .then(lambda d: constraint_enforcer(
-             d, [not_null_rule("amount"), range_rule("amount", 0, 100)])))
-    assert sorted(r.id for r in p.df.collect()) == [1, 4]
-    dlq = p.dlq()
-    assert dlq is not None
-    errs = sorted((r.error_type) for r in dlq.collect())
-    assert errs == ["CONSTRAINT_VIOLATION", "SCHEMA_VIOLATION"]
-
-
-def test_pipeline_plain_operators(spark):
-    df = spark.createDataFrame([(1,), (2,), (3,)], "id long")
-    p = Pipeline(df).then(lambda d: d.filter(F.col("id") > 1))
-    assert p.dlq() is None
-    assert p.df.count() == 2
-
-
-def test_replay_dlq_recovers_with_new_schema_version(spark):
-    import json
-    from streamforge_spark.operators.quality import SchemaVersion, schema_enforcer
-    from streamforge_spark.pipeline import replay_dlq
-    envelopes = spark.createDataFrame(
-        [("insert", "s", json.dumps({"name": "no-id"}), "k1"),
-         ("insert", "s", json.dumps({"_id": "a"}), "a")],
-        "operation string, source string, payload_json string, primary_key string")
-    v1 = SchemaVersion("v1", required={"_id": "any"})
-    ok, dlq = schema_enforcer(envelopes, "payload_json", [v1])
-    assert ok.count() == 1 and dlq.count() == 1
-    # garbage that failed at parse time lands in the same DLQ shape
-    from streamforge_spark.pipeline import dlq_event
-    garbage = dlq_event(
-        spark.createDataFrame([("not json",)], "value string"),
-        "PARSE_ERROR", "unparseable", "parser", raw_event=F.col("value"))
-    full_dlq = dlq.unionByName(garbage)
-    # v2 no longer requires _id -> the schema-violating record recovers;
-    # the garbage stays dead
-    v2 = SchemaVersion("v2", required={"name": "string"})
-    recovered, still_dead = replay_dlq(full_dlq, versions=[v2, v1])
-    rec = recovered.collect()
-    assert len(rec) == 1
-    assert json.loads(rec[0].payload_json) == {"name": "no-id"}
-    assert still_dead.count() == 1
 
 
 def test_metrics_collector_streaming_and_batch(spark, tmp_path):
@@ -103,4 +44,3 @@ def test_metrics_collector_streaming_and_batch(spark, tmp_path):
         assert "streamforge_ingest_events_total 3" in text
     finally:
         spark.streams.removeListener(collector)
-

@@ -120,35 +120,6 @@ def test_pivot_two_phase_agg(spark):
     assert plan.count("Arguments: hashpartitioning") == 2
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    # co-located join: bucket both sides on the join key at write time;
-    # the join must then plan with NO exchange on either side
-    from pyspark.sql import functions as F
-    from streamforge_spark.io import load, write_bucketed
-    orders = load(spark, SF, "orders").select("o_orderkey", "o_totalprice")
-    lineitem = load(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "b_orders", "o_orderkey", 8, str(tmp_path / "o"))
-    write_bucketed(lineitem, "b_lineitem", "l_orderkey", 8, str(tmp_path / "l"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("b_orders").join(
-            spark.table("b_lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"))
-        plan = j._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan            # bucketing carries the partitioning
-        n = j.count()
-        direct = orders.join(lineitem,
-                             F.col("o_orderkey") == F.col("l_orderkey")).count()
-        assert n == direct
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_q21_single_lineitem_scan(spark):
     # the EXISTS/NOT-EXISTS decorrelation must keep exactly one
     # lineitem scan; groupBy + per-order window reuse the join's
@@ -164,27 +135,6 @@ def test_corpus_curation_single_digest_exchange(spark):
     plan = plan_of(spark, "corpus_curation")
     assert plan.count("file:/root/testdata/sf0.001/documents.parquet") == 1
     assert plan.count("Arguments: hashpartitioning") <= 2
-
-
-def test_partitioned_write_prunes_at_read(spark, tmp_path):
-    # hive-partitioned layout: a filter on the partition column must
-    # become a PartitionFilter (directory pruning), not a row filter
-    from pyspark.sql import functions as F
-    from streamforge_spark.io import load, write_partitioned
-    events = load(spark, SF, "events").withColumn(
-        "event_date", F.to_date("ts"))
-    path = str(tmp_path / "events_by_date")
-    write_partitioned(events, path, partition_cols=["event_date"])
-    back = spark.read.parquet(path).filter(
-        F.col("event_date") == "2024-01-02")
-    plan = back._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert "PartitionFilters: [isnotnull(event_date" in plan
-    n_dates = events.select("event_date").distinct().count()
-    assert n_dates > 1
-    got = back.count()
-    want = events.filter(F.col("event_date") == "2024-01-02").count()
-    assert got == want and got > 0
 
 
 def test_interval_join_no_bnlj(spark):
@@ -208,22 +158,6 @@ def test_ngram_jaccard_single_corpus_scan(spark):
     rdd_ids = set(re.findall(r"MapPartitionsRDD\[(\d+)\] at localCheckpoint",
                              plan))
     assert len(rdd_ids) == 1, f"grams pinned more than once: {rdd_ids}"
-
-
-def test_salted_join_matches_direct(spark):
-    from pyspark.sql import functions as F
-    from streamforge_spark.io import load
-    from streamforge_spark.operators.skew import salted_join
-    events = load(spark, SF, "events").select("event_id", "user_id", "value")
-    cust = load(spark, SF, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_name", "c_mktsegment")
-    for how in ("inner", "left"):
-        direct = {tuple(r) for r in
-                  events.join(cust, "user_id", how).collect()}
-        salted = {tuple(r) for r in
-                  salted_join(events, cust, "user_id",
-                              salt_buckets=8, how=how).collect()}
-        assert salted == direct
 
 
 def test_contamination_benchmark_broadcasts(spark):

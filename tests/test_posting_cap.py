@@ -14,8 +14,6 @@ shared shingles) are still found.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 
 BOILER = ("this content is provided as is without warranty of any kind "
           "either express or implied")

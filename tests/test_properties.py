@@ -512,8 +512,8 @@ def test_gopher_metrics_match_python_reference(spark, docs_tokens):
     for arbitrary token mixes (incl. punctuation-only and non-alpha
     tokens the fixture never produces)."""
     from streamforge_spark.functions.text import (
-        GOPHER_MIN_ALPHA_PPM, GOPHER_MIN_MWL_MILLI, GOPHER_MIN_STOPWORDS,
-        GOPHER_MIN_WORDS, STOPWORDS, gopher_metrics)
+        GOPHER_MIN_ALPHA_PPM, GOPHER_MIN_STOPWORDS, STOPWORDS,
+        gopher_metrics)
     import re
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs_tokens)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")

@@ -13,11 +13,9 @@ import json
 import os
 import time
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tests.test_jobs import trim_commits

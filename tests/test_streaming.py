@@ -250,23 +250,6 @@ def test_streaming_fanin_windowed_agg_matches_batch(spark, workdir):
     }
 
 
-def test_compact_files_preserves_rows(spark, tmp_path):
-    # many tiny files -> one compacted file, same rows
-    from streamforge_spark.io import compact_files
-    path = str(tmp_path / "many")
-    for i in range(6):
-        (spark.range(i * 10, i * 10 + 10)
-         .coalesce(1).write.mode("append").parquet(path))
-    import glob
-    assert len(glob.glob(f"{path}/*.parquet")) >= 6
-    before = sorted(r.id for r in spark.read.parquet(path).collect())
-    n = compact_files(spark, path, target_file_bytes=1 << 30)
-    assert n == 1
-    assert len(glob.glob(f"{path}/*.parquet")) == 1
-    after = sorted(r.id for r in spark.read.parquet(path).collect())
-    assert after == before == list(range(60))
-
-
 def _bucket_files(target: str) -> dict[str, list[str]]:
     """Map _kb=N partition dir -> sorted data file names."""
     import glob
