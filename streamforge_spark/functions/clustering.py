@@ -8,19 +8,20 @@ bounded driver sample:
   order-independent);
 - assignment distances are pure int64 algebra, so argmin is exact and
   reproducible regardless of partitioning, Arrow batching, or engine;
-- the centroid update is one ``groupBy(cluster)`` with map-side-combined
-  integer SUMs per dimension + a COUNT; the new centroid component is
-  ``ROUND(CAST(sum AS DOUBLE) / count)`` — a single IEEE division (both
-  operands exactly representable) followed by half-away rounding, which
-  Spark (HALF_UP) and DuckDB (std::round) agree on. A rounding flip
-  would need the true rational sum/count within one double ulp of a
-  .5 boundary, impossible for count <= ~1e9 at these magnitudes since
-  non-half rationals sit >= 1/(2*count) away.
+- the centroid update is one ``groupBy(cluster, dimension)`` over the
+  exploded vectors, a map-side-combined integer SUM + a COUNT; the new
+  centroid component is ``ROUND(CAST(sum AS DOUBLE) / count)`` — a
+  single IEEE division (both operands exactly representable) followed
+  by half-away rounding, which Spark (HALF_UP) and DuckDB (std::round)
+  agree on. A rounding flip would need the true rational sum/count
+  within one double ulp of a .5 boundary, impossible for count <= ~1e9
+  at these magnitudes since non-half rationals sit >= 1/(2*count) away.
 
 100 TB shape per round: one narrow corpus scan + matmul per Arrow batch
-(no shuffle), one k-row aggregation (partial aggregation does the heavy
-lifting), and k*dim integers to the driver — never a vector of corpus
-data. Rounds are a fixed small constant; total cost = rounds * scan.
+(no shuffle), one k*dim-row aggregation (partial aggregation does the
+heavy lifting), and k*dim integers to the driver — never a vector of
+corpus data. Rounds are a fixed small constant; total cost = rounds *
+scan.
 
 The same computation unrolls into pure SQL (see
 queries/embeddings.py::_KMEANS_ORACLE) — the correctness gate covers
@@ -77,19 +78,23 @@ def kmeans_centroids(emb: DataFrame, *, k: int = 8, rounds: int = 3,
     e = quantize_vectors(emb, id_col=id_col, vec_col=vec_col, quant=quant)
     init_rows = e.orderBy("_id").limit(k).select("v").collect()
     C = np.array([r.v for r in init_rows], dtype=np.int64)
-    dim = C.shape[1]
     for _ in range(rounds - 1):
         bc = spark.sparkContext.broadcast(C)
         assigned = e.mapInPandas(_make_assign(bc),
                                  "_id long, v array<long>, cluster long")
         # centroid update: integer sums are exact in any order; the
-        # division + HALF_UP round replays identically in the oracle
-        upd = assigned.groupBy("cluster").agg(
-            *[F.round(F.sum(F.col("v")[j]) / F.count(F.lit(1)))
-              .cast("long").alias(f"c{j}") for j in range(dim)]).collect()
+        # division + HALF_UP round replays identically in the oracle.
+        # One (cluster, dimension) aggregate keeps the plan the same
+        # size at any dim (a per-dimension column list costs the
+        # driver ~1 s of plan building per round at dim 64).
+        upd = (assigned.select("cluster", F.posexplode("v").alias("j", "x"))
+               .groupBy("cluster", "j")
+               .agg(F.round(F.sum("x") / F.count(F.lit(1)))
+                    .cast("long").alias("c"))
+               .collect())
         newC = C.copy()
         for row in upd:
-            newC[row["cluster"]] = [row[f"c{j}"] for j in range(dim)]
+            newC[row["cluster"], row["j"]] = row["c"]
         C = newC
     return C
 

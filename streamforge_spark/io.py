@@ -8,6 +8,9 @@ columns into the scan automatically (verify with
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,6 +91,27 @@ def spread_for_compute(df: DataFrame, key: str,
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
+
+
+def in_flight(spark: SparkSession, *builds: Callable[[], Any]) -> list:
+    """Run independent zero-argument ``builds`` concurrently, one
+    thread each, and return their results in argument order.
+
+    For a query whose barriers (checkpoints, driver collects) do not
+    depend on each other: each blocks its thread on its own Spark jobs,
+    so the scheduler runs their stages side by side instead of one
+    build's tail stages leaving the cores idle before the next starts.
+    Each thread runs under ``inheritable_thread_target(spark)``, so its
+    jobs keep the caller's job group, description and tags.  Every
+    build finishes before this returns; the error of the first failing
+    build, in argument order, is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+        futures = [pool.submit(inherit(b)) for b in builds]
+        return [f.result() for f in futures]
 
 
 def swap_dir(spark: SparkSession, path: str, tmp: str) -> None:

@@ -10,6 +10,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Largest node set (|V|) an iterative operator broadcasts into its
+#: per-round edge join: ~2M rows of (long, long) is ~32 MB.  Past it
+#: both sides shuffle, which is correct at any |V|; the edge list is
+#: the side that must never replicate.
+BROADCAST_MAX_NODES = 2_000_000
+
+
+def _node_hint(n_nodes: int):
+    """``F.broadcast`` for a node-set relation of ``n_nodes`` rows up to
+    BROADCAST_MAX_NODES, else no hint (the join shuffles both sides)."""
+    return F.broadcast if n_nodes <= BROADCAST_MAX_NODES else (lambda df: df)
+
 
 def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
              weight: str = "w", rounds: int = 3, damping: float = 0.85,
@@ -62,13 +74,10 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
         n = float(nodes.count())
     base = F.lit(float(scale)) / F.lit(n)
     # the node count is already driver-known: when the rank vector is
-    # small (<= ~2M rows of (long, long) ≈ 32 MB) broadcast it into
-    # the contrib join so the EDGE list is never re-shuffled per power
-    # round — the per-iteration shuffle then carries only the in-sums.
-    # Past the threshold both sides shuffle (correct at any |V|); the
-    # edge list is the side that must never replicate.
-    small_ranks = n <= 2_000_000
-    hint = F.broadcast if small_ranks else (lambda df: df)
+    # small, broadcast it into the contrib join so the EDGE list is
+    # never re-shuffled per power round — the per-iteration shuffle
+    # then carries only the in-sums.
+    hint = _node_hint(n)
     if symmetric:
         # r0 is one constant: ROUND(scale/N) with Spark's HALF_UP
         # BigDecimal rounding, replicated exactly via decimal on the
@@ -142,7 +151,7 @@ def connected_components(edges: DataFrame, src: str = "d1", dst: str = "d2",
       uses); the node-count scalar for the broadcast decision rides
       that round's convergence collect for free.
     - From round two on, the label vector is BROADCAST into the
-      propagation join under the same |V| <= ~2M threshold as pagerank
+      propagation join under the BROADCAST_MAX_NODES bound
       — the (checkpointed, partitioning-less) edge list is then never
       re-exchanged per round; past the threshold both sides shuffle,
       correct at any |V|.
@@ -168,7 +177,7 @@ def connected_components(edges: DataFrame, src: str = "d1", dst: str = "d2",
     # yields None == None at round two, breaking immediately.
     prev_sum, n_nodes = labels.agg(
         F.sum("c"), F.count(F.lit(1))).collect()[0]
-    hint = F.broadcast if n_nodes <= 2_000_000 else (lambda df: df)
+    hint = _node_hint(n_nodes)
     for _ in range(max_iter - 1):
         labels = (sym.join(hint(labels), sym["b"] == labels["n"])
                   .groupBy(F.col("a").alias("n"))
@@ -192,8 +201,8 @@ def label_propagation(edges: DataFrame, *, src: str = "src",
     so the fixed-round computation unrolls into the SQL oracle.
 
     Per round at 100 TB: edges ⨝ labels on src (the labels side is the
-    small one — broadcast under the same |V| threshold logic as
-    pagerank), a map-side-combined (dst, label) weight sum, and a rank-1
+    small one — broadcast under the BROADCAST_MAX_NODES bound), a
+    map-side-combined (dst, label) weight sum, and a rank-1
     per dst. The edge list materializes once (localCheckpoint) and is
     never re-derived per round. Returns (node, label).
     """
@@ -203,11 +212,12 @@ def label_propagation(edges: DataFrame, *, src: str = "src",
           .localCheckpoint(eager=True))
     nodes = ew.select(F.col("s").alias("node")).union(
         ew.select(F.col("d").alias("node"))).distinct().localCheckpoint(eager=True)
+    hint = _node_hint(nodes.count())
     labels = nodes.withColumn("lbl", F.col("node"))
     rank_w = Window.partitionBy("node").orderBy(
         F.col("wsum").desc(), F.col("lbl"))
     for i in range(rounds):
-        cand = (ew.join(F.broadcast(labels), ew["s"] == labels["node"])
+        cand = (ew.join(hint(labels), ew["s"] == labels["node"])
                 .groupBy(F.col("d").alias("node"), F.col("lbl"))
                 .agg(F.sum("w").alias("wsum")))
         best = (cand.withColumn("rn", F.row_number().over(rank_w))
@@ -232,16 +242,18 @@ def kcore_peel(edges: DataFrame, *, k: int, rounds: int,
     community seeds and spam/bot subgraph isolation.
 
     Per round at 100 TB: one map-side-combined degree aggregation and
-    two semi-joins to filter the edge list (survivor list is |V|-scale
-    and broadcasts under the same threshold logic as pagerank); the
+    two semi-joins to filter the edge list (the survivor list is
+    |V|-scale and broadcasts under the BROADCAST_MAX_NODES bound); the
     edge list localCheckpoints per round so lineage stays flat."""
     ew = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
           .localCheckpoint(eager=True))
+    # survivors are a subset of the first round's sources
+    hint = _node_hint(ew.select("s").distinct().count())
     for _ in range(rounds):
         deg = ew.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select(F.col("s").alias("node"))
-        ew = (ew.join(F.broadcast(keep), ew["s"] == keep["node"], "left_semi")
-              .join(F.broadcast(keep), ew["d"] == keep["node"], "left_semi")
+        ew = (ew.join(hint(keep), ew["s"] == keep["node"], "left_semi")
+              .join(hint(keep), ew["d"] == keep["node"], "left_semi")
               .localCheckpoint(eager=False))
     return (ew.groupBy(F.col("s").alias("node"))
             .agg(F.count(F.lit(1)).alias("degree")))

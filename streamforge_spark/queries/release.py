@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from streamforge_spark.functions.simdedup import hash60_sql, oracle_hash60
 from streamforge_spark.functions.text import lang_id, quality_score, token_count
+from streamforge_spark.io import in_flight
 from streamforge_spark.queries.common import prep
 from streamforge_spark.registry import query
 
@@ -250,6 +251,64 @@ FUNNEL_SPLIT_ID = 400
 #: == queries.text.VOCAB_TOP_K (pinned by the same test): the funnel's
 #: vocabulary is built with the exact convention vocab_oov_rate verifies
 FUNNEL_VOCAB_K = 16
+
+
+def _funnel_vocab(est, k: int = FUNNEL_VOCAB_K):
+    """The top-``k`` terms of the established split (count desc, term)."""
+    return (est.select(F.explode(F.split("text", " ")).alias("term"))
+            .groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+            .orderBy(F.col("c").desc(), "term").limit(k)
+            .select("term"))
+
+
+def _funnel_artifacts(spark, est, *extra):
+    """The funnel gates' artifacts, built from the established split
+    ``est``: ``(vocab, xs_index, mh_bands, mh_grams, llr, *rest)``,
+    where ``rest`` holds the results of the ``extra`` zero-argument
+    builds.  No artifact reads another, so each one is pinned
+    (eager ``localCheckpoint``) in its own thread (io.in_flight): their
+    jobs share the cores instead of running one build after another
+    inside corpus_funnel_verdicts' gate barriers.  The gate chain that
+    probes them is unchanged."""
+    from streamforge_spark.functions.dsir import dsir_llr_model
+    from streamforge_spark.functions.substring_index import (
+        substring_index, window_hashes)
+    from streamforge_spark.queries.curation import DSIR_TARGET_SOURCES
+    from streamforge_spark.queries.text import XS_K
+    from streamforge_spark.streaming.curation import minhash_corpus_index
+
+    def minhash():
+        bands, grams = minhash_corpus_index(est)
+        # pinning the bands also fills the lazily checkpointed gram sets
+        return bands.localCheckpoint(), grams
+
+    vocab, xs_index, (mh_bands, mh_grams), llr, *rest = in_flight(
+        spark,
+        lambda: _funnel_vocab(est).localCheckpoint(),
+        lambda: (substring_index(window_hashes(est, XS_K)).select("h")
+                 .localCheckpoint()),
+        minhash,
+        lambda: dsir_llr_model(
+            est, F.col("source").isin(*DSIR_TARGET_SOURCES)
+        ).localCheckpoint(),
+        *extra)
+    return (vocab, xs_index, mh_bands, mh_grams, llr, *rest)
+
+
+def _funnel_ivf(est_emb):
+    """The semantic gate's index over the established embeddings:
+    ``(centroids, ivf_vecs)`` with every vector's nearest cell."""
+    from streamforge_spark.functions.clustering import kmeans_centroids
+    from streamforge_spark.functions.similarity import ivf_probe_cells_expr
+    from streamforge_spark.queries.llm import IVF_CELLS, IVF_ROUNDS
+    C = kmeans_centroids(est_emb, k=IVF_CELLS, rounds=IVF_ROUNDS)
+    raw = F.col("embedding").cast("array<double>")
+    qv = F.transform(raw, lambda x: F.round(x * 10000).cast("long"))
+    ivf_vecs = (est_emb.select("vec_id", raw.alias("v"), qv.alias("qv"))
+                .withColumn("cell",
+                            ivf_probe_cells_expr("qv", C, 1)[0])
+                .drop("qv"))
+    return C, ivf_vecs
 
 
 #: independent-flags tail for the gate-ablation rollup: the SAME
@@ -518,25 +577,14 @@ def corpus_funnel_report(spark, sf_dir):
     the fuzzy probe is the capped band join (BAND_MAX_BUCKET) against
     the corpus index, and every per-doc rollup exchanges O(batch),
     never O(corpus)."""
-    from streamforge_spark.functions.dsir import dsir_llr_model
-    from streamforge_spark.functions.substring_index import (
-        substring_index, window_hashes)
-    from streamforge_spark.queries.curation import DSIR_TARGET_SOURCES
     from streamforge_spark.queries.llm import MINHASH_THRESHOLD
     from streamforge_spark.queries.text import XS_K
     from streamforge_spark.streaming.curation import (
-        FUNNEL_DSIR_THRESHOLD_MICRO, corpus_funnel_verdicts,
-        minhash_corpus_index)
+        FUNNEL_DSIR_THRESHOLD_MICRO, corpus_funnel_verdicts)
     (docs,) = prep(spark, sf_dir, "documents")
     est = docs.filter(F.col("doc_id") < FUNNEL_SPLIT_ID)
     new = docs.filter(F.col("doc_id") >= FUNNEL_SPLIT_ID)
-    vocab = (est.select(F.explode(F.split("text", " ")).alias("term"))
-             .groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-             .orderBy(F.col("c").desc(), "term").limit(FUNNEL_VOCAB_K)
-             .select("term"))
-    xs_index = substring_index(window_hashes(est, XS_K)).select("h")
-    mh_bands, mh_grams = minhash_corpus_index(est)
-    llr = dsir_llr_model(est, F.col("source").isin(*DSIR_TARGET_SOURCES))
+    vocab, xs_index, mh_bands, mh_grams, llr = _funnel_artifacts(spark, est)
     out = corpus_funnel_verdicts(
         new, vocab=vocab, xs_index=xs_index,
         mh_bands=mh_bands, mh_grams=mh_grams, llr_model=llr,
@@ -726,34 +774,23 @@ def funnel_vocab_what_if(spark, sf_dir):
     so preview == replay by construction.
 
     Scale shape: the expensive artifacts (substring index, MinHash
-    index, DSIR model) are built ONCE and checkpointed for both
-    funnel instances — only the 16-vs-32-row vocabulary differs; the
-    two verdict tables join on doc_id at O(batch)."""
-    from streamforge_spark.functions.dsir import dsir_llr_model
-    from streamforge_spark.functions.substring_index import (
-        substring_index, window_hashes)
-    from streamforge_spark.queries.curation import DSIR_TARGET_SOURCES
+    index, DSIR model) are built ONCE, concurrently with both
+    vocabularies, and checkpointed for both funnel instances — only
+    the 16-vs-32-row vocabulary differs.  The two gate chains run
+    concurrently, and their verdict tables join on doc_id at
+    O(batch)."""
     from streamforge_spark.queries.llm import MINHASH_THRESHOLD
     from streamforge_spark.queries.text import XS_K
     from streamforge_spark.streaming.curation import (
-        FUNNEL_DSIR_THRESHOLD_MICRO, corpus_funnel_verdicts,
-        minhash_corpus_index)
+        FUNNEL_DSIR_THRESHOLD_MICRO, corpus_funnel_verdicts)
     (docs,) = prep(spark, sf_dir, "documents")
     est = docs.filter(F.col("doc_id") < FUNNEL_SPLIT_ID)
     new = docs.filter(F.col("doc_id") >= FUNNEL_SPLIT_ID)
-    xs_index = (substring_index(window_hashes(est, XS_K)).select("h")
-                .localCheckpoint(eager=False))
-    mh_bands, mh_grams = minhash_corpus_index(est)
-    mh_bands = mh_bands.localCheckpoint(eager=False)
-    mh_grams = mh_grams.localCheckpoint(eager=False)
-    llr = (dsir_llr_model(est, F.col("source").isin(*DSIR_TARGET_SOURCES))
-           .localCheckpoint(eager=False))
-    terms = est.select(F.explode(F.split("text", " ")).alias("term"))
+    vocab1, xs_index, mh_bands, mh_grams, llr, vocab2 = _funnel_artifacts(
+        spark, est,
+        lambda: _funnel_vocab(est, 2 * FUNNEL_VOCAB_K).localCheckpoint())
 
-    def graded(vocab_k, out_col):
-        vocab = (terms.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-                 .orderBy(F.col("c").desc(), "term").limit(vocab_k)
-                 .select("term"))
+    def graded(vocab, out_col):
         return corpus_funnel_verdicts(
             new, vocab=vocab, xs_index=xs_index,
             mh_bands=mh_bands, mh_grams=mh_grams, llr_model=llr,
@@ -761,8 +798,9 @@ def funnel_vocab_what_if(spark, sf_dir):
             fuzzy_threshold=MINHASH_THRESHOLD, xs_k=XS_K
         ).select("doc_id", F.col("verdict").alias(out_col))
 
-    v1 = graded(FUNNEL_VOCAB_K, "verdict_v1")
-    v2 = graded(2 * FUNNEL_VOCAB_K, "verdict_v2")
+    # the two gate chains share only the pinned artifacts
+    v1, v2 = in_flight(spark, lambda: graded(vocab1, "verdict_v1"),
+                       lambda: graded(vocab2, "verdict_v2"))
     return (v1.join(v2, "doc_id")
             .select("doc_id", "verdict_v1", "verdict_v2",
                     (F.col("verdict_v1") != F.col("verdict_v2"))
@@ -794,45 +832,30 @@ def corpus_funnel_semantic_report(spark, sf_dir):
     Cost split (the >5s headline convention): the dominant cost here
     is ARTIFACT BUILD — vocab + substring index + MinHash index + DSIR
     model + the rounds-scan Lloyd trainer, all from the established
-    split, rebuilt inline so the oracle can replay them.  Production
+    split, rebuilt inline so the oracle can replay them.  The five
+    builds share no intermediate and run concurrently
+    (_funnel_artifacts), so they cost about their slowest member, the
+    Lloyd trainer's sequential rounds, and the gate chain's own
+    barriers follow.  Production
     (CorpusIngestV2) amortizes every one through the persisted model
     store and pays only the steady-state funnel: scan-side gopher,
     broadcast vocab/llr probes, two semi-joins against persisted
     indexes, the capped band join, the nprobe/k-pruned IVF probe join,
     and O(batch) verdict rollups — never O(corpus) per batch."""
-    from streamforge_spark.functions.clustering import kmeans_centroids
-    from streamforge_spark.functions.dsir import dsir_llr_model
-    from streamforge_spark.functions.similarity import (
-        SEM_THRESHOLD, ivf_probe_cells_expr)
-    from streamforge_spark.functions.substring_index import (
-        substring_index, window_hashes)
-    from streamforge_spark.queries.curation import DSIR_TARGET_SOURCES
+    from streamforge_spark.functions.similarity import SEM_THRESHOLD
     from streamforge_spark.queries.llm import (
-        IVF_CELLS, IVF_ROUNDS, MINHASH_THRESHOLD, SEM_GATE_NPROBE)
+        MINHASH_THRESHOLD, SEM_GATE_NPROBE)
     from streamforge_spark.queries.text import XS_K
     from streamforge_spark.streaming.curation import (
-        FUNNEL_DSIR_THRESHOLD_MICRO, corpus_funnel_verdicts,
-        minhash_corpus_index)
+        FUNNEL_DSIR_THRESHOLD_MICRO, corpus_funnel_verdicts)
     docs, emb = prep(spark, sf_dir, "documents", "embeddings")
     est = docs.filter(F.col("doc_id") < FUNNEL_SPLIT_ID)
     new = (docs.filter(F.col("doc_id") >= FUNNEL_SPLIT_ID)
            .join(emb.select(F.col("vec_id").alias("doc_id"), "embedding"),
                  "doc_id", "left"))
-    vocab = (est.select(F.explode(F.split("text", " ")).alias("term"))
-             .groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-             .orderBy(F.col("c").desc(), "term").limit(FUNNEL_VOCAB_K)
-             .select("term"))
-    xs_index = substring_index(window_hashes(est, XS_K)).select("h")
-    mh_bands, mh_grams = minhash_corpus_index(est)
-    llr = dsir_llr_model(est, F.col("source").isin(*DSIR_TARGET_SOURCES))
     est_emb = emb.filter(F.col("vec_id") < FUNNEL_SPLIT_ID)
-    C = kmeans_centroids(est_emb, k=IVF_CELLS, rounds=IVF_ROUNDS)
-    raw = F.col("embedding").cast("array<double>")
-    qv = F.transform(raw, lambda x: F.round(x * 10000).cast("long"))
-    ivf_vecs = (est_emb.select("vec_id", raw.alias("v"), qv.alias("qv"))
-                .withColumn("cell",
-                            ivf_probe_cells_expr("qv", C, 1)[0])
-                .drop("qv"))
+    vocab, xs_index, mh_bands, mh_grams, llr, (C, ivf_vecs) = \
+        _funnel_artifacts(spark, est, lambda: _funnel_ivf(est_emb))
     out = corpus_funnel_verdicts(
         new, vocab=vocab, xs_index=xs_index,
         mh_bands=mh_bands, mh_grams=mh_grams, llr_model=llr,
@@ -870,7 +893,9 @@ def corpus_funnel_ablation(spark, sf_dir):
 
     Cost split (>5s headline convention): dominated by the inline
     artifact builds (vocab + substring index + MinHash index + DSIR
-    model + Lloyd trainer) shared with corpus_funnel_semantic_report;
+    model + Lloyd trainer) shared with corpus_funnel_semantic_report,
+    run concurrently (_funnel_artifacts), so they cost about the
+    slowest of them, the Lloyd trainer's sequential rounds;
     production amortizes them via the persisted model store, and the
     ablation itself adds one O(batch) six-flag join tree + a 6x-batch
     explode rollup.  Running every gate on the full batch costs more
@@ -883,20 +908,13 @@ def corpus_funnel_ablation(spark, sf_dir):
     boolean payloads), the unique-kill rollup is one map-side-combined
     aggregation over a 6-row-per-doc explode, and the admitted scalar
     is a one-row broadcast."""
-    from streamforge_spark.functions.clustering import kmeans_centroids
-    from streamforge_spark.functions.dsir import dsir_llr_model
-    from streamforge_spark.functions.similarity import (
-        SEM_THRESHOLD, ivf_probe_cells_expr)
-    from streamforge_spark.functions.substring_index import (
-        substring_index, window_hashes)
+    from streamforge_spark.functions.similarity import SEM_THRESHOLD
     from streamforge_spark.functions.text import gopher_metrics
-    from streamforge_spark.queries.curation import DSIR_TARGET_SOURCES
     from streamforge_spark.queries.llm import (
-        IVF_CELLS, IVF_ROUNDS, MINHASH_THRESHOLD, SEM_GATE_NPROBE)
+        MINHASH_THRESHOLD, SEM_GATE_NPROBE)
     from streamforge_spark.queries.text import XS_K
     from streamforge_spark.streaming.curation import (
-        FUNNEL_DSIR_THRESHOLD_MICRO, FUNNEL_OOV_MAX_PPM,
-        minhash_corpus_index, streaming_dsir_gate,
+        FUNNEL_DSIR_THRESHOLD_MICRO, FUNNEL_OOV_MAX_PPM, streaming_dsir_gate,
         streaming_fuzzy_dedup_gate, streaming_semantic_dedup_gate,
         streaming_substring_contamination, streaming_vocab_oov)
     docs, emb = prep(spark, sf_dir, "documents", "embeddings")
@@ -904,21 +922,9 @@ def corpus_funnel_ablation(spark, sf_dir):
     new = (docs.filter(F.col("doc_id") >= FUNNEL_SPLIT_ID)
            .select("doc_id", "text")
            .localCheckpoint(eager=False))
-    vocab = (est.select(F.explode(F.split("text", " ")).alias("term"))
-             .groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-             .orderBy(F.col("c").desc(), "term").limit(FUNNEL_VOCAB_K)
-             .select("term"))
-    xs_index = substring_index(window_hashes(est, XS_K)).select("h")
-    mh_bands, mh_grams = minhash_corpus_index(est)
-    llr = dsir_llr_model(est, F.col("source").isin(*DSIR_TARGET_SOURCES))
     est_emb = emb.filter(F.col("vec_id") < FUNNEL_SPLIT_ID)
-    C = kmeans_centroids(est_emb, k=IVF_CELLS, rounds=IVF_ROUNDS)
-    raw = F.col("embedding").cast("array<double>")
-    qv = F.transform(raw, lambda x: F.round(x * 10000).cast("long"))
-    ivf_vecs = (est_emb.select("vec_id", raw.alias("v"), qv.alias("qv"))
-                .withColumn("cell",
-                            ivf_probe_cells_expr("qv", C, 1)[0])
-                .drop("qv"))
+    vocab, xs_index, mh_bands, mh_grams, llr, (C, ivf_vecs) = \
+        _funnel_artifacts(spark, est, lambda: _funnel_ivf(est_emb))
 
     g = gopher_metrics(new)
     oov = streaming_vocab_oov(new, vocab)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from streamforge_spark.functions.simdedup import hash60_sql, oracle_hash60
 from streamforge_spark.functions.text import word_ngrams
-from streamforge_spark.io import spread_for_compute
+from streamforge_spark.io import in_flight, spread_for_compute
 from streamforge_spark.queries.common import prep
 from streamforge_spark.registry import query
 
@@ -476,42 +476,50 @@ def lsh_band_recall_sweep(spark, sf_dir):
     gram_sets = (spread_for_compute(docs, "doc_id")
                  .select("doc_id", word_ngrams(F.col("text"), 3).alias("gs"))
                  .localCheckpoint(eager=False))
-    truth = (_allpairs_from_gram_sets(gram_sets)
-             .select("d1", "d2").localCheckpoint(eager=False))
-    grams = gram_sets.select("doc_id", F.explode("gs").alias("g"))
-    sigs = (grams.groupBy("doc_id").agg(minhash_sig_agg_expr(NUM_PERM))
-            # three banding consumers — hash the grams once
-            .localCheckpoint(eager=False))
-    # r12 (guide §2.4): band all three configs into ONE relation keyed
-    # by (bands, band, band_hash), so the hot-bucket cap window and the
-    # candidate self-join run ONCE over the union instead of once per
-    # config (3 rank windows + 3 joins + a union-distinct collapsed to
-    # 1 + 1 + 1).  Config keyspaces are disjoint on `bands`, so the
-    # capped buckets, the join's collision pairs, and the global
-    # distinct are row-identical to the per-config form.
-    per_cfg = []
-    for bands in LSH_SWEEP_BANDS:
-        rows = NUM_PERM // bands
-        per_cfg.append(sigs.selectExpr(
-            f"CAST({bands} AS BIGINT) AS bands",
-            "doc_id",
-            "posexplode(array(" + ", ".join(
-                "xxhash64(" + ", ".join(f"sig[{b * rows + r}]"
-                                        for r in range(rows)) + ")"
-                for b in range(bands)) + ")) AS (band, band_hash)"))
-    banded = per_cfg[0]
-    for p in per_cfg[1:]:
-        banded = banded.unionByName(p)
-    # r12 (guide §2.4/§3.3): pairs via the grouped posting array
-    # (bucket_capped_pairs) instead of the capped bucket self-join —
-    # identical pair set, one fewer sorted pass over the banded union.
-    # Pinned: downstream of the Generate-shaped pair explode the
-    # optimizer has no cardinality stats, and the truth-marker join
-    # planned against the raw pipeline regressed the query ~35% solo
-    # (same pathology, same fix as dedup_yield_curve's candidate pin).
-    cands = (bucket_capped_pairs(
-        banded, bucket_cols=("bands", "band", "band_hash"),
-        carry=("bands",)).distinct().localCheckpoint(eager=False))
+
+    def candidates():
+        grams = gram_sets.select("doc_id", F.explode("gs").alias("g"))
+        sigs = (grams.groupBy("doc_id").agg(minhash_sig_agg_expr(NUM_PERM))
+                # three banding consumers — hash the grams once
+                .localCheckpoint(eager=False))
+        # r12 (guide §2.4): band all three configs into ONE relation keyed
+        # by (bands, band, band_hash), so the hot-bucket cap window and the
+        # candidate self-join run ONCE over the union instead of once per
+        # config (3 rank windows + 3 joins + a union-distinct collapsed to
+        # 1 + 1 + 1).  Config keyspaces are disjoint on `bands`, so the
+        # capped buckets, the join's collision pairs, and the global
+        # distinct are row-identical to the per-config form.
+        per_cfg = []
+        for bands in LSH_SWEEP_BANDS:
+            rows = NUM_PERM // bands
+            per_cfg.append(sigs.selectExpr(
+                f"CAST({bands} AS BIGINT) AS bands",
+                "doc_id",
+                "posexplode(array(" + ", ".join(
+                    "xxhash64(" + ", ".join(f"sig[{b * rows + r}]"
+                                            for r in range(rows)) + ")"
+                    for b in range(bands)) + ")) AS (band, band_hash)"))
+        banded = per_cfg[0]
+        for p in per_cfg[1:]:
+            banded = banded.unionByName(p)
+        # r12 (guide §2.4/§3.3): pairs via the grouped posting array
+        # (bucket_capped_pairs) instead of the capped bucket self-join —
+        # identical pair set, one fewer sorted pass over the banded union.
+        # Pinned: downstream of the Generate-shaped pair explode the
+        # optimizer has no cardinality stats, and the truth-marker join
+        # planned against the raw pipeline regressed the query ~35% solo
+        # (same pathology, same fix as dedup_yield_curve's candidate pin).
+        return (bucket_capped_pairs(
+            banded, bucket_cols=("bands", "band", "band_hash"),
+            carry=("bands",)).distinct().localCheckpoint())
+
+    # the truth side and the signature -> candidate side share only the
+    # pinned gram sets: pin both concurrently (io.in_flight)
+    truth, cands = in_flight(
+        spark,
+        lambda: (_allpairs_from_gram_sets(gram_sets)
+                 .select("d1", "d2").localCheckpoint()),
+        candidates)
     n_t = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     # r12 (guide §2.4): n_candidates and n_caught fold into ONE pass —
     # a truth-marker left join (truth pairs are distinct, so no row

@@ -517,6 +517,37 @@ def test_pagerank_weighted_edges_shift_rank(spark):
     assert got[3] > got[4]
 
 
+@pytest.mark.parametrize("op", ["pagerank", "connected_components",
+                                "label_propagation", "kcore_peel"])
+def test_graph_op_unbounded_node_set_shuffles_same_result(
+        spark, monkeypatch, op):
+    # with the broadcast bound at 0 (and auto-broadcast off) every
+    # node-set join shuffles both sides: the output must equal the
+    # broadcast path's row for row
+    from streamforge_spark.operators import graph
+    run = {
+        "pagerank": lambda e: graph.pagerank(e),
+        "connected_components":
+            lambda e: graph.connected_components(e, src="src", dst="dst"),
+        "label_propagation": lambda e: graph.label_propagation(e),
+        "kcore_peel": lambda e: graph.kcore_peel(e, k=2, rounds=2),
+    }[op]
+    pairs = [(1, 2, 3), (2, 3, 1), (1, 3, 2), (3, 4, 5), (4, 5, 1),
+             (10, 11, 2), (11, 12, 2)]
+    edges = spark.createDataFrame(
+        pairs + [(b, a, w) for a, b, w in pairs], "src long, dst long, w long")
+    broadcast = sorted(run(edges).collect())
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 0)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled = sorted(run(edges).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert broadcast and shuffled == broadcast
+
+
 def test_int8_quantize_endpoints_and_constant_dim(spark):
     # per-dim min -> -127, max -> 127, midpoint -> 0; a constant
     # dimension quantizes to 0 instead of dividing by zero

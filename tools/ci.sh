@@ -18,6 +18,13 @@ case "$smoke" in
     *'"correct": true'*) ;;
     *) echo "ci: cdc_backfill sink counts differ from the model" >&2; exit 1 ;;
 esac
+echo "== batch_barrier correctness smoke (7 barrier-heavy queries against their DuckDB oracles) =="
+smoke=$(python3 perfbench/run.py --workload batch_barrier --seed 1 --seconds 0 --trace 0 | tail -n 1)
+echo "$smoke"
+case "$smoke" in
+    *'"correct": true'*) ;;
+    *) echo "ci: batch_barrier results differ from their oracles" >&2; exit 1 ;;
+esac
 echo "== full oracle parity at driver scale (sf0.01) =="
 STREAMFORGE_PARITY_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 echo "== every registered query has an oracle (no_oracle gate) =="
